@@ -246,27 +246,20 @@ def cmd_overview(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Store maintenance: compact + gc the verdict store AND its four
-    near-dedup sidecars (minhash_index, minhash_bands, srp_index,
-    srp_bands) — the Iceberg rewrite_data_files + expire_snapshots
-    lifecycle. Long-lived incremental runs accumulate one snapshot per
-    batch in all five stores; this resets read/commit cost to O(1).
-    partition specs are preserved by compact()."""
+    """Store maintenance: compact + gc the verdict store AND its near-dedup
+    sidecar stores (snapshots.SIDECAR_STORES: each sidecar's index and band
+    cache) — the Iceberg rewrite_data_files + expire_snapshots lifecycle.
+    Long-lived incremental runs accumulate one snapshot per batch in every
+    store; this resets read/commit cost to O(1). partition specs are
+    preserved by compact()."""
     from puddin_spark.session import get_spark
-    from puddin_spark.snapshots import SnapshotStore
+    from puddin_spark.snapshots import SIDECAR_STORES, SnapshotStore
 
     spark = get_spark(master=args.master, app_name="puddin_spark.compact")
     out = {}
-    for name in (
-        "verdicts",
-        "verdicts/minhash_index",
-        "verdicts/minhash_bands",
-        "verdicts/srp_index",
-        "verdicts/srp_bands",
-    ):
+    for name in ("verdicts", *(f"verdicts/{s}" for s in SIDECAR_STORES)):
         base = Path(args.dest) / name
-        commits = base / "_commits"
-        if not commits.exists() or not any(commits.glob("*.json")):
+        if not any((base / "_commits").glob("*.json")):
             continue
         st = SnapshotStore(base)
         sid = st.compact(spark)

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from puddin_spark.pipeline import flip_verdicts
+
 
 def exact_dedup(df: DataFrame, text_col: str = "text", order_cols: tuple = ("doc_id",)) -> DataFrame:
     """Keep-first exact dedup via digest window. Only the digest shuffles."""
@@ -438,19 +440,8 @@ def apply_decontamination_gate(
         id_col="doc_id",
         text_col=text_col,
         eval_text_col=eval_text_col,
-    ).select(F.col("id").alias("doc_id"), F.lit(True).alias("_cont"))
-    keep_cols = verdicts.columns
-    out = verdicts.join(flagged, "doc_id", "left").select(
-        *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-        F.when(F.col("_cont"), F.lit(None).cast("string"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & F.col("_cont").isNull()).alias("keep"),
-        F.when(F.col("_cont"), F.lit("contaminated"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
-    )
-    return out.select(*keep_cols)
+    ).select(F.col("id").alias("doc_id"))
+    return flip_verdicts(verdicts, flagged, "contaminated", text_col)
 
 
 def repeated_spans(
@@ -608,20 +599,9 @@ def apply_repeated_span_gate(
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("_nspans"))
         .where(F.col("_nspans") > max_flagged)
-        .select(F.col("id").alias("doc_id"), F.lit(True).alias("_dup"))
+        .select(F.col("id").alias("doc_id"))
     )
-    keep_cols = verdicts.columns
-    out = verdicts.join(flagged, "doc_id", "left").select(
-        *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-        F.when(F.col("_dup"), F.lit(None).cast("string"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & F.col("_dup").isNull()).alias("keep"),
-        F.when(F.col("_dup"), F.lit("dup_spans"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
-    )
-    return out.select(*keep_cols)
+    return flip_verdicts(verdicts, flagged, "dup_spans", text_col)
 
 
 def ngram_jaccard_pairs(

@@ -51,6 +51,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from puddin_spark.pipeline import flip_verdicts
+
 # fixed-point scale: micro-nats. 1e6 keeps |logp| * positions well inside
 # BIGINT while making the ln-rounding granularity (1e-6 nat) far coarser
 # than the <=1-ulp ln() disagreement between engines.
@@ -332,23 +334,6 @@ def apply_ppl_gate(
             broadcast_lm=broadcast_lm,
         )
         .filter(F.col("ppl") > max_ppl)
-        .select(id_col, F.lit(True).alias("_ppl_flip"))
+        .select(id_col)
     )
-    keep_cols = verdicts.columns
-    out = (
-        verdicts.join(flips, id_col, "left")
-        .withColumn(
-            "_f", F.coalesce(F.col("_ppl_flip"), F.lit(False)) & F.col("keep")
-        )
-        .select(
-            *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-            F.when(F.col("_f"), F.lit(None).cast("string"))
-            .otherwise(F.col(text_col))
-            .alias(text_col),
-            (F.col("keep") & ~F.col("_f")).alias("keep"),
-            F.when(F.col("_f"), F.lit("ppl"))
-            .otherwise(F.col("excl_type"))
-            .alias("excl_type"),
-        )
-    )
-    return out.select(*keep_cols)
+    return flip_verdicts(verdicts, flips, "ppl", text_col)

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from puddin_spark.pipeline import flip_verdicts
+
 # small English function-word profile for the n-gram/stopword heuristic
 EN_STOPWORDS = (
     "the of and to in a is that it was for on are as with his they at be this "
@@ -111,23 +113,9 @@ def apply_quality_gate(
             0.2,
         ).otherwise(0.0)
     )
-    low = F.col("keep") & (F.round(score, 6) < min_score)
-    keep_cols = verdicts.columns
-    out = verdicts.withColumn("_low", low).select(
-        *[
-            c
-            for c in keep_cols
-            if c not in ("keep", "excl_type", text_col)
-        ],
-        F.when(F.col("_low"), F.lit(None).cast("string"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & ~F.col("_low")).alias("keep"),
-        F.when(F.col("_low"), F.lit("low_quality"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
+    return flip_verdicts(
+        verdicts, F.round(score, 6) < min_score, "low_quality", text_col
     )
-    return out.select(*keep_cols)  # original column order
 
 
 def toxicity_pattern() -> str:
@@ -183,19 +171,7 @@ def apply_toxicity_gate(
     ratio = F.round(
         hits / F.greatest(token_count_col(text_col), F.lit(1)), 6
     )
-    tox = F.col("keep") & (ratio > max_ratio)
-    keep_cols = verdicts.columns
-    out = verdicts.withColumn("_tox", tox).select(
-        *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-        F.when(F.col("_tox"), F.lit(None).cast("string"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & ~F.col("_tox")).alias("keep"),
-        F.when(F.col("_tox"), F.lit("toxic"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
-    )
-    return out.select(*keep_cols)
+    return flip_verdicts(verdicts, ratio > max_ratio, "toxic", text_col)
 
 
 # Gopher / MassiveText (Rae et al. 2021, table A1) document-quality rules.
@@ -284,22 +260,12 @@ def apply_gopher_gate(
     apply_quality_gate): kept docs failing any MassiveText rule flip to
     keep=false with excl_type='gopher' (clean_text nulled per the verdict
     contract). Pure codegen projection — no shuffle, no Python."""
-    keep_cols = verdicts.columns
     scored = gopher_columns(
         verdicts, text_col, min_words=min_words, max_words=max_words
     )
-    bad = F.col("keep") & ~F.col("gopher_keep")
-    out = scored.withColumn("_gbad", bad).select(
-        *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-        F.when(F.col("_gbad"), F.lit(None).cast("string"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & ~F.col("_gbad")).alias("keep"),
-        F.when(F.col("_gbad"), F.lit("gopher"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
-    )
-    return out.select(*keep_cols)
+    return flip_verdicts(
+        scored, ~F.col("gopher_keep"), "gopher", text_col
+    ).select(*verdicts.columns)
 
 
 # C4 (Raffel et al. 2020, §2.2) web-page cleaning. Line-level: keep only
@@ -370,24 +336,18 @@ def apply_c4_gate(
     REWRITTEN to the retained lines (C4 removes bad lines, not just bad
     pages — same text-rewriting shape as dedup.trim_repeated_spans).
     Pure codegen projection — no shuffle, no Python."""
-    keep_cols = verdicts.columns
     scored = c4_columns(
         verdicts, text_col,
         min_line_words=min_line_words, min_sentences=min_sentences,
+    ).withColumn(
+        # the signals above judged the original page; kept text becomes
+        # the retained lines, then failing pages flip (text nulled)
+        text_col,
+        F.when(F.col("keep"), F.col("c4_text")).otherwise(F.col(text_col)),
     )
-    bad = F.col("keep") & ~F.col("c4_keep")
-    out = scored.withColumn("_cbad", bad).select(
-        *[c for c in keep_cols if c not in ("keep", "excl_type", text_col)],
-        F.when(F.col("_cbad"), F.lit(None).cast("string"))
-        .when(F.col("keep"), F.col("c4_text"))
-        .otherwise(F.col(text_col))
-        .alias(text_col),
-        (F.col("keep") & ~F.col("_cbad")).alias("keep"),
-        F.when(F.col("_cbad"), F.lit("c4"))
-        .otherwise(F.col("excl_type"))
-        .alias("excl_type"),
-    )
-    return out.select(*keep_cols)
+    return flip_verdicts(
+        scored, ~F.col("c4_keep"), "c4", text_col
+    ).select(*verdicts.columns)
 
 
 def perplexity_buckets(

@@ -36,6 +36,38 @@ OUTPUT_COLS = [
 ]
 
 
+def flip_verdicts(
+    verdicts: DataFrame,
+    flag: Column | DataFrame,
+    label: str,
+    text_col: str = "clean_text",
+) -> DataFrame:
+    """The one verdict flip every gate, sidecar and post-hoc recorder uses:
+    KEPT rows selected by `flag` become keep=false, excl_type=`label`,
+    `text_col` null — a dropped doc carries no clean text (the
+    completeness checker's text_state rule, validation.validate_run).
+    Already-dropped rows and rows whose flag is null pass through untouched;
+    the column order is kept.
+
+    `flag` is a boolean Column over `verdicts`, or a DataFrame holding one
+    column of DISTINCT keys (a `verdicts` column of the same name) naming
+    the rows to flip — left-joined, so `verdicts` is never filtered."""
+    cols = verdicts.columns
+    if isinstance(flag, DataFrame):
+        (key,) = flag.columns
+        verdicts = verdicts.join(flag.withColumn("_flag", F.lit(True)), key, "left")
+        flag = F.col("_flag")
+    flip = F.col("_flip")
+    fixed = {
+        text_col: F.when(flip, F.lit(None).cast("string")).otherwise(F.col(text_col)),
+        "keep": F.col("keep") & ~flip,
+        "excl_type": F.when(flip, F.lit(label)).otherwise(F.col("excl_type")),
+    }
+    return verdicts.withColumn(
+        "_flip", F.coalesce(flag, F.lit(False)) & F.col("keep")
+    ).select(*[fixed[c].alias(c) if c in fixed else F.col(c) for c in cols])
+
+
 def doc_id_col(url: Column | str = "url") -> Column:
     """Stable document key: sha2(url) (SURVEY.md section 1.4; replaces the
     reference's positional text ids, parse_pile.py:745-788)."""

@@ -34,7 +34,10 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
+from functools import partial, reduce
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -497,34 +500,23 @@ def record_failures(
     """Post-hoc doc-level failure recording (F9): the reference appended
     parse-failure rows to its exclusions table AFTER the parse loop
     (parse_pile.py:1374-1390). Here the verdict flip (keep -> false,
-    excl_type -> 'fail') lands as a new BASE snapshot — the overwrite-
-    snapshot shape of table formats like Iceberg — so readers see exactly
-    one row per doc and resume semantics are unchanged. Lineage is
-    recomputed from the updated verdicts so rule-hit counts include the
+    excl_type -> 'fail', clean_text nulled) lands as a new BASE snapshot —
+    the overwrite-snapshot shape of table formats like Iceberg — so readers
+    see exactly one row per doc and resume semantics are unchanged. Lineage
+    is recomputed from the updated verdicts so rule-hit counts include the
     failures. Returns the new snapshot id, or -1 if `failed` is empty.
     """
-    from puddin_spark.pipeline import lineage_table
+    from puddin_spark.pipeline import flip_verdicts, lineage_table
 
     verdicts = store.read(spark)
     if verdicts is None:
         raise ValueError("record_failures on an empty store")
-    flagged = failed.select("doc_id").distinct().withColumn("_fail", F.lit(True))
+    flagged = failed.select("doc_id").distinct()
     if flagged.isEmpty():
         return -1
     # no forced broadcast: failures are normally tiny (AQE will broadcast),
     # but a mass-failure event must not OOM the driver trying to
-    updated = (
-        verdicts.join(flagged, "doc_id", "left")
-        .withColumn(
-            "keep", F.when(F.col("_fail"), F.lit(False)).otherwise(F.col("keep"))
-        )
-        .withColumn(
-            "excl_type",
-            F.when(F.col("_fail"), F.lit(excl_type)).otherwise(F.col("excl_type")),
-        )
-        .drop("_fail")
-        .select(*verdicts.columns)
-    )
+    updated = flip_verdicts(verdicts, flagged, excl_type)
     lineage = lineage_table(updated, num_partitions=num_partitions).withColumn(
         "snapshot_id", F.lit(store.current_snapshot_id() + 1)
     )
@@ -539,27 +531,21 @@ def _prune_near_dedup_sidecar(spark, store: SnapshotStore, verdicts: DataFrame) 
     """Keep the near-dedup indexes consistent with a verdict flip: entries
     for now-excluded docs would otherwise keep dropping future newcomers as
     near-dups of documents no longer in the corpus — both copies lost — and
-    the ingest-time reconciliation gate would re-fire forever. Prunes each
-    signature index (minhash AND srp) to the current kept id set as a base
-    commit; the minhash band table (a derived cache) is left to its
-    row-count gate, which rebuilds it from the pruned index by projection
-    on the next ingest. No-op for any sidecar that was never enabled."""
+    the ingest-time reconciliation gate would re-fire forever. Prunes every
+    sidecar's signature index to the current kept id set as a base commit;
+    the band caches are left to their row-count gates, which rebuild them
+    from the pruned indexes by projection on the next ingest. No-op for any
+    sidecar that was never enabled."""
     kept = verdicts.filter("keep").select(F.col("doc_id").alias("id"))
-    # band caches (minhash_bands, srp_bands) are left to their row-count
-    # gates, which rebuild them from the pruned indexes by projection
-    for name, part in (("minhash_index", None), ("srp_index", None)):
-        idx_base = store.base / name
-        if not (idx_base / "_commits").exists() or not any(
-            (idx_base / "_commits").glob("*.json")
-        ):
+    for spec in _SIDECARS:
+        idx_base = store.base / spec.index_name
+        if not any((idx_base / "_commits").glob("*.json")):
             continue
         idx_store = SnapshotStore(idx_base)
         idx = idx_store.read(spark)
         if idx is None:
             continue
-        idx_store.commit(
-            idx.join(kept, "id", "left_semi"), base=True, partition_by=part
-        )
+        idx_store.commit(idx.join(kept, "id", "left_semi"), base=True)
 
 
 def run_resumable_pipeline(
@@ -590,50 +576,43 @@ def run_resumable_pipeline(
     """One resumable pipeline run: process only not-yet-committed urls,
     commit verdicts + per-partition lineage atomically.
 
-    near_dedup=True additionally fuzzy-dedups each batch against every
-    PRIOR batch: a minhash index (shingles + signatures of surviving kept
-    docs) is maintained in a sibling snapshot store at <base>/minhash_index,
-    with its exploded LSH band table — directory-partitioned by band-key
-    prefix for per-batch file pruning — in <base>/minhash_bands. New docs
-    near-duplicating an indexed doc — or losing keep-first within the
-    batch's own near-dup clusters — flip to keep=false with
-    excl_type='near_dup' BEFORE the commit, and only survivors join the
-    index. Per-batch cost scales with the batch (the committed corpus is
-    never re-shingled or re-paired, and the band scan reads only the
-    batch's prefix partitions; incremental_minhash_pairs). This is the
-    near-dup analog of the exact text_sha resume dedup below; off by
-    default because 'near_dup' is a graft-axis label the reference doesn't
-    emit. Consistency is self-healing without a 2-phase commit: a
-    (count, xor-of-ids) gate reconciles the index against the committed
-    kept set in BOTH directions (crash-lag re-index AND stale-entry prune
-    after record_failures/rollback), landed as a base commit so the repair
-    runs once; the band cache rebuilds from the index by projection. Both
-    sidecars share the verdict store's compact()/gc() lifecycle (CLI
-    `compact` runs the verdict store plus all four sidecars).
-
-    embedding_near_dedup=True is the EMBEDDING-space analog: each batch's
-    kept docs are encoded (models.doc_embedding_udf — the
-    sentence-transformer seam's deterministic stand-in) into an (id, v)
-    index at <base>/srp_index, with its banded SRP key cache —
-    directory-partitioned by bucket prefix so each batch's committed-side
-    scan prunes to its own prefix partitions — at <base>/srp_bands
-    (similarity.incremental_srp_band_pairs — new-vs-committed and
-    new-vs-new only, the corpus is never re-encoded or re-paired).
-    Newcomers with cosine >= 0.99 of an indexed doc — or keep-first losers
-    within the batch's own clusters — flip to excl_type='emb_near_dup'
-    before the commit. Same reconciliation gate, commit ordering, and compact()/gc()
-    lifecycle as the minhash sidecar; composes with near_dedup=True
-    (minhash flips land first, the embedding pass sees only survivors).
-    The index is BANDED (srp_bands bucket keys per doc, each from a
-    disjoint srp_planes-plane family; candidates share ANY band key) so
-    near-twin recall stays high while random collisions per band scale as
-    N/2^planes — the band table lives at <base>/srp_bands as a derived
-    cache with the minhash band table's lifecycle. srp_planes/srp_bands
-    apply on FIRST use (defaults 16/8; raise planes at larger corpus
-    scales), persist in the sidecar's _meta.json, and later runs must
-    match or omit them — band keys from different configs are
-    incomparable, so a mismatch raises instead of silently generating no
-    candidates.
+    near_dedup=True and embedding_near_dedup=True each fuzzy-dedup every
+    batch against every PRIOR batch through a sidecar beside the verdict
+    store (_Sidecar): a signature index of the surviving kept docs plus its
+    exploded band table, a pure derived cache directory-partitioned by band
+    prefix so each batch's committed-side scan reads only the batch's own
+    prefix partitions. New docs near-duplicating an indexed doc — or losing
+    keep-first within the batch's own near-dup clusters — flip to
+    keep=false with clean_text nulled BEFORE the verdict commit; the
+    index and band cache then commit only the batch's finally kept docs.
+    Per-batch cost scales with the batch: the committed corpus is never
+    re-encoded or re-paired. Consistency is self-healing without a 2-phase
+    commit: a (count, xor-of-ids) gate reconciles each index against the
+    committed kept set in BOTH directions (crash-lag re-index from
+    committed clean_text AND stale-entry prune after record_failures/
+    rollback), landed as a base commit so the repair runs once, and a
+    row-count gate rebuilds the band cache from the index by projection.
+    The sidecars share the verdict store's compact()/gc() lifecycle (CLI
+    `compact` runs the verdict store plus every sidecar store), and they
+    compose: minhash flips land first, the embedding pass sees only
+    survivors. They differ in signature and label. near_dedup indexes word
+    3-shingle minhash signatures at <base>/minhash_index (bands at
+    <base>/minhash_bands, partitioned by band_pfx) and flips Jaccard >= 0.5
+    twins to excl_type='near_dup' (incremental_minhash_pairs).
+    embedding_near_dedup indexes document embeddings (models.
+    doc_embedding_udf, the sentence-transformer seam's deterministic
+    stand-in) at <base>/srp_index (SRP band keys at <base>/srp_bands,
+    partitioned by bucket_pfx) and flips cosine >= 0.99 twins to
+    excl_type='emb_near_dup' (similarity.committed_srp_flip_ids +
+    srp_batch_pairs_matmul). Its index is BANDED — srp_bands keys per doc,
+    each from a disjoint srp_planes-plane family; candidates share ANY band
+    key — so near-twin recall stays high while random collisions per band
+    scale as N/2^planes. srp_planes/srp_bands apply on FIRST use (defaults
+    16/8; raise planes at larger corpus scales), persist in the sidecar's
+    _meta.json, and later runs must match or omit them — band keys from
+    different configs are incomparable, so a mismatch raises instead of
+    silently generating no candidates. Both are off by default: their
+    labels are graft-axis labels the reference doesn't emit.
 
     fix_mojibake=True repairs double-encoded UTF-8 in the incoming text
     (operators/encoding.py replace chain — pure codegen) BEFORE anything
@@ -683,13 +662,18 @@ def run_resumable_pipeline(
     """
     from puddin_spark.pipeline import lineage_table, quality_pipeline
 
+    sidecars = [_MINHASH] if near_dedup else []
     if embedding_near_dedup:
         # resolve/validate the sidecar band config UP FRONT: a conflicting
         # srp_planes/srp_bands must fail even when this run turns out to be
         # a no-op (the config error is real regardless of batch content)
         srp_planes, srp_bands = _srp_meta(
-            store.base / "srp_index", srp_planes, srp_bands
+            store.base / _SRP.index_name, srp_planes, srp_bands
         )
+        sidecars.append(_SRP._replace(
+            bands=partial(_srp_bands_table, num_planes=srp_planes, num_bands=srp_bands),
+            band_rows=srp_bands,
+        ))
     # one scan of the commit history serves both anti-joins (url, then
     # text digest). The digest join is the global keep-first dedup across
     # runs: a url whose text body was already processed under another url in
@@ -778,27 +762,12 @@ def run_resumable_pipeline(
             verdicts, window=span_window, max_flagged=span_max_flagged
         )
     raw_verdicts = verdicts = verdicts.persist()
-    new_idx = None
     try:
         n_new = verdicts.count()
         if n_new == 0:
             return -1, 0
-        idx_store = bands_store = srp_store = srp_bands_store = None
-        new_srp_idx = new_srp_bands = None
-        mh_occupancy = srp_occupancy = None
-        if near_dedup:
-            verdicts, new_idx, idx_store, bands_store, mh_occupancy = (
-                _apply_near_dedup(spark, store, verdicts, committed)
-            )
-        if embedding_near_dedup:
-            (
-                verdicts, new_srp_idx, new_srp_bands, srp_store,
-                srp_bands_store, srp_occupancy,
-            ) = _apply_embedding_near_dedup(
-                spark, store, verdicts, committed,
-                planes=srp_planes, bands=srp_bands,
-            )
-        if near_dedup or embedding_near_dedup:
+        if sidecars:
+            verdicts, pending = _near_dedup(spark, store, sidecars, verdicts, committed)
             verdicts = verdicts.persist()
             verdicts.count()  # materialize before committing
         lineage = lineage_table(verdicts, num_partitions=num_partitions).withColumn(
@@ -814,53 +783,8 @@ def run_resumable_pipeline(
             verdicts.drop("proc_ts"), lineage, partition_by=partition_by,
             lineage_stats_cols=["snapshot_id"],
         )
-        if near_dedup and new_idx is not None:
-            # index lands AFTER the verdict commit (see docstring for the
-            # crash-lag recovery); only this batch's surviving kept docs.
-            # Bands land last (pure derived cache; a crash between these
-            # two commits is caught by the row-count gate next batch).
-            from puddin_spark.operators.dedup import (
-                band_table,
-                free_local_checkpoints,
-            )
-
-            if embedding_near_dedup:
-                # the embedding pass ran after minhash and may have flipped
-                # more docs; the minhash index must hold KEPT docs only or
-                # next batch's reconciliation gate re-fires
-                new_idx = new_idx.join(
-                    verdicts.filter("keep").select(F.col("doc_id").alias("id")),
-                    "id",
-                    "left_semi",
-                )
-            idx_store.commit(new_idx)
-            # bands carry the batch's hot-bucket occupancy as LINEAGE — the
-            # no-silent-caps telemetry for LSH degeneracy (band_occupancy)
-            bands_store.commit(
-                band_table(new_idx, **_ND_BAND_KW),
-                lineage=mh_occupancy,
-                partition_by=["band_pfx"],
-            )
-        if embedding_near_dedup and new_srp_idx is not None:
-            # index first, derived band cache last (a crash between the two
-            # commits is caught by the bands row-count gate next batch)
-            srp_store.commit(new_srp_idx)
-            srp_bands_store.commit(
-                new_srp_bands,
-                lineage=srp_occupancy,
-                partition_by=["bucket_pfx"],
-            )
-        if near_dedup or embedding_near_dedup:
-            # ALL sidecar readers are committed — only now release the
-            # batch's signature checkpoints and the drop-set checkpoint
-            # blocks (freeing between the two index commits would drop the
-            # embedding drop-set blocks the srp survivors still read: the
-            # minhash index plan reaches them through `verdicts`)
-            from puddin_spark.operators.dedup import free_local_checkpoints
-
-            for frame in (new_idx, new_srp_idx, new_srp_bands, verdicts):
-                if frame is not None:
-                    free_local_checkpoints(frame)
+        if sidecars:
+            _commit_near_dedup(store, pending, verdicts)
         return snap_id, n_new
     finally:
         verdicts.unpersist()
@@ -875,177 +799,6 @@ def run_resumable_pipeline(
 _ND_IDX_KW = dict(num_hashes=16, shingle_k=3, shingle_mode="word")
 _ND_BAND_KW = dict(num_hashes=16, band_size=2, hash_impl="md5")
 _ND_NUM_BANDS = _ND_BAND_KW["num_hashes"] // _ND_BAND_KW["band_size"]
-
-
-def _id_set_stats(df, col: str) -> tuple[int, int]:
-    """(count, order-independent xor fingerprint) of an id column — two
-    cheap column-scan aggregates that detect MEMBERSHIP differences, not
-    just size drift (a rollback can restore an equal-sized but different
-    kept set; a count-only gate would miss it and stale index entries would
-    keep dropping newcomers)."""
-    row = df.select(
-        F.count("*").alias("n"), F.expr(f"bit_xor(xxhash64({col}))").alias("fp")
-    ).first()
-    return row.n, row.fp if row.fp is not None else 0
-
-
-def _heal_stale_sidecar(idx_store: "SnapshotStore", committed_idx):
-    """Guard for a sidecar index that outlived its verdict store (the store
-    was wiped/recreated but `<verdicts>/minhash_index` or `srp_index`
-    survived): the corpus is EMPTY, so deduping a first batch against the
-    leftover index would silently drop newcomers as near-dups of documents
-    that are not in the corpus. Prune the index to empty as a base commit
-    (self-heal, consistent with the (count, xor) reconciliation philosophy)
-    and proceed as a true first run. Returns the healed index (None)."""
-    if committed_idx is not None:
-        idx_store.commit(committed_idx.limit(0), base=True)
-    return None
-
-
-def _apply_near_dedup(spark, store, verdicts, committed):
-    """Flip near-dup newcomers to keep=false/excl_type='near_dup'; return
-    (updated_verdicts, index_of_survivors, index_store, bands_store,
-    occupancy) — occupancy is the batch's top-K hottest (band, bucket)
-    telemetry (similarity.band_occupancy), committed as the minhash_bands
-    snapshot's lineage. See run_resumable_pipeline(near_dedup=True)."""
-    from puddin_spark.operators.dedup import (
-        band_table,
-        free_local_checkpoints,
-        incremental_minhash_pairs,
-        minhash_index,
-        resolve_duplicate_clusters,
-    )
-
-    idx_store = SnapshotStore(store.base / "minhash_index")
-    bands_store = SnapshotStore(store.base / "minhash_bands")
-    committed_idx = idx_store.read(spark)
-    if committed is None:
-        committed_idx = _heal_stale_sidecar(idx_store, committed_idx)
-    if committed is not None:
-        # index<->corpus reconciliation, gated by cheap (count, xor-of-ids)
-        # aggregates on both sides. BOTH directions repair here, landed as a
-        # BASE commit so the fix runs once, not on every subsequent batch:
-        # - stale entries (docs flipped keep=false by record_failures /
-        #   rollback / near-dup) are PRUNED — left in place they'd drop
-        #   future newcomers as near-dups of excluded docs (both copies
-        #   lost);
-        # - missing entries (crash between the verdict and index commits)
-        #   are re-indexed from committed clean_text.
-        kept_committed = committed.filter("keep")
-        n_kept, fp_kept = _id_set_stats(kept_committed, "doc_id")
-        n_idx, fp_idx = (
-            _id_set_stats(committed_idx, "id")
-            if committed_idx is not None
-            else (0, 0)
-        )
-        if (n_idx, fp_idx) != (n_kept, fp_kept):
-            kept_ids = kept_committed.select(F.col("doc_id").alias("id"))
-            pruned = (
-                committed_idx.join(kept_ids, "id", "left_semi")
-                if committed_idx is not None
-                else None
-            )
-            lag = kept_committed.select("doc_id", "clean_text")
-            if pruned is not None:
-                lag = lag.join(
-                    pruned.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
-                )
-            lag_idx = minhash_index(lag, "doc_id", "clean_text", **_ND_IDX_KW)
-            reconciled = (
-                lag_idx if pruned is None else pruned.unionByName(lag_idx)
-            )
-            idx_store.commit(reconciled, base=True)
-            committed_idx = idx_store.read(spark)
-        if committed_idx is not None and committed_idx.isEmpty():
-            committed_idx = None
-
-    committed_bands = None
-    if committed_idx is not None:
-        # the persisted band table is a pure DERIVED cache of the index
-        # (band keys only — rebuilt by projection, never by re-shingling);
-        # a row-count gate detects lag from a crash between the index and
-        # bands commits, or an index prune above
-        committed_bands = bands_store.read(spark)
-        n_idx = committed_idx.count()
-        n_bands = committed_bands.count() if committed_bands is not None else -1
-        if n_bands != n_idx * _ND_NUM_BANDS:
-            bands_store.commit(
-                band_table(committed_idx, **_ND_BAND_KW),
-                base=True,
-                partition_by=["band_pfx"],
-            )
-            committed_bands = bands_store.read(spark)
-
-    kept = verdicts.filter("keep").select("doc_id", "clean_text")
-    # localCheckpoint: ONE shingling pass serves prefix discovery, the pair
-    # join, and the survivors commit (blocks freed by the caller once the
-    # index commit lands)
-    new_idx = minhash_index(kept, "doc_id", "clean_text", **_ND_IDX_KW).localCheckpoint()
-    new_bands = band_table(new_idx, **_ND_BAND_KW)
-    if committed_bands is not None:
-        # static prefix pruning: committed bands are directory-partitioned
-        # by band_pfx, so filtering to the BATCH's own prefixes (<=16
-        # values, collected from the checkpointed new bands) prunes whole
-        # partitions from the scan — the per-batch read cost tracks the
-        # batch, not the corpus
-        pfx = [r[0] for r in new_bands.select("band_pfx").distinct().collect()]
-        committed_bands = committed_bands.filter(F.col("band_pfx").isin(pfx))
-    from puddin_spark.operators.similarity import band_occupancy
-
-    occupancy = band_occupancy(
-        new_bands, committed_bands, band_col="band_ix", bucket_col="band_key"
-    )
-    pairs = incremental_minhash_pairs(
-        new_idx,
-        committed_idx,
-        band_size=_ND_BAND_KW["band_size"],
-        jaccard_threshold=0.5,
-        new_bands=new_bands,
-        committed_bands=committed_bands,
-    ).persist()
-    new_ids = kept.select(F.col("doc_id").alias("id"))
-    vs_committed = pairs.filter("committed_side")
-    drops = (
-        vs_committed.join(new_ids, vs_committed.id_a == new_ids.id, "left_semi")
-        .select(F.col("id_a").alias("doc_id"))
-        .unionByName(
-            vs_committed.join(
-                new_ids, vs_committed.id_b == new_ids.id, "left_semi"
-            ).select(F.col("id_b").alias("doc_id"))
-        )
-    )
-    new_new = pairs.filter("not committed_side").select("id_a", "id_b")
-    clusters = None
-    if not new_new.isEmpty():
-        clusters = resolve_duplicate_clusters(new_new)
-        drops = drops.unionByName(
-            clusters.filter("id != root").select(F.col("id").alias("doc_id"))
-        )
-    # materialize the (tiny) drop set, then free the pair cache and the
-    # cluster resolution's final checkpoint — nothing downstream re-reads
-    # either (drops' own eager checkpoint is the only surviving copy)
-    drops = drops.distinct().localCheckpoint()
-    pairs.unpersist()
-    if clusters is not None:
-        free_local_checkpoints(clusters)
-    drops = drops.withColumn("_nd", F.lit(True))
-    updated = (
-        verdicts.join(drops, "doc_id", "left")
-        .withColumn(
-            "keep", F.when(F.col("_nd"), F.lit(False)).otherwise(F.col("keep"))
-        )
-        .withColumn(
-            "excl_type",
-            F.when(F.col("_nd"), F.lit("near_dup")).otherwise(F.col("excl_type")),
-        )
-        .drop("_nd")
-        .select(*verdicts.columns)
-    )
-    survivors_idx = new_idx.join(
-        drops.select(F.col("doc_id").alias("id")), "id", "left_anti"
-    )
-    return updated, survivors_idx, idx_store, bands_store, occupancy
-
 
 # embedding near-dedup sidecar parameters. Banded SRP: num_bands bucket
 # keys per doc, each from a disjoint hyperplane family of num_planes
@@ -1140,164 +893,265 @@ def _srp_bands_table(idx: DataFrame, num_planes: int, num_bands: int) -> DataFra
     )
 
 
-def _apply_embedding_near_dedup(
-    spark, store, verdicts, committed, planes=None, bands=None
-):
-    """Flip embedding near-dup newcomers to keep=false /
-    excl_type='emb_near_dup'; return (updated_verdicts, index_of_survivors,
-    survivor_bands, srp_store, srp_bands_store, occupancy). Mirrors
-    _apply_near_dedup: the same (count, xor-of-ids) reconciliation gate on
-    the index, a row-count gate on the derived band cache, band-prefix
-    partition pruning for the committed-side scan, and the commit ordering
-    in run_resumable_pipeline's docstring. (planes, bands) resolve against
-    the sidecar's persisted _meta.json (_srp_meta).
+class _Sidecar(NamedTuple):
+    """One incremental near-dedup sidecar (run_resumable_pipeline): a
+    signature index of the committed kept docs in the `<kind>_index` store
+    beside the verdicts, and its exploded band table — a pure derived cache,
+    directory-partitioned on `pfx_col` — in `<kind>_bands`, whose lineage
+    is each batch's hottest (band, bucket) keys
+    (similarity.band_occupancy over `occupancy_cols`)."""
 
-    The vs-COMMITTED flip runs through committed_srp_flip_ids (per-bucket
-    numpy cosine blocks, first-hit early exit, no pair-row
-    materialization — flip-set-identical to full enumeration); full pair
-    enumeration remains only where cluster resolution genuinely needs it:
-    new-vs-new. `occupancy` is the top-K
-    hottest (band, bucket) telemetry for this batch (new + pruned
-    committed membership) — committed as the srp_bands snapshot's lineage
-    so uncapped-bucket growth is observable per batch."""
-    from puddin_spark.operators.dedup import (
-        free_local_checkpoints,
-        resolve_duplicate_clusters,
-    )
+    kind: str
+    label: str  # excl_type of the docs it flips
+    index: Callable[[DataFrame], DataFrame]  # (doc_id, clean_text) -> (id, ...)
+    bands: Callable[[DataFrame], DataFrame]  # index -> band rows
+    band_rows: int  # band rows per indexed doc
+    pfx_col: str
+    occupancy_cols: tuple[str, str]
+    # (new index, new bands, committed index | None, committed bands pruned
+    # to the batch's prefixes | None) -> (newcomer ids (doc_id) with a
+    # committed near-twin | None, new-vs-new edges (id_a, id_b), frames to
+    # free once the drop set is materialized)
+    candidates: Callable[..., tuple]
+
+    @property
+    def index_name(self) -> str:
+        return f"{self.kind}_index"
+
+    @property
+    def bands_name(self) -> str:
+        return f"{self.kind}_bands"
+
+    def stores(self, base: Path) -> tuple[SnapshotStore, SnapshotStore]:
+        return SnapshotStore(base / self.index_name), SnapshotStore(base / self.bands_name)
+
+
+def _minhash_index_table(kept: DataFrame) -> DataFrame:
+    """(id, sh, mh): word-shingle set + minhash signature per kept doc."""
+    from puddin_spark.operators.dedup import minhash_index
+
+    return minhash_index(kept, "doc_id", "clean_text", **_ND_IDX_KW)
+
+
+def _minhash_bands_table(idx: DataFrame) -> DataFrame:
+    """(id, band_ix, band_key, band_pfx) projected from a minhash index."""
+    from puddin_spark.operators.dedup import band_table
+
+    return band_table(idx, **_ND_BAND_KW)
+
+
+def _minhash_candidates(new_idx, new_bands, committed_idx, committed_bands):
+    """Verified Jaccard >= 0.5 pairs (incremental_minhash_pairs) split by
+    side: the newcomer of each new-vs-committed pair, and the new-vs-new
+    edges."""
+    from puddin_spark.operators.dedup import incremental_minhash_pairs
+
+    pairs = incremental_minhash_pairs(
+        new_idx,
+        committed_idx,
+        band_size=_ND_BAND_KW["band_size"],
+        jaccard_threshold=0.5,
+        new_bands=new_bands,
+        committed_bands=committed_bands,
+    ).persist()
+    flips = None
+    if committed_idx is not None:
+        flips = (
+            pairs.filter("committed_side")
+            .select(F.explode(F.array("id_a", "id_b")).alias("doc_id"))
+            .join(new_idx.select(F.col("id").alias("doc_id")), "doc_id", "left_semi")
+        )
+    return flips, pairs.filter("not committed_side").select("id_a", "id_b"), [pairs]
+
+
+def _srp_candidates(new_idx, new_bands, committed_idx, committed_bands):
+    """Cosine >= _SRP_ND_MIN_COS twins from per-bucket numpy blocks.
+    vs-committed runs through committed_srp_flip_ids (first-hit early exit;
+    pair rows are never materialized — enumerating every (new, committed)
+    bucket co-member grew per-batch cost linearly with corpus-side
+    occupancy, VERDICT r4, profiled in BASELINE.md). new-vs-new needs the
+    whole edge set for cluster resolution: srp_batch_pairs_matmul emits it
+    without materializing bucket-co-member candidate rows (measured 2M
+    candidate rows / ~2 GB of shuffled vectors per 6k-doc batch on the
+    enumerate-then-join path)."""
     from puddin_spark.operators.similarity import (
-        band_occupancy,
         committed_srp_flip_ids,
         srp_batch_pairs_matmul,
     )
 
-    srp_store = SnapshotStore(store.base / "srp_index")
-    srp_bands_store = SnapshotStore(store.base / "srp_bands")
-    num_planes, num_bands = _srp_meta(srp_store.base, planes, bands)
-    committed_idx = srp_store.read(spark)
-    if committed is None:
-        committed_idx = _heal_stale_sidecar(srp_store, committed_idx)
-    if committed is not None:
-        # index<->corpus reconciliation (same shape as minhash: stale
-        # entries pruned, crash-lag entries re-encoded from committed
-        # clean_text, landed once as a base commit)
-        kept_committed = committed.filter("keep")
-        n_kept, fp_kept = _id_set_stats(kept_committed, "doc_id")
-        n_idx, fp_idx = (
-            _id_set_stats(committed_idx, "id")
-            if committed_idx is not None
-            else (0, 0)
-        )
-        if (n_idx, fp_idx) != (n_kept, fp_kept):
-            kept_ids = kept_committed.select(F.col("doc_id").alias("id"))
-            pruned = (
-                committed_idx.join(kept_ids, "id", "left_semi")
-                if committed_idx is not None
-                else None
-            )
-            lag = kept_committed.select("doc_id", "clean_text")
-            if pruned is not None:
-                lag = lag.join(
-                    pruned.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
-                )
-            lag_idx = _srp_index_table(lag)
-            reconciled = (
-                lag_idx if pruned is None else pruned.unionByName(lag_idx)
-            )
-            srp_store.commit(reconciled, base=True)
-            committed_idx = srp_store.read(spark)
-        if committed_idx is not None and committed_idx.isEmpty():
-            committed_idx = None
-
-    committed_bands = None
+    frees, flips = [], None
     if committed_idx is not None:
-        # the persisted band table is a pure DERIVED cache of the index
-        # (rebuilt by projection, never by re-encoding); a row-count gate
-        # detects lag from a crash between the index and bands commits or
-        # an index prune above
-        committed_bands = srp_bands_store.read(spark)
-        n_idx = committed_idx.count()
-        n_bands_rows = committed_bands.count() if committed_bands is not None else -1
-        if n_bands_rows != n_idx * num_bands:
-            srp_bands_store.commit(
-                _srp_bands_table(committed_idx, num_planes, num_bands),
-                base=True,
-                partition_by=["bucket_pfx"],
-            )
-            committed_bands = srp_bands_store.read(spark)
-
-    kept = verdicts.filter("keep").select("doc_id", "clean_text")
-    # localCheckpoint: ONE encoding pass serves band derivation, the pair
-    # join, and the survivors commit (blocks freed by the caller once the
-    # sidecar commits land)
-    new_idx = _srp_index_table(kept).localCheckpoint()
-    new_bands = _srp_bands_table(new_idx, num_planes, num_bands).localCheckpoint()
-    if committed_bands is not None:
-        # static prefix pruning: the committed band table is directory-
-        # partitioned by bucket_pfx, so filtering to the BATCH's own
-        # prefixes (<=16 values) prunes whole partitions from the scan;
-        # incremental_srp_band_pairs then semi-joins exact (band, bucket)
-        pfx = [r[0] for r in new_bands.select("bucket_pfx").distinct().collect()]
-        committed_bands = committed_bands.filter(F.col("bucket_pfx").isin(pfx))
-    occupancy = band_occupancy(new_bands, committed_bands)
-    flips = None
-    if committed_idx is not None:
-        # vs-committed: per-bucket numpy cosine blocks with first-hit early
-        # exit — pair rows are never materialized (enumerating every
-        # (new, committed) bucket co-member grew per-batch cost linearly
-        # with corpus-side occupancy — VERDICT r4, profiled in BASELINE.md)
-        flips = committed_srp_flip_ids(
+        checkpoint = committed_srp_flip_ids(
             new_idx, new_bands, committed_idx, committed_bands,
             min_cos=_SRP_ND_MIN_COS,
         )
-    # new-vs-new needs the whole edge set (cluster resolution), but not the
-    # enumerate-then-join shape: srp_batch_pairs_matmul emits the same pair
-    # set from per-bucket numpy blocks (pair-set equality pytest-pinned)
-    # without materializing bucket-co-member candidate rows or shuffling
-    # two vectors per candidate — measured 2M candidate rows / ~2 GB of
-    # shuffled vector payload per 6k-doc batch on the old path
-    pairs = srp_batch_pairs_matmul(
-        new_idx, new_bands, min_cos=_SRP_ND_MIN_COS
-    ).persist()
-    drops = (
-        flips.select(F.col("new_id").alias("doc_id"))
-        if flips is not None
-        else kept.select("doc_id").limit(0)
-    )
-    new_new = pairs.select("id_a", "id_b")
-    clusters = None
-    if not new_new.isEmpty():
-        clusters = resolve_duplicate_clusters(new_new)
-        drops = drops.unionByName(
-            clusters.filter("id != root").select(F.col("id").alias("doc_id"))
+        frees.append(checkpoint)
+        flips = checkpoint.select(F.col("new_id").alias("doc_id"))
+    pairs = srp_batch_pairs_matmul(new_idx, new_bands, min_cos=_SRP_ND_MIN_COS).persist()
+    frees.append(pairs)
+    return flips, pairs.select("id_a", "id_b"), frees
+
+
+_MINHASH = _Sidecar(
+    "minhash", "near_dup", _minhash_index_table, _minhash_bands_table,
+    _ND_NUM_BANDS, "band_pfx", ("band_ix", "band_key"), _minhash_candidates,
+)
+# bands/band_rows are bound per store to the persisted config (_srp_meta)
+_SRP = _Sidecar(
+    "srp", "emb_near_dup", _srp_index_table, None, None,
+    "bucket_pfx", ("band", "bucket"), _srp_candidates,
+)
+# pipeline order: minhash flips land first, the embedding pass sees only
+# survivors
+_SIDECARS = (_MINHASH, _SRP)
+SIDECAR_STORES = tuple(n for s in _SIDECARS for n in (s.index_name, s.bands_name))
+
+
+def _id_set_stats(df, col: str) -> tuple[int, int]:
+    """(count, order-independent xor fingerprint) of an id column — two
+    cheap column-scan aggregates that detect MEMBERSHIP differences, not
+    just size drift (a rollback can restore an equal-sized but different
+    kept set; a count-only gate would miss it and stale index entries would
+    keep dropping newcomers)."""
+    row = df.select(
+        F.count("*").alias("n"), F.expr(f"bit_xor(xxhash64({col}))").alias("fp")
+    ).first()
+    return row.n, row.fp if row.fp is not None else 0
+
+
+def _reconciled_index(spark, spec: _Sidecar, idx_store, kept_committed, kept_stats):
+    """The committed index, reconciled against the committed kept set, and
+    its row count; (None, 0) when empty. The (count, xor-of-ids) gate
+    repairs BOTH directions as one BASE commit, so the fix runs once:
+    - stale entries (docs flipped keep=false by record_failures / rollback)
+      are pruned — left in place they would drop future newcomers as
+      near-dups of excluded docs (both copies lost);
+    - missing entries (a crash between the verdict and index commits) are
+      re-indexed from committed clean_text.
+    With no committed verdicts at all (kept_committed None) a surviving
+    index outlived a wiped store: it is pruned to empty, so a first batch
+    is never deduped against documents that are not in the corpus."""
+    committed_idx = idx_store.read(spark)
+    if kept_committed is None:
+        if committed_idx is not None:
+            idx_store.commit(committed_idx.limit(0), base=True)
+        return None, 0
+    stats = _id_set_stats(committed_idx, "id") if committed_idx is not None else (0, 0)
+    if stats != kept_stats:
+        lag = kept_committed.select("doc_id", "clean_text")
+        reconciled = None
+        if committed_idx is not None:
+            kept_ids = kept_committed.select(F.col("doc_id").alias("id"))
+            reconciled = committed_idx.join(kept_ids, "id", "left_semi")
+            lag = lag.join(
+                reconciled.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
+            )
+        lag_idx = spec.index(lag)
+        idx_store.commit(
+            lag_idx if reconciled is None else reconciled.unionByName(lag_idx),
+            base=True,
         )
-    drops = drops.distinct().localCheckpoint()
-    pairs.unpersist()
-    if flips is not None:
-        free_local_checkpoints(flips)
-    if clusters is not None:
-        free_local_checkpoints(clusters)
-    drops = drops.withColumn("_ed", F.lit(True))
-    updated = (
-        verdicts.join(drops, "doc_id", "left")
-        .withColumn(
-            "keep", F.when(F.col("_ed"), F.lit(False)).otherwise(F.col("keep"))
+        # the index now equals the kept set by construction
+        committed_idx, stats = idx_store.read(spark), kept_stats
+    n_idx = stats[0]
+    return (committed_idx if n_idx else None), n_idx
+
+
+def _near_dedup(spark, store, sidecars, verdicts, committed):
+    """Run each sidecar over the batch in order — reconcile, band-cache
+    gate, index, prefix pruning, pairs, cluster resolution, flip — and
+    return (flipped verdicts, [(sidecar, new index, new bands, occupancy)])
+    for _commit_near_dedup."""
+    from puddin_spark.operators.dedup import (
+        free_local_checkpoints,
+        resolve_duplicate_clusters,
+    )
+    from puddin_spark.operators.similarity import band_occupancy
+    from puddin_spark.pipeline import flip_verdicts
+
+    kept_committed = kept_stats = None
+    if committed is not None:
+        # one (count, xor) pass over the kept set serves every sidecar
+        kept_committed = committed.filter("keep")
+        kept_stats = _id_set_stats(kept_committed, "doc_id")
+    pending = []
+    for spec in sidecars:
+        idx_store, bands_store = spec.stores(store.base)
+        committed_idx, n_idx = _reconciled_index(
+            spark, spec, idx_store, kept_committed, kept_stats
         )
-        .withColumn(
-            "excl_type",
-            F.when(F.col("_ed"), F.lit("emb_near_dup")).otherwise(
-                F.col("excl_type")
-            ),
+        committed_bands = None
+        if committed_idx is not None:
+            # the band table is a pure DERIVED cache of the index, rebuilt
+            # by projection (never by re-shingling or re-encoding); a
+            # row-count gate detects lag from a crash between the index and
+            # bands commits, or an index prune above
+            committed_bands = bands_store.read(spark)
+            n_bands = committed_bands.count() if committed_bands is not None else -1
+            if n_bands != n_idx * spec.band_rows:
+                bands_store.commit(
+                    spec.bands(committed_idx), base=True, partition_by=[spec.pfx_col]
+                )
+                committed_bands = bands_store.read(spark)
+        # localCheckpoint: ONE signature pass serves prefix discovery, the
+        # pair stages and the survivors commit (blocks freed once the last
+        # sidecar commit lands)
+        new_idx = spec.index(
+            verdicts.filter("keep").select("doc_id", "clean_text")
+        ).localCheckpoint()
+        new_bands = spec.bands(new_idx).localCheckpoint()
+        if committed_bands is not None:
+            # static prefix pruning: filtering the directory-partitioned
+            # committed bands to the BATCH's own prefixes (<= 16 values)
+            # prunes whole partitions — the read cost tracks the batch,
+            # not the corpus
+            pfx = [r[0] for r in new_bands.select(spec.pfx_col).distinct().collect()]
+            committed_bands = committed_bands.filter(F.col(spec.pfx_col).isin(pfx))
+        band_col, bucket_col = spec.occupancy_cols
+        occupancy = band_occupancy(
+            new_bands, committed_bands, band_col=band_col, bucket_col=bucket_col
         )
-        .drop("_ed")
-        .select(*verdicts.columns)
-    )
-    survivors_idx = new_idx.join(
-        drops.select(F.col("doc_id").alias("id")), "id", "left_anti"
-    )
-    survivor_bands = new_bands.join(
-        drops.select(F.col("doc_id").alias("id")), "id", "left_anti"
-    )
-    return (
-        updated, survivors_idx, survivor_bands, srp_store, srp_bands_store,
-        occupancy,
-    )
+        flips, new_new, frees = spec.candidates(
+            new_idx, new_bands, committed_idx, committed_bands
+        )
+        drops = [] if flips is None else [flips]
+        if not new_new.isEmpty():
+            clusters = resolve_duplicate_clusters(new_new)
+            frees.append(clusters)
+            drops.append(clusters.filter("id != root").select(F.col("id").alias("doc_id")))
+        if drops:
+            # materialize the (tiny) drop set; it is the only copy anything
+            # downstream reads, so the pair frames can go
+            drop_ids = reduce(DataFrame.unionByName, drops).distinct()
+            verdicts = flip_verdicts(verdicts, drop_ids.localCheckpoint(), spec.label)
+        for frame in frees:
+            if frame.is_cached:
+                frame.unpersist()
+            else:
+                free_local_checkpoints(frame)
+        pending.append((spec, new_idx, new_bands, occupancy))
+    return verdicts, pending
+
+
+def _commit_near_dedup(store, pending, verdicts) -> None:
+    """After the verdict commit: each sidecar's index, then its band cache
+    (a crash between the two is caught by the row-count gate next batch),
+    each holding exactly the batch's finally kept docs — a doc a later
+    sidecar flipped must not linger in an earlier one's index, or the next
+    batch's reconciliation gate re-fires. Checkpoints are freed only after
+    the last commit: every survivors plan reads them."""
+    from puddin_spark.operators.dedup import free_local_checkpoints
+
+    kept_ids = verdicts.filter("keep").select(F.col("doc_id").alias("id"))
+    for spec, new_idx, new_bands, occupancy in pending:
+        idx_store, bands_store = spec.stores(store.base)
+        idx_store.commit(new_idx.join(kept_ids, "id", "left_semi"))
+        bands_store.commit(
+            new_bands.join(kept_ids, "id", "left_semi"),
+            lineage=occupancy,
+            partition_by=[spec.pfx_col],
+        )
+    for _, new_idx, new_bands, _ in pending:
+        free_local_checkpoints(new_idx)
+        free_local_checkpoints(new_bands)
+    free_local_checkpoints(verdicts)

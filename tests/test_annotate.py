@@ -197,6 +197,7 @@ def test_record_failures_flips_verdicts(spark, tmp_path):
     assert after.count() == n_total  # overwrite, not append
     row = after.filter(after.doc_id == victim_id).collect()[0]
     assert row.keep is False and row.excl_type == "fail"
+    assert row.clean_text is None  # a dropped doc carries no clean text
 
     # lineage recomputed: fail appears in rule hit counts
     lin = store.read_lineage(spark)

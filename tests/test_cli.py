@@ -390,3 +390,37 @@ def test_cli_score_ppl_requires_lm(tmp_path):
         ["score-ppl", "-d", str(tmp_path / "none"), "--master", "local[4]"]
     )
     assert code == 2 and "error" in out
+
+
+def test_cli_compact_all_stores(tmp_path, spark):
+    """compact: the verdict store and every near-dedup sidecar store each
+    land one new base snapshot, and a rerun of the same input over the
+    compacted stores is still a no-op."""
+    from puddin_spark.snapshots import SIDECAR_STORES, SnapshotStore
+    from puddin_spark.synth import SPARK_SCHEMA_DDL, gen_rows
+
+    pages_dir = str(tmp_path / "pages")
+    spark.createDataFrame(
+        gen_rows(0, 40, include_fixtures=False), SPARK_SCHEMA_DDL
+    ).write.parquet(pages_dir)
+    dest = str(tmp_path / "out")
+    run = ["run", "-i", pages_dir, "-d", dest, "--partitions", "2",
+           "--master", "local[4]", "--near-dedup", "--embedding-near-dedup"]
+    # two batches, so every store has history for compact to merge
+    code, out = _run([*run, "--limit", "20"])
+    assert code == 0 and out["new_docs"] > 0
+    code, out = _run(run)
+    assert code == 0 and out["snapshot_id"] == 1
+
+    code, comp = _run(["compact", "-d", dest, "--master", "local[4]", "--gc-age", "0"])
+    assert code == 0
+    names = ["verdicts", *(f"verdicts/{s}" for s in SIDECAR_STORES)]
+    assert sorted(comp) == sorted(names) and len(names) == 5
+    for name in names:
+        recs = SnapshotStore(tmp_path / "out" / name).commits()
+        # gc dropped the superseded records: the base snapshot is all that's left
+        assert [r["snapshot_id"] for r in recs] == [comp[name]["snapshot_id"]]
+        assert comp[name]["snapshot_id"] == 2 and recs[-1]["base"], name
+
+    code, again = _run(run)
+    assert code == 0 and again["new_docs"] == 0

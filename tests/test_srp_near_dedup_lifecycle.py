@@ -30,6 +30,7 @@ from puddin_spark.snapshots import (
     run_resumable_pipeline,
 )
 from puddin_spark.synth import synth_pages_local
+from puddin_spark.validation import validate_run
 
 
 def _emb_twin(spark, clean_text: str, url: str, pages, rot: int = 0):
@@ -218,6 +219,11 @@ def test_minhash_and_embedding_near_dedup_compose(spark, tmp_path):
     n_kept = v1.filter("keep").count()
     assert SnapshotStore(store.base / "minhash_index").read(spark).count() == n_kept
     assert SnapshotStore(store.base / "srp_index").read(spark).count() == n_kept
+    # completeness with no allowlist: both sidecar flips null clean_text
+    summary, _ = validate_run(
+        pages.unionByName(mh_twin).unionByName(emb_twin), v1, digest_aware=True
+    )
+    assert summary["ok"] and summary["n_known_fail"] == 0, summary
 
 
 def test_srp_planes_persisted_and_guarded(spark, tmp_path):
