@@ -2,14 +2,14 @@
 """Optimization-round measurement harness (bench.py is frozen for grading).
 
 Per-query noop-sink timing (guide section 1.4) with repeat control, plus
-.explain('formatted') capture to plans/r06/<query>_<tag>.txt. Mirrors the
+.explain('formatted') capture to plans/<query>_<tag>.txt. Mirrors the
 frozen bench.py methodology exactly: same session shape (local[CPUS],
 shuffle_partitions=CPUS), same inputs ($SPARK_GRAFT_SF_DIR), same noop sink.
 
 Usage:
   python bench_extra.py [--tag before|after] [--reps 2] [query ...]
 With no query names, runs every BENCH_QUERIES entry from bench.py.
-Writes one JSON line to stdout and plans to plans/r06/.
+Writes one JSON line to stdout and plans to plans/ (untracked).
 """
 from __future__ import annotations
 
@@ -48,7 +48,7 @@ def main() -> None:
     if not names:
         names = list(BENCH_QUERIES)
 
-    plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")
+    plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans")
     os.makedirs(plans_dir, exist_ok=True)
 
     spark = get_spark(master=f"local[{CPUS}]", app_name="bench_extra")

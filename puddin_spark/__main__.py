@@ -37,6 +37,84 @@ def _pages(spark, path: str, subset: str):
     return spark.read.parquet(path)
 
 
+def _read_table(spark, path: str):
+    """A csv (with header) or parquet table, by file extension."""
+    if path.endswith(".csv"):
+        return spark.read.option("header", True).csv(path)
+    return spark.read.parquet(path)
+
+
+def _gates(spark, args) -> list:
+    """The rule gates `run` and `stream` apply after the puddin rules, in
+    order (run_resumable_pipeline(gates=...)). The order puts cheap
+    decisions before the costly operators, so each later gate sees fewer
+    kept docs (the predicate-pushdown argument of Predicate Pushdown for
+    Data Science Pipelines, SIGMOD 2023)."""
+    from functools import partial
+
+    from puddin_spark.operators.dedup import (
+        apply_decontamination_gate,
+        apply_repeated_span_gate,
+    )
+    from puddin_spark.operators.ngram_lm import apply_ppl_gate
+    from puddin_spark.operators.textstats import apply_c4_gate, apply_gopher_gate
+
+    if args.ppl_lm and args.ppl_gate_max is None:
+        print(json.dumps({"error": "--ppl-lm requires --ppl-gate-max"}))
+        spark.stop()
+        raise SystemExit(2)
+    gates = []
+    if args.gopher:
+        # cheapest gate first: a codegen-only flip that shrinks the kept
+        # set before the broadcast-join (decontaminate) and shuffle
+        # (near-dedup) stages do per-doc work
+        gates.append(partial(apply_gopher_gate, min_words=args.gopher_min_words))
+    if args.c4:
+        # after gopher (which judges the original page), before the
+        # joins/shuffles: C4 rewrites surviving clean_text to its
+        # retained lines, so downstream dedup hashes the cleaned body
+        gates.append(apply_c4_gate)
+    if args.ppl_lm:
+        # CCNet-style quality flip against a PERSISTED target-domain LM
+        # (train-lm once on e.g. a Wikipedia sample, score every ingest
+        # batch): after the codegen gates, before decontaminate/span/
+        # near-dedup — its three broadcast probes are cheaper than the
+        # ngram-explode join stages it shrinks. The LM is read when the
+        # gate is applied, so each stream micro-batch sees a retrained LM.
+        gates.append(lambda v: apply_ppl_gate(
+            v, spark.read.parquet(args.ppl_lm), max_ppl=args.ppl_gate_max
+        ))
+    if args.decontaminate:
+        # train/test-leakage flip BEFORE the near-dedup passes: fewer kept
+        # docs reach the (costlier) encoding/shingling stages, and a doc
+        # that is both contaminated and a near-dup records the policy
+        # reason (contaminated) rather than the incidental one
+        gates.append(partial(
+            apply_decontamination_gate,
+            eval_docs=_read_table(spark, args.decontaminate),
+            n=args.decontaminate_ngram,
+        ))
+    if args.dedup_spans:
+        # after the policy gates, before the sidecar passes — a doc that
+        # is both span-spam and a near-dup records the cheaper-to-compute
+        # reason, and fewer docs reach the shingling/encoding stages
+        gates.append(partial(apply_repeated_span_gate, window=args.dedup_spans))
+    return gates
+
+
+def _lineage_totals(lineage) -> dict:
+    """Store-wide doc/keep totals summed from the store's lineage: every
+    verdict commit carries the lineage of its rows (record_failures,
+    compact and rollback recommit it as base), so no full-store count is
+    needed."""
+    from pyspark.sql import functions as F
+
+    if lineage is None:
+        return {"total_docs": 0, "total_keep": 0}
+    row = lineage.agg(F.sum("n_docs").alias("d"), F.sum("n_keep").alias("k")).first()
+    return {"total_docs": int(row.d or 0), "total_keep": int(row.k or 0)}
+
+
 def cmd_run(args) -> int:
     from pyspark.sql import functions as F
 
@@ -46,31 +124,11 @@ def cmd_run(args) -> int:
     from puddin_spark.snapshots import SnapshotStore, run_resumable_pipeline
 
     spark = get_spark(master=args.master, app_name="puddin_spark.run")
+    gates = _gates(spark, args)
     pages = _pages(spark, args.input, args.subset)
     if args.limit:
         pages = pages.limit(args.limit)
     store = SnapshotStore(f"{args.dest}/verdicts")
-    blocked = None
-    if args.blocklist:
-        # csv (header: domain) or parquet of registered domains
-        if args.blocklist.endswith(".csv"):
-            blocked = spark.read.option("header", True).csv(args.blocklist)
-        else:
-            blocked = spark.read.parquet(args.blocklist)
-    eval_docs = None
-    if args.decontaminate:
-        # csv (header: text) or parquet of eval/benchmark texts
-        if args.decontaminate.endswith(".csv"):
-            eval_docs = spark.read.option("header", True).csv(args.decontaminate)
-        else:
-            eval_docs = spark.read.parquet(args.decontaminate)
-    ppl_lm = None
-    if args.ppl_lm:
-        if args.ppl_gate_max is None:
-            print(json.dumps({"error": "--ppl-lm requires --ppl-gate-max"}))
-            spark.stop()
-            return 2
-        ppl_lm = spark.read.parquet(args.ppl_lm)
     snap_id, n_new = run_resumable_pipeline(
         spark, pages, store, num_partitions=args.partitions,
         near_dedup=args.near_dedup,
@@ -79,24 +137,16 @@ def cmd_run(args) -> int:
         srp_bands=args.srp_bands,
         html_fallback=args.html_fallback,
         fix_mojibake=args.fix_mojibake,
-        blocked_domains=blocked,
-        gopher=args.gopher,
-        gopher_min_words=args.gopher_min_words,
-        c4=args.c4,
-        decontaminate_against=eval_docs,
-        decontaminate_ngram=args.decontaminate_ngram,
-        span_window=args.dedup_spans,
-        ppl_lm=ppl_lm,
-        ppl_max=args.ppl_gate_max or 0.0,
+        # csv (header: domain) or parquet of registered domains
+        blocked_domains=_read_table(spark, args.blocklist) if args.blocklist else None,
+        gates=gates,
         partition_by=args.partition_by.split(",") if args.partition_by else None,
     )
     out = {"snapshot_id": snap_id, "new_docs": n_new}
     if snap_id >= 0:
         lineage = store.read_lineage(spark)
         write_lineage_csv(lineage, f"{args.dest}/lineage")
-        verdicts = store.read(spark)
-        out["total_docs"] = verdicts.count()
-        out["total_keep"] = verdicts.filter("keep").count()
+        out.update(_lineage_totals(lineage))
         # THIS batch's keep count from the stats-pruned lineage read: the
         # per-file snapshot_id stats open only the new snapshot's lineage
         # files (file skipping), not one snapshot per batch of history
@@ -110,7 +160,7 @@ def cmd_run(args) -> int:
             out["batch_keep"] = int(row.k or 0)
             out["batch_docs"] = int(row.d or 0)
         if args.conllu:
-            sents = sentence_table(verdicts)
+            sents = sentence_table(store.read(spark))
             if args.annotate:
                 # annotated rendering with the reference's F9 contract:
                 # annotation failures drop the whole doc from the conllu
@@ -158,14 +208,9 @@ def cmd_validate(args) -> int:
         print(json.dumps({"ok": False, "error": "no committed verdicts"}))
         spark.stop()
         return 2
-    known = None
-    if args.known_fail:
-        # previously-triaged violations (url, violation) — csv or parquet;
-        # the reference's known_fail allowlist surface
-        if args.known_fail.endswith(".csv"):
-            known = spark.read.option("header", True).csv(args.known_fail)
-        else:
-            known = spark.read.parquet(args.known_fail)
+    # previously-triaged violations (url, violation) — csv or parquet;
+    # the reference's known_fail allowlist surface
+    known = _read_table(spark, args.known_fail) if args.known_fail else None
     # incremental stores dedup globally by text digest: a url shadowed by a
     # committed duplicate text is covered, not missing
     summary, _ = validate_run(
@@ -336,12 +381,7 @@ def cmd_export(args) -> int:
             select_top_importance,
         )
 
-        if args.importance_target.endswith(".csv"):
-            target = spark.read.option("header", True).csv(
-                args.importance_target
-            )
-        else:
-            target = spark.read.parquet(args.importance_target)
+        target = _read_table(spark, args.importance_target)
         # fit uses one text_col name for both frames: align the target's
         # `text` column to the kept corpus's `clean_text` (the constant
         # doc_id is fine — fitting only counts tokens, never ids)
@@ -389,10 +429,13 @@ def cmd_export(args) -> int:
         kept = ppl.filter(
             F.col("ppl").isNotNull() & (F.col("ppl") <= args.ppl_max)
         ).select(key)
-        # count the kept docs the artifact never scored BEFORE the semi-join
-        # drops them — surfaced in the summary (ppl_unscored_excluded), so
-        # the exclusion is loud, as the comment above promises
-        ppl_unscored = docs.join(ppl.select(key), key, "left_anti").count()
+        # count the kept docs the artifact never scored (absent from it, or
+        # present with a null ppl) BEFORE the semi-join drops them —
+        # surfaced in the summary (ppl_unscored_excluded), so the exclusion
+        # is loud, as the comment above promises
+        ppl_unscored = docs.join(
+            ppl.filter(F.col("ppl").isNotNull()).select(key), key, "left_anti"
+        ).count()
         docs = docs.join(kept, key, "left_semi")
     if args.budget:
         docs = token_budget_sample(docs, args.budget, "n_tokens", salt=args.salt)
@@ -487,9 +530,6 @@ def cmd_stream(args) -> int:
     from puddin_spark.snapshots import SnapshotStore
     from puddin_spark.streaming import run_streaming_pipeline
 
-    if args.ppl_lm and args.ppl_gate_max is None:
-        print(json.dumps({"error": "--ppl-lm requires --ppl-gate-max"}))
-        return 2
     spark = get_spark(master=args.master, app_name="puddin_spark.stream")
     store = SnapshotStore(f"{args.dest}/verdicts")
     q = run_streaming_pipeline(
@@ -504,20 +544,14 @@ def cmd_stream(args) -> int:
         srp_bands=args.srp_bands,
         html_fallback=args.html_fallback,
         fix_mojibake=args.fix_mojibake,
-        gopher=args.gopher,
-        gopher_min_words=args.gopher_min_words,
-        c4=args.c4,
-        ppl_lm_path=args.ppl_lm,
-        ppl_max=args.ppl_gate_max or 0.0,
+        gates=_gates(spark, args),
     )
     drained = q.awaitTermination(args.stream_timeout)
     if not drained:
         q.stop()
-    v = store.read(spark)
     out = {
         "ok": bool(drained),
-        "total_docs": 0 if v is None else v.count(),
-        "total_keep": 0 if v is None else v.filter("keep").count(),
+        **_lineage_totals(store.read_lineage(spark)),
         "snapshot_id": store.current_snapshot_id(),
     }
     print(json.dumps(out))
@@ -876,21 +910,6 @@ def main(argv: list[str] | None = None) -> int:
                 dest="ppl_gate_max",
                 help="perplexity threshold for --ppl-lm",
             )
-        if name == "run":
-            sp.add_argument(
-                "--partition-by",
-                default=None,
-                help="comma-separated verdict columns (e.g. lang) to"
-                " directory-partition each committed snapshot by; readers"
-                " filtering on them prune files (Iceberg partition-spec"
-                " analog, preserved by compact/rollback)",
-            )
-            sp.add_argument(
-                "--blocklist",
-                default=None,
-                help="csv (header: domain) or parquet of registered domains"
-                " to record as excl_type='blocked_domain'",
-            )
             sp.add_argument(
                 "--decontaminate",
                 default=None,
@@ -913,6 +932,21 @@ def main(argv: list[str] | None = None) -> int:
                 "span gate: kept docs sharing any window-token span with"
                 " another doc in the batch get excl_type='dup_spans'"
                 " (0 = off)",
+            )
+        if name == "run":
+            sp.add_argument(
+                "--partition-by",
+                default=None,
+                help="comma-separated verdict columns (e.g. lang) to"
+                " directory-partition each committed snapshot by; readers"
+                " filtering on them prune files (Iceberg partition-spec"
+                " analog, preserved by compact/rollback)",
+            )
+            sp.add_argument(
+                "--blocklist",
+                default=None,
+                help="csv (header: domain) or parquet of registered domains"
+                " to record as excl_type='blocked_domain'",
             )
             sp.add_argument(
                 "--annotate",

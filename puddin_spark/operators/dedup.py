@@ -586,7 +586,10 @@ def apply_repeated_span_gate(
     keep=false with excl_type='dup_spans' (clean_text nulled);
     already-dropped docs pass through untouched. The RefinedWeb-style
     document-drop policy — use `trim_repeated_spans` instead when the
-    policy is to salvage documents by cutting the spans out."""
+    policy is to salvage documents by cutting the spans out. Spans are
+    compared within `verdicts` only: as a run_resumable_pipeline gate
+    that is the current batch, so cross-batch span hygiene means running
+    `repeated_spans` over the accumulated kept corpus as a separate job."""
     flagged = (
         repeated_spans(
             verdicts.filter("keep").select("doc_id", text_col),

@@ -34,7 +34,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from functools import partial, reduce
 from pathlib import Path
 from typing import NamedTuple
@@ -514,8 +514,8 @@ def record_failures(
     flagged = failed.select("doc_id").distinct()
     if flagged.isEmpty():
         return -1
-    # no forced broadcast: failures are normally tiny (AQE will broadcast),
-    # but a mass-failure event must not OOM the driver trying to
+    # no forced broadcast: failures are normally tiny (AQE will broadcast
+    # them), but a mass-failure event must not OOM the driver
     updated = flip_verdicts(verdicts, flagged, excl_type)
     lineage = lineage_table(updated, num_partitions=num_partitions).withColumn(
         "snapshot_id", F.lit(store.current_snapshot_id() + 1)
@@ -561,17 +561,8 @@ def run_resumable_pipeline(
     html_fallback: bool = False,
     fix_mojibake: bool = False,
     blocked_domains=None,
-    gopher: bool = False,
-    gopher_min_words: int = 50,
-    c4: bool = False,
-    decontaminate_against: DataFrame | None = None,
-    decontaminate_ngram: int = 13,
-    span_window: int = 0,
-    span_max_flagged: int = 0,
-    ppl_lm: DataFrame | None = None,
-    ppl_max: float = 0.0,
+    gates: Sequence[Callable[[DataFrame], DataFrame]] = (),
     partition_by: list[str] | None = None,
-    dedup_broadcast: bool = True,
 ) -> tuple[int, int]:
     """One resumable pipeline run: process only not-yet-committed urls,
     commit verdicts + per-partition lineage atomically.
@@ -623,38 +614,12 @@ def run_resumable_pipeline(
     of 'e'). Off by default: the reference corpus is already repaired
     upstream, and byte-parity with its fixtures is the default contract.
 
-    gopher=True composes the Gopher/MassiveText heuristic rule battery
-    (textstats.apply_gopher_gate — word-count/word-length bounds, symbol
-    and ellipsis ratios, bullet/ellipsis line fractions, alpha-word
-    fraction, required stopwords) after the puddin rules: kept docs
-    failing any rule flip to excl_type='gopher' before dedup sees them.
-    A pure-codegen projection — no extra shuffle or Python. Off by
-    default ('gopher' is a graft-axis label the reference doesn't emit);
-    gopher_min_words parameterizes the lower word bound.
-
-    c4=True composes the C4 cleaning battery (textstats.apply_c4_gate):
-    kept docs keep only lines ending in terminal punctuation with >=5
-    words and no javascript mention (clean_text is REWRITTEN to the
-    retained lines), and pages with code braces / 'lorem ipsum' / fewer
-    than 3 surviving sentences flip to excl_type='c4'. Also pure codegen,
-    off by default, and composes with gopher (both gates see only the
-    other's survivors; order: gopher first, C4 second — C4 rewrites text,
-    so gopher's ratios judge the original page).
-
-    decontaminate_against (a DataFrame with a `text` column — the eval/
-    benchmark suite) flips kept docs sharing any word n-gram
-    (decontaminate_ngram, default 13) with it to excl_type='contaminated'
-    BEFORE the near-dedup passes (dedup.apply_decontamination_gate; the
-    eval side broadcasts, document bodies never shuffle).
-
-    span_window > 0 applies the repeated-span hygiene gate
-    (dedup.apply_repeated_span_gate, ExactSubstr-style hashed windows of
-    span_window tokens): kept docs with more than span_max_flagged
-    duplicated spans flip to excl_type='dup_spans'. BATCH-LOCAL by
-    design: spans are compared within the current batch only (unlike the
-    minhash/SRP near-dedup passes, which index all prior batches) —
-    cross-batch span hygiene means running the repeated_spans operator
-    over the accumulated kept corpus as a separate job.
+    gates are the rule gates after the puddin rules, applied in list
+    order to the batch's verdicts before the near-dedup passes. Each is a
+    verdicts -> verdicts callable, typically an operators `apply_*_gate`
+    with its parameters bound (partial(apply_gopher_gate, min_words=10));
+    see those docstrings for each gate's rules and label. Order matters:
+    a gate sees only the previous gates' survivors.
 
     Returns (snapshot_id, n_new_docs); snapshot_id is -1 when there was
     nothing new (no empty commits — rerun after success is a no-op, the
@@ -712,55 +677,12 @@ def run_resumable_pipeline(
             )
     # with_timing: Arrow-batch stamps ride the UDF pass so the committed
     # lineage carries real per-partition started_at/finished_at/duration_s
-    # dedup_broadcast=False is the escape hatch for ingest batches whose
-    # duplicate fraction makes the loser set too large to broadcast
-    # (quality_pipeline docstring) — the windowed full-row dedup runs then
     verdicts = quality_pipeline(
         todo, num_partitions=num_partitions, with_timing=True,
-        blocked_domains=blocked_domains, dedup_broadcast=dedup_broadcast,
+        blocked_domains=blocked_domains,
     )
-    if gopher:
-        # cheapest gate first: a codegen-only flip that shrinks the kept
-        # set before the broadcast-join (decontaminate) and shuffle
-        # (near-dedup) stages do per-doc work
-        from puddin_spark.operators.textstats import apply_gopher_gate
-
-        verdicts = apply_gopher_gate(verdicts, min_words=gopher_min_words)
-    if c4:
-        # after gopher (which judges the original page), before the
-        # joins/shuffles: C4 rewrites surviving clean_text to its
-        # retained lines, so downstream dedup hashes the cleaned body
-        from puddin_spark.operators.textstats import apply_c4_gate
-
-        verdicts = apply_c4_gate(verdicts)
-    if ppl_lm is not None:
-        # CCNet-style quality flip against a PERSISTED target-domain LM
-        # (train-lm once on e.g. a Wikipedia sample, score every ingest
-        # batch): after the codegen gates, before decontaminate/span/
-        # near-dedup — its three broadcast probes are cheaper than the
-        # ngram-explode join stages it shrinks
-        from puddin_spark.operators.ngram_lm import apply_ppl_gate
-
-        verdicts = apply_ppl_gate(verdicts, ppl_lm, max_ppl=ppl_max)
-    if decontaminate_against is not None:
-        # train/test-leakage flip BEFORE the near-dedup passes: fewer kept
-        # docs reach the (costlier) encoding/shingling stages, and a doc
-        # that is both contaminated and a near-dup records the policy
-        # reason (contaminated) rather than the incidental one
-        from puddin_spark.operators.dedup import apply_decontamination_gate
-
-        verdicts = apply_decontamination_gate(
-            verdicts, decontaminate_against, n=decontaminate_ngram
-        )
-    if span_window:
-        # after the policy gates, before the sidecar passes — a doc that
-        # is both span-spam and a near-dup records the cheaper-to-compute
-        # reason, and fewer docs reach the shingling/encoding stages
-        from puddin_spark.operators.dedup import apply_repeated_span_gate
-
-        verdicts = apply_repeated_span_gate(
-            verdicts, window=span_window, max_flagged=span_max_flagged
-        )
+    for gate in gates:
+        verdicts = gate(verdicts)
     raw_verdicts = verdicts = verdicts.persist()
     try:
         n_new = verdicts.count()

@@ -37,49 +37,21 @@ def run_streaming_pipeline(
     store: SnapshotStore,
     checkpoint_dir: str,
     *,
-    num_partitions: int = 32,
     available_now: bool = True,
-    near_dedup: bool = False,
-    embedding_near_dedup: bool = False,
-    srp_planes: int | None = None,
-    srp_bands: int | None = None,
-    html_fallback: bool = False,
-    fix_mojibake: bool = False,
-    gopher: bool = False,
-    gopher_min_words: int = 50,
-    c4: bool = False,
-    ppl_lm_path: str | None = None,
-    ppl_max: float = 0.0,
+    **kwargs,
 ):
     """Continuous ingestion: each micro-batch runs the batch pipeline body
     and commits atomically. Returns the StreamingQuery (caller awaits).
-    near_dedup extends the replay-idempotence contract to fuzzy twins:
-    every micro-batch dedups against the minhash index of all prior
-    batches; embedding_near_dedup is the embedding-space analog over the
-    SRP index sidecar (see run_resumable_pipeline for both).
-    srp_planes/srp_bands thread through to the sidecar's persisted
-    _meta.json exactly as in the batch path — without them the FIRST
-    micro-batch would silently pin the defaults for the store's lifetime.
-    ppl_lm_path is the persisted KenLM-format LM parquet dir (a PATH, not
-    a DataFrame: each micro-batch re-reads it, so the file listing is
-    fresh and retraining the LM mid-stream takes effect next batch)."""
+    Every keyword but available_now is forwarded to run_resumable_pipeline
+    unchanged, so a stream takes exactly the batch options: near_dedup
+    extends the replay-idempotence contract to fuzzy twins (every
+    micro-batch dedups against the index of all prior batches), and the
+    gates run on every micro-batch. A gate that reads its inputs when
+    applied (the CLI's ppl gate reads the LM parquet) sees them fresh per
+    micro-batch, so retraining the LM mid-stream takes effect next batch."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ppl_lm = spark.read.parquet(ppl_lm_path) if ppl_lm_path else None
-        run_resumable_pipeline(
-            spark, batch_df, store, num_partitions=num_partitions,
-            near_dedup=near_dedup,
-            embedding_near_dedup=embedding_near_dedup,
-            srp_planes=srp_planes,
-            srp_bands=srp_bands,
-            html_fallback=html_fallback,
-            fix_mojibake=fix_mojibake,
-            gopher=gopher,
-            gopher_min_words=gopher_min_words,
-            c4=c4,
-            ppl_lm=ppl_lm,
-            ppl_max=ppl_max,
-        )
+        run_resumable_pipeline(spark, batch_df, store, **kwargs)
 
     writer = (
         stream_pages(spark, input_dir)

@@ -123,6 +123,7 @@ def test_cli_run_html_fallback_and_blocklist(tmp_path, spark):
     # every en row became a blocked verdict (synth domain is blocklisted),
     # including the WET-missing ones recovered via --html-fallback
     assert out["total_keep"] == 0
+    assert out["total_docs"] == v.count()
     assert v.filter("excl_type != 'blocked_domain'").count() == 0
     n_html = int((pdf["text"] == "").sum())
     assert n_html > 0
@@ -227,22 +228,52 @@ def test_cli_export_sharded_and_tempered(tmp_path, spark):
 def test_cli_stream_drains_and_resumes(tmp_path, spark):
     """stream: the availableNow drain through the real CLI — first run
     commits every drop present, a rerun with a new drop adds only the new
-    docs (stream checkpoint + store anti-joins), and --gopher/--c4 flags
-    parse and compose on the streaming path."""
+    docs (stream checkpoint + store anti-joins), and the rule-gate flags
+    parse and compose on the streaming path exactly as they do for `run`
+    over the same drop."""
+    import csv
+
     from puddin_spark.synth import SPARK_SCHEMA_DDL, gen_rows
 
     drops = tmp_path / "drops"
     drops.mkdir()
-    spark.createDataFrame(
-        gen_rows(0, 90, include_fixtures=False), SPARK_SCHEMA_DDL
-    ).coalesce(1).write.mode("append").parquet(str(drops))
+    pdf = gen_rows(0, 90, include_fixtures=False)
+    spark.createDataFrame(pdf, SPARK_SCHEMA_DDL).coalesce(1).write.mode(
+        "append"
+    ).parquet(str(drops))
+    # eval set = 20-word windows of the first pages' text
+    evals = tmp_path / "evals.csv"
+    with open(evals, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(["text"])
+        for text in pdf["text"][:5]:
+            w.writerow([" ".join(text.split()[4:24])])
+    gates = ["--gopher", "--gopher-min-words", "10", "--c4",
+             "--decontaminate", str(evals), "--dedup-spans", "8"]
     dest = str(tmp_path / "out")
     code, out = _run(
         ["stream", "-i", str(drops), "-d", dest, "--partitions", "2",
-         "--master", "local[4]", "--gopher", "--gopher-min-words", "10", "--c4"]
+         "--master", "local[4]", *gates]
     )
     assert code == 0 and out["ok"] and out["total_docs"] > 0
     n1 = out["total_docs"]
+    code, ran = _run(
+        ["run", "-i", str(drops), "-d", str(tmp_path / "ran"),
+         "--partitions", "2", "--master", "local[4]", *gates]
+    )
+    assert code == 0 and ran["total_docs"] == n1
+
+    def labels(d):
+        return {
+            (r.url, r.keep, r.excl_type)
+            for r in spark.read.parquet(*[
+                str(p) for p in (tmp_path / d / "verdicts").glob("snap-*/data")
+            ]).collect()
+        }
+
+    streamed = labels("out")
+    assert streamed == labels("ran")
+    assert any(e == "contaminated" for _, _, e in streamed)
     spark.createDataFrame(
         gen_rows(90, 120, include_fixtures=False), SPARK_SCHEMA_DDL
     ).coalesce(1).write.mode("append").parquet(str(drops))
@@ -390,6 +421,42 @@ def test_cli_score_ppl_requires_lm(tmp_path):
         ["score-ppl", "-d", str(tmp_path / "none"), "--master", "local[4]"]
     )
     assert code == 2 and "error" in out
+
+
+def test_cli_export_ppl_counts_unscored(tmp_path, spark):
+    """export --ppl-max: kept docs the ppl artifact does not score — absent
+    from it, or present with a null ppl — are excluded and counted in
+    ppl_unscored_excluded."""
+    from puddin_spark.synth import SPARK_SCHEMA_DDL, gen_rows
+
+    pages_dir = str(tmp_path / "pages")
+    spark.createDataFrame(
+        gen_rows(0, 40, include_fixtures=False), SPARK_SCHEMA_DDL
+    ).write.parquet(pages_dir)
+    dest = str(tmp_path / "out")
+    code, out = _run(
+        ["run", "-i", pages_dir, "-d", dest, "--partitions", "2",
+         "--master", "local[4]"]
+    )
+    assert code == 0 and out["total_keep"] > 2
+    kept = sorted(
+        r.url
+        for r in spark.read.parquet(*[
+            str(p) for p in (tmp_path / "out" / "verdicts").glob("snap-*/data")
+        ]).filter("keep").collect()
+    )
+    # hand-written artifact: kept[0] is missing, kept[1] has a null ppl
+    spark.createDataFrame(
+        [(u, 10, None if u == kept[1] else 5.0) for u in kept[1:]],
+        "url string, n_tokens int, ppl double",
+    ).write.parquet(f"{dest}/ppl")
+    code, ex = _run(
+        ["export", "-d", dest, "--master", "local[4]", "--partitions", "2",
+         "--splits", "train=1.0", "--ppl-max", "10"]
+    )
+    assert code == 0 and ex["ok"], ex
+    assert ex["ppl_unscored_excluded"] == 2
+    assert ex["splits"]["train"]["docs"] == len(kept) - 2
 
 
 def test_cli_compact_all_stores(tmp_path, spark):

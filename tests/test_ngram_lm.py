@@ -9,6 +9,7 @@ two-sided strategy the model gates use (golden from a Spark-free replay).
 from __future__ import annotations
 
 import math
+from functools import partial
 
 import pytest
 
@@ -201,10 +202,11 @@ def test_exploded_rows_do_not_carry_token_arrays(spark, corpus_df):
 
 
 def test_apply_ppl_gate_in_pipeline(spark, tmp_path):
-    """run_resumable_pipeline(ppl_lm=, ppl_max=): the CCNet configuration —
-    an LM trained on the in-domain kept corpus flips OOV-gibberish kept
-    docs to excl_type='ppl' at ingest, leaves in-domain verdicts
-    untouched, keeps the completeness invariant, and resumes as a no-op."""
+    """run_resumable_pipeline(gates=[apply_ppl_gate]): the CCNet
+    configuration — an LM trained on the in-domain kept corpus flips
+    OOV-gibberish kept docs to excl_type='ppl' at ingest, leaves in-domain
+    verdicts untouched, keeps the completeness invariant, and resumes as
+    a no-op."""
     import datetime as dt
 
     from pyspark.sql import functions as F
@@ -246,8 +248,7 @@ def test_apply_ppl_gate_in_pipeline(spark, tmp_path):
         pages.unionByName(gib),
         store,
         num_partitions=2,
-        ppl_lm=lm,
-        ppl_max=1e5,
+        gates=[partial(nlm.apply_ppl_gate, lm=lm, max_ppl=1e5)],
     )
     v = store.read(spark)
     flipped = v.filter("excl_type = 'ppl'")
@@ -268,7 +269,7 @@ def test_apply_ppl_gate_in_pipeline(spark, tmp_path):
     # rerun: resume no-op (the gate does not disturb the committed sets)
     snap2, n2 = run_resumable_pipeline(
         spark, pages.unionByName(gib), store, num_partitions=2,
-        ppl_lm=lm, ppl_max=1e5,
+        gates=[partial(nlm.apply_ppl_gate, lm=lm, max_ppl=1e5)],
     )
     assert (snap2, n2) == (-1, 0)
 

@@ -8,6 +8,7 @@ lineage counts.
 from __future__ import annotations
 
 import json
+from functools import partial
 from pathlib import Path
 
 import pytest
@@ -493,11 +494,11 @@ def test_toxicity_lexicon_metacharacters_safe(spark, monkeypatch):
 
 
 def test_gopher_flag_flips_failing_kept_docs(spark, tmp_path):
-    """run_resumable_pipeline(gopher=True): the committed verdicts equal
-    the gopher=False run with textstats.gopher_columns applied to its
-    kept set — failing docs flip to excl_type='gopher' with clean_text
-    nulled, everything else is untouched, completeness holds."""
-    from puddin_spark.operators.textstats import gopher_columns
+    """run_resumable_pipeline(gates=[apply_gopher_gate]): the committed
+    verdicts equal the ungated run with textstats.gopher_columns applied
+    to its kept set — failing docs flip to excl_type='gopher' with
+    clean_text nulled, everything else is untouched, completeness holds."""
+    from puddin_spark.operators.textstats import apply_gopher_gate, gopher_columns
     from puddin_spark.snapshots import SnapshotStore, run_resumable_pipeline
 
     pages = synth_pages_local(spark, 80).cache()
@@ -505,8 +506,8 @@ def test_gopher_flag_flips_failing_kept_docs(spark, tmp_path):
     b_store = SnapshotStore(tmp_path / "gophered")
     run_resumable_pipeline(spark, pages, a_store, num_partitions=2)
     run_resumable_pipeline(
-        spark, pages, b_store, num_partitions=2, gopher=True,
-        gopher_min_words=10,
+        spark, pages, b_store, num_partitions=2,
+        gates=[partial(apply_gopher_gate, min_words=10)],
     )
     va = a_store.read(spark)
     vb = b_store.read(spark)
@@ -530,14 +531,16 @@ def test_gopher_flag_flips_failing_kept_docs(spark, tmp_path):
 
 
 def test_dedup_spans_flag_flips_batch_local_span_twins(spark, tmp_path):
-    """run_resumable_pipeline(span_window=): kept docs sharing a
-    window-token span flip to excl_type='dup_spans' (max_flagged=0 drops
-    all members — keep-one salvage is trim_repeated_spans' job); docs
-    without shared spans are untouched; completeness holds. Span twins
-    are injected as prefix-shifted copies (different sha, so they survive
-    exact dedup; every original span present at shifted positions)."""
+    """run_resumable_pipeline(gates=[apply_repeated_span_gate]): kept
+    docs sharing a window-token span flip to excl_type='dup_spans'
+    (max_flagged=0 drops all members — keep-one salvage is
+    trim_repeated_spans' job); docs without shared spans are untouched;
+    completeness holds. Span twins are injected as prefix-shifted copies
+    (different sha, so they survive exact dedup; every original span
+    present at shifted positions)."""
     from pyspark.sql import functions as F
 
+    from puddin_spark.operators.dedup import apply_repeated_span_gate
     from puddin_spark.snapshots import SnapshotStore, run_resumable_pipeline
 
     base = synth_pages_local(spark, 40)
@@ -549,7 +552,8 @@ def test_dedup_spans_flag_flips_batch_local_span_twins(spark, tmp_path):
     pages = base.unionByName(twins).cache()
     store = SnapshotStore(tmp_path / "v")
     run_resumable_pipeline(
-        spark, pages, store, num_partitions=2, span_window=8
+        spark, pages, store, num_partitions=2,
+        gates=[partial(apply_repeated_span_gate, window=8)],
     )
     v = store.read(spark)
     plain_store = SnapshotStore(tmp_path / "plain")

@@ -3,6 +3,7 @@ FIXTURES.md invariant 4)."""
 from __future__ import annotations
 
 import json
+from functools import partial
 
 from puddin_spark.snapshots import SnapshotStore, run_resumable_pipeline
 from puddin_spark.synth import synth_pages_local
@@ -556,11 +557,12 @@ def test_pipeline_lineage_read_prunes_to_batch(spark, tmp_path):
 
 
 def test_resumable_pipeline_decontaminates(spark, tmp_path):
-    """run_resumable_pipeline(decontaminate_against=): kept docs sharing a
-    13-gram with the eval set land as excl_type='contaminated' verdicts
-    (completeness invariant intact — the doc is recorded, not vanished);
-    rerun stays a no-op (resume reads the committed url/sha sets, which
-    the gate does not alter)."""
+    """run_resumable_pipeline(gates=[apply_decontamination_gate]): kept
+    docs sharing a 13-gram with the eval set land as
+    excl_type='contaminated' verdicts (completeness invariant intact — the
+    doc is recorded, not vanished); rerun stays a no-op (resume reads the
+    committed url/sha sets, which the gate does not alter)."""
+    from puddin_spark.operators.dedup import apply_decontamination_gate
     from puddin_spark.synth import synth_pages_local
 
     store = SnapshotStore(tmp_path / "v")
@@ -576,7 +578,8 @@ def test_resumable_pipeline_decontaminates(spark, tmp_path):
     )
 
     snap, n = run_resumable_pipeline(
-        spark, pages, store, num_partitions=2, decontaminate_against=ev
+        spark, pages, store, num_partitions=2,
+        gates=[partial(apply_decontamination_gate, eval_docs=ev)],
     )
     v = store.read(spark)
     cont = {r.doc_id for r in v.filter("excl_type = 'contaminated'").collect()}
@@ -586,6 +589,7 @@ def test_resumable_pipeline_decontaminates(spark, tmp_path):
     assert v.count() == probe.read(spark).count()
     # rerun: no-op
     snap2, n2 = run_resumable_pipeline(
-        spark, pages, store, num_partitions=2, decontaminate_against=ev
+        spark, pages, store, num_partitions=2,
+        gates=[partial(apply_decontamination_gate, eval_docs=ev)],
     )
     assert (snap2, n2) == (-1, 0)

@@ -280,14 +280,14 @@ def test_streaming_embedding_near_dedup(spark, tmp_path):
 
 
 def test_streaming_ppl_gate(spark, tmp_path):
-    """ppl_lm_path threads the CCNet perplexity gate into the streaming
-    path: a drop containing OOV gibberish commits it as excl_type='ppl'
+    """An apply_ppl_gate gate that reads the persisted LM when applied
+    threads the CCNet perplexity gate into the streaming path: a drop containing OOV gibberish commits it as excl_type='ppl'
     while in-domain docs keep their plain-run verdicts."""
     import datetime as dt
 
     from pyspark.sql import functions as F
 
-    from puddin_spark.operators.ngram_lm import train_ngram_lm
+    from puddin_spark.operators.ngram_lm import apply_ppl_gate, train_ngram_lm
     from puddin_spark.snapshots import run_resumable_pipeline
     from puddin_spark.synth import synth_pages_local
 
@@ -320,7 +320,9 @@ def test_streaming_ppl_gate(spark, tmp_path):
     store = SnapshotStore(tmp_path / "store")
     q = run_streaming_pipeline(
         spark, str(d), store, str(tmp_path / "ckpt"), num_partitions=2,
-        ppl_lm_path=lm_dir, ppl_max=1e5,
+        gates=[lambda v: apply_ppl_gate(
+            v, spark.read.parquet(lm_dir), max_ppl=1e5
+        )],
     )
     q.awaitTermination(300)
     v = store.read(spark)
