@@ -1,9 +1,8 @@
 """Deduplication operators for web-scale corpora.
 
-Four families, scale-ranked:
-- exact: hash-groupBy on a digest — the shuffle moves 32-byte sha256 digests,
-  never document bodies, so it survives 10^12 docs (the reference's
-  drop_duplicates(subset='raw'), parse_pile.py:588, shuffled full text).
+Near-duplicate families (exact keep-first dedup is pipeline.dedup_first
+and quality_pipeline's narrow decision — the shuffle moves 32-byte sha256
+digests, never document bodies):
 - minhash + LSH banding: char-shingle -> k minhashes -> band keys -> bucket
   self-join -> exact-Jaccard verification. Built ENTIRELY from built-in
   expressions (md5/transform/aggregate) — no Python in the hot path, and the
@@ -26,16 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from puddin_spark.pipeline import flip_verdicts
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", order_cols: tuple = ("doc_id",)) -> DataFrame:
-    """Keep-first exact dedup via digest window. Only the digest shuffles."""
-    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(*order_cols)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def char_shingles(text_col: str, k: int = 5):
@@ -802,20 +791,6 @@ def resolve_duplicate_clusters(
         )
     finally:
         edges.unpersist()
-
-
-def near_dedup_keep_first(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Apply pair-graph resolution to a corpus: drop every near-dup cluster
-    member except the minimum id (keep-first, matching exact_dedup's
-    keep-min contract). Docs in no pair pass through untouched."""
-    losers = (
-        resolve_duplicate_clusters(pairs)
-        .filter("id != root")
-        .select(F.col("id").alias(id_col))
-    )
-    return df.join(losers, id_col, "left_anti")
 
 
 def minhash_index(

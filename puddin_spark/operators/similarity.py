@@ -20,19 +20,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _rebalanced(df: DataFrame) -> DataFrame:
+def rebalanced(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the input cannot split (single-chunk
-    parquet => one scan task): the ANN family's per-row work is interpreted
-    higher-order cosine folds, so a 1-task corpus serializes the whole
-    computation regardless of cluster width (guide section 2.5, input-skew
-    bullet). No-op whenever the scan already yields defaultParallelism
-    partitions — i.e. at any real multi-file scale.
+    parquet => one scan task): per-row-heavy work — the ANN family's
+    interpreted higher-order cosine folds, queries.read_table(rebalance=True)
+    callers — on a 1-task corpus serializes the whole computation regardless
+    of cluster width (guide section 2.5, input-skew bullet). No-op whenever
+    the scan already yields defaultParallelism partitions — i.e. at any real
+    multi-file scale.
 
     Caveat: the df.rdd partition-count probe finalizes the adaptive plan,
     which EXECUTES any upstream shuffle stages. Every in-repo caller hands
-    the ANN operators a bare scan (probe cost ~ms); a corpus derived
-    through joins/aggregations would pay its upstream stages twice —
-    materialize such a frame (or read it from storage) first."""
+    it a bare scan (probe cost ~ms); a corpus derived through
+    joins/aggregations would pay its upstream stages twice — materialize
+    such a frame (or read it from storage) first."""
     par = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         df = df.repartition(par)
@@ -72,7 +73,7 @@ def brute_force_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    c = _rebalanced(
+    c = rebalanced(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
     )
     scored = (
@@ -242,7 +243,7 @@ def train_centroids(
     # centroid assignment expression: rebalance once so the iterations
     # don't serialize on a single scan task (results are partitioning-
     # independent by design — integer fixed-point sums)
-    c = _rebalanced(
+    c = rebalanced(
         corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
     )
     for _ in range(iters):
@@ -305,7 +306,7 @@ def ivf_topk(
     # both coarse-quantization steps are shuffle-free projections over the
     # inlined centroid literals (nearest_cells_expr) — the corpus is never
     # shuffled for assignment, only for the probe equi-join below
-    c = _rebalanced(
+    c = rebalanced(
         corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
     )
     assigned = c.select(

@@ -8,28 +8,30 @@ Arrow-batched pandas UDFs (scrub+classify, segmentation), whose ordering is
 load-bearing (filter order defines labels) and which Catalyst correctly
 treats as a unit.
 
-Scale posture (north_rule, r6 shape):
+Scale posture:
 - language gate + column pruning happen BEFORE the UDF so parquet scans push
   the `lang` filter down and never ship `html` bytes into Python;
-- dedup keep-first decides on a NARROW proxy projection (sha2(text),
-  warc_ts, url — optimization guide section 8): the only hash shuffle in
-  the plan carries ~100-byte decision rows, the loser urls broadcast into
-  a left-anti join, and document bodies never cross an exchange at all;
+- keep-first exact dedup has one path: the decision runs on a NARROW
+  projection (sha2(text), warc_ts, url — optimization guide section 8), so
+  the only hash shuffle in the plan carries ~100-byte decision rows; the
+  loser urls broadcast into a left-anti join, and document bodies never
+  cross an exchange;
 - the heavy UDF then runs pre-shuffle on the scan's byte-balanced splits —
   uniform work units without a repartition (and ~cores Python tasks
   instead of 4x cores: each Python-stage task carries a fixed runner
-  handshake cost). The windowed full-row path (dedup_first /
-  dedup_broadcast=False) remains for corpora whose duplicate fraction is
-  too large for the loser set to broadcast; there, hot digests still do
-  NOT become a single-task straggler: Spark plans row_number()==1 as
-  WindowGroupLimit with a Partial (map-side) pass — see tests/test_plans.py.
+  handshake cost).
+
+Memory contract: the loser url set (one row per duplicate copy) is
+broadcast whole. There is no size guard and no windowed fallback, so a
+batch whose duplicate copies cannot fit in a broadcast must be split by
+the caller.
 """
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from puddin_spark.udfs import pii_scrub_udf, process_udf, segment_udf
+from puddin_spark.udfs import process_udf, segment_udf
 
 OUTPUT_COLS = [
     "doc_id", "url", "warc_ts", "lang", "text_sha", "clean_text", "keep", "excl_type",
@@ -74,19 +76,28 @@ def doc_id_col(url: Column | str = "url") -> Column:
     return F.sha2(F.col(url) if isinstance(url, str) else url, 256)
 
 
-def dedup_first(pages: DataFrame, key: Column | str | None = None) -> DataFrame:
+def dedup_first(
+    pages: DataFrame,
+    key: Column | str | None = None,
+    order: tuple[str, ...] = ("warc_ts", "url"),
+) -> DataFrame:
     """Deterministic keep-first exact dedup (reference: drop_duplicates on
-    raw, parse_pile.py:588). 'First' = min (warc_ts, url) — explicit order,
-    unlike pandas' implicit ingest order, so it's stable under parallelism.
+    raw, parse_pile.py:588). 'First' = min `order` (default (warc_ts, url))
+    — explicit order, unlike pandas' implicit ingest order, so it's stable
+    under parallelism.
 
     Default key is sha2(text, 256): the window's hash shuffle then moves
     32-byte digests instead of multi-KB document bodies — semantics
     identical (both first-wins on the same text equality), shuffle ~100x
     narrower at web scale. Pass key='text' only when an external system
-    must see the raw column as the partition expression."""
+    must see the raw column as the partition expression.
+
+    quality_pipeline does not call this: it makes the same decision on a
+    narrow projection. This full-row window is the completeness reference
+    (validation.validate_run) and the canonical-url dedup composition."""
     if key is None:
         key = F.sha2("text", 256)
-    w = Window.partitionBy(key).orderBy("warc_ts", "url")
+    w = Window.partitionBy(key).orderBy(*order)
     return (
         pages.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -97,43 +108,29 @@ def dedup_first(pages: DataFrame, key: Column | str | None = None) -> DataFrame:
 def quality_pipeline(
     pages: DataFrame,
     *,
-    selected_lang: str = "en",
-    dedup: bool = True,
-    num_partitions: int | None = None,
-    pii_scrub: bool = False,
+    num_partitions: int | None = None,  # ignored: perfbench/walk.py, bench.py pass it
     with_timing: bool = False,
-    html_fallback: bool = False,
     blocked_domains: DataFrame | None = None,
-    dedup_broadcast: bool = True,
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> per-document verdict table
-    (doc_id, url, warc_ts, lang, clean_text, keep, excl_type).
+    (doc_id, url, warc_ts, lang, clean_text, keep, excl_type) over the
+    English rows.
 
     Dropped docs keep their excl_type label (the reference's exclusions df,
     parse_pile.py:988-990) — keep and drop sides live in one table, split by
     the `keep` flag (SURVEY.md section 1.4).
 
-    num_partitions selects the scale-shaped dedup (r6): with it set, the
-    keep-first decision runs over a narrow digest projection and the loser
-    keys broadcast into a left-anti join — document bodies never shuffle and
-    the UDF runs pre-shuffle on the byte-balanced scan partitions (the value
-    itself no longer drives a repartition; scan splits already give uniform
-    work units). dedup_broadcast=False keeps num_partitions' branch but
-    falls back to the windowed full-row dedup — the escape hatch for
-    batches whose duplicate fraction is too large for the loser set to
-    broadcast (forced F.broadcast has no size guard by design; the caller
-    knows its batch shape).
+    Exact duplicates are removed keep-first, min (warc_ts, url) per text:
+    the decision runs over a narrow digest projection and the loser urls
+    broadcast into a left-anti join, so document bodies never shuffle and
+    the UDF runs pre-shuffle on the byte-balanced scan partitions. The
+    loser set is broadcast whole (module docstring: memory contract).
 
     with_timing appends a `proc_ts` column (epoch seconds stamped per Arrow
     batch INSIDE the same Python pass as the scrub/classify UDF) so
     lineage_table can report per-partition started_at/finished_at/duration_s
     — the reference's slice timing lineage. Drop it before publishing
     (run_resumable_pipeline does) to keep the verdict schema contract.
-
-    html_fallback extracts text from the html:binary column for rows whose
-    text is null/empty (JVM-only chain, operators/html.py). Off by default:
-    the reference ingests pre-extracted Pile text, and byte-parity is
-    defined on that column.
 
     blocked_domains (a DataFrame with a `domain` column of registered
     domains) records matching docs as verdict rows with
@@ -142,24 +139,20 @@ def quality_pipeline(
     keep ∪ drop) survives, and validation needs no allowlist. The marker
     join broadcasts the blocklist; blocked rows ship an empty string
     through the scrub UDF (their Python cost is ~zero) and dedup still
-    runs on real content, but the dedup window orders unblocked rows
+    runs on real content, but the keep-first decision orders unblocked rows
     first: a blocked copy can never shadow an unblocked twin, so content
     whose only other copy sat on a blocked domain still reaches the keep
     side (the blocked twin then drops as a dedup loser like any other
     exact duplicate — reference drop_duplicates semantics).
-    """
-    if html_fallback:
-        # rows whose WET text is absent fall back to extracting from the
-        # raw html (operators/html.py). The extraction chain is pure JVM
-        # expressions evaluated in this projection, BEFORE the prune below
-        # — the html bytes still never reach the Python workers.
-        from puddin_spark.operators.html import with_html_fallback
 
-        pages = with_html_fallback(pages)
-    df = pages.filter(F.col("lang") == selected_lang)
+    Callers that need the html fallback apply operators.html.
+    with_html_fallback to `pages` first (run_resumable_pipeline does).
+    """
+    df = pages.filter(F.col("lang") == "en")
     # prune early: html bytes never reach the Python workers
     df = df.select("url", "warc_ts", "lang", "text")
     blocked = F.lit(False)
+    order, carried = [], []
     if blocked_domains is not None:
         from puddin_spark.operators.urls import url_domain, url_host
 
@@ -174,77 +167,38 @@ def quality_pipeline(
             .drop("_dom")
         )
         blocked = F.coalesce(F.col("_blk"), F.lit(False))
-    if dedup and num_partitions and dedup_broadcast:
-        # Decide with small rows, never move the big rows (optimization
-        # guide section 8): the keep-first decision depends only on
-        # (sha2(text), warc_ts, url) — ~100 bytes/doc — so the dedup window
-        # runs over that narrow projection (a second column-pruned scan of
-        # the source) and emits just the LOSER keys (duplicate copies to
-        # drop, typically a small fraction of the corpus). The document
-        # bodies are then never shuffled at all: losers broadcast into a
-        # left-anti join against the scan, and the UDF runs pre-shuffle on
-        # the byte-balanced scan partitions (which also cuts the Python
-        # task count from num_partitions to ~cores — each Python-stage task
-        # carries a fixed runner handshake cost, measured ~7 ms).
-        # vs the previous shape (repartition(num_partitions, digest) +
-        # full-row window): one full-corpus body shuffle removed; the cost
-        # is re-reading the pruned columns once.  At a scale where the
-        # loser set cannot broadcast (extreme duplication), pass
-        # dedup_broadcast=False (or num_partitions=None) for the windowed
-        # full-row path.
-        # Correctness note: the anti-join keys on url ALONE — the pipeline
-        # contract has url unique per input row (doc_id = sha2(url); the
-        # completeness invariant is "every url exactly once"), under which
-        # this is exactly the old window's keep-1 semantics, including rows
-        # with null warc_ts (a composite (url, warc_ts) key would never
-        # match a null ts in the anti-join and dup copies would survive —
-        # caught in review). Inputs that violate the contract (two rows
-        # sharing a url) dedup at url granularity here where the old window
-        # deduped at row granularity.
-        order = [blocked.cast("int")] if blocked_domains is not None else []
-        w = Window.partitionBy("_dig").orderBy(*order, "warc_ts", "url")
-        losers = (
-            df.select(F.sha2("text", 256).alias("_dig"), "warc_ts", "url",
-                      *([F.col("_blk")] if blocked_domains is not None else []))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") > 1)
-            .select("url")
-        )
-        df = df.join(F.broadcast(losers), ["url"], "left_anti")
-    elif dedup:
-        if blocked_domains is not None:
-            w = Window.partitionBy(F.sha2("text", 256)).orderBy(
-                blocked.cast("int"), "warc_ts", "url"
-            )
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        else:
-            df = dedup_first(df)
-    elif num_partitions:
-        # hash the url itself: repartitioning on a pre-bucketed pmod value
-        # would re-hash num_partitions distinct values into num_partitions
-        # partitions (balls-in-bins: ~37% empty, stragglers elsewhere)
-        df = df.repartition(num_partitions, F.col("url"))
+        order, carried = [blocked.cast("int")], [F.col("_blk")]
+    # Decide with small rows, never move the big rows (optimization guide
+    # section 8): the keep-first decision depends only on (sha2(text),
+    # warc_ts, url) — ~100 bytes/doc — so the window runs over that narrow
+    # projection (a second column-pruned scan of the source) and emits just
+    # the LOSER urls (duplicate copies to drop, typically a small fraction
+    # of the corpus). Losers broadcast into a left-anti join against the
+    # scan; the bodies never shuffle.
+    # Correctness note: the anti-join keys on url ALONE — the pipeline
+    # contract has url unique per input row (doc_id = sha2(url); the
+    # completeness invariant is "every url exactly once"), under which this
+    # is exactly a full-row window's keep-1 semantics, including rows with
+    # null warc_ts (a composite (url, warc_ts) key would never match a null
+    # ts in the anti-join and dup copies would survive). Inputs that
+    # violate the contract (two rows sharing a url) dedup at url
+    # granularity.
+    w = Window.partitionBy("_dig").orderBy(*order, "warc_ts", "url")
+    losers = (
+        df.select(F.sha2("text", 256).alias("_dig"), "warc_ts", "url", *carried)
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") > 1)
+        .select("url")
+    )
+    df = df.join(F.broadcast(losers), ["url"], "left_anti")
     # blocked rows ship '' through the UDF: the battery result is ignored
     # for them below, so don't pay Python for bytes that can't matter
-    udf_text = (
-        F.when(blocked, F.lit("")).otherwise(F.col("text"))
-        if blocked_domains is not None
-        else F.col("text")
-    )
+    udf_text = F.when(blocked, F.lit("")).otherwise(F.col("text"))
     out = df.withColumn("_res", process_udf(udf_text))
     if with_timing:
         from puddin_spark.udfs import batch_ts_udf
 
         out = out.withColumn("_pts", batch_ts_udf(F.col("text")))
-    clean = F.col("_res.clean_text")
-    if pii_scrub:
-        # graft-axis PII/toxicity masking AFTER the parity scrub (rules
-        # docstring; off by default so reference byte-identity holds)
-        clean = pii_scrub_udf(clean)
     result = out.select(
         doc_id_col().alias("doc_id"),
         "url",
@@ -254,7 +208,7 @@ def quality_pipeline(
         # against already-committed documents without storing bodies
         F.sha2("text", 256).alias("text_sha"),
         F.when(blocked, F.lit(None).cast("string"))
-        .otherwise(clean)
+        .otherwise(F.col("_res.clean_text"))
         .alias("clean_text"),
         (F.col("_res.excl_type").isNull() & ~blocked).alias("keep"),
         F.when(blocked, F.lit("blocked_domain"))

@@ -55,11 +55,7 @@ def read_table(
     rebalance). No-op whenever the scan already yields defaultParallelism
     splits — i.e. at any real multi-file scale."""
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if rebalance:
-        par = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
-    return df
+    return similarity.rebalanced(df) if rebalance else df
 
 
 # --- shared SQL fragments (valid in BOTH Spark SQL and DuckDB) ---
@@ -253,7 +249,7 @@ def q_pipeline_verdicts(spark, sf_dir):
         F.col("t").alias("text"),
         "lang",
     )
-    v = quality_pipeline(pages, num_partitions=8)
+    v = quality_pipeline(pages)
     return v.select(
         "url",
         "keep",
@@ -285,7 +281,7 @@ def q_dedup_exact_first(spark, sf_dir):
     dup = d.filter(F.col("doc_id") % 5 == 0).select(
         (F.col("doc_id") + 2000000).alias("doc_id"), "text"
     )
-    return dedup.exact_dedup(d.unionByName(dup), "text", ("doc_id",)).select("doc_id")
+    return dedup_first(d.unionByName(dup), order=("doc_id",)).select("doc_id")
 
 
 O_DEDUP_EXACT_FIRST = """

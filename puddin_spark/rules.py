@@ -310,9 +310,9 @@ def segment_sentences(clean_text: str) -> list[str]:
 
 
 # --- PII / toxicity scrub (graft axis; north_rule "regex PII/toxicity-scrub
-# pipeline"). Applied AFTER the reference-parity scrub so byte-identity on
-# reference fixtures is preserved when the flag is off (SURVEY.md section 7.1
-# step 4). Patterns are RE2-safe (no backrefs/lookaround) so the DuckDB
+# pipeline"). Composed AFTER the reference-parity scrub (udfs.pii_scrub_udf
+# over clean_text; quality_pipeline never applies it) so byte-identity on
+# reference fixtures is preserved (SURVEY.md section 7.1 step 4). Patterns are RE2-safe (no backrefs/lookaround) so the DuckDB
 # oracle can reproduce them exactly. ---
 
 PII_RULES: list[tuple[str, re.Pattern]] = [

@@ -642,8 +642,8 @@ def run_resumable_pipeline(
     # one scan of the commit history serves both anti-joins (url, then
     # text digest). The digest join is the global keep-first dedup across
     # runs: a url whose text body was already processed under another url in
-    # a PRIOR commit never reprocesses (the within-run dedup_first only sees
-    # the current todo set) — without it, urls shadowed by an in-run
+    # a PRIOR commit never reprocesses (quality_pipeline's keep-first only
+    # sees the current todo set) — without it, urls shadowed by an in-run
     # duplicate would be rediscovered on every rerun and resume would not be
     # idempotent.
     if html_fallback:
@@ -678,8 +678,7 @@ def run_resumable_pipeline(
     # with_timing: Arrow-batch stamps ride the UDF pass so the committed
     # lineage carries real per-partition started_at/finished_at/duration_s
     verdicts = quality_pipeline(
-        todo, num_partitions=num_partitions, with_timing=True,
-        blocked_domains=blocked_domains,
+        todo, with_timing=True, blocked_domains=blocked_domains
     )
     for gate in gates:
         verdicts = gate(verdicts)

@@ -116,7 +116,7 @@ def gen_rows(
                 lang = "en"
             elif htmlonly_every and jx % htmlonly_every == 9:
                 # WET text missing; only the raw html carries the content
-                # (exercises quality_pipeline(html_fallback=True))
+                # (exercises operators.html.with_html_fallback)
                 body = _prose(jx, 4).replace("\n", " ")
                 urls.append(
                     f"https://synth.example.org/h/{_h(ix, 'url'):016x}"

@@ -291,27 +291,16 @@ def test_describe_approx_sketch_matches_exact_within_rank_error(spark):
 
 def test_resolve_duplicate_clusters_transitive(spark):
     """Chained pairs resolve to one cluster (transitivity) with min-id
-    roots; keep-first drops exactly the non-root members."""
-    from puddin_spark.operators.dedup import (
-        near_dedup_keep_first, resolve_duplicate_clusters,
-    )
+    roots."""
+    from puddin_spark.operators.dedup import resolve_duplicate_clusters
 
     pairs = spark.createDataFrame(
-        # chain 5-3-9-7 (one cluster, root 3); pair (20, 21); isolated 30
+        # chain 5-3-9-7 (one cluster, root 3); pair (20, 21)
         [(5, 3), (9, 5), (9, 7), (20, 21)],
         "id_a bigint, id_b bigint",
     )
     roots = {r.id: r.root for r in resolve_duplicate_clusters(pairs).collect()}
     assert roots == {3: 3, 5: 3, 7: 3, 9: 3, 20: 20, 21: 20}
-
-    corpus = spark.createDataFrame(
-        [(i, f"t{i}") for i in (3, 5, 7, 9, 20, 21, 30)],
-        "doc_id bigint, text string",
-    )
-    kept = sorted(
-        r.doc_id for r in near_dedup_keep_first(corpus, pairs).collect()
-    )
-    assert kept == [3, 20, 30]  # roots survive; untouched docs pass through
 
 
 def test_resolve_clusters_diameter_bound(spark):

@@ -64,17 +64,6 @@ def test_dedup_drops_null_warc_ts_losers(spark):
         assert got == {"https://a.example/1", "https://a.example/3"}, (kwargs, got)
 
 
-def test_dedup_broadcast_escape_hatch_is_equivalent(spark):
-    """dedup_broadcast=False (the windowed full-row fallback for batches
-    whose loser set cannot broadcast) must produce the identical verdict
-    table as the default broadcast-anti-join path."""
-    pages = synth_pages_local(spark, 150)
-    fast = quality_pipeline(pages, num_partitions=4)
-    safe = quality_pipeline(pages, num_partitions=4, dedup_broadcast=False)
-    assert fast.exceptAll(safe).count() == 0
-    assert safe.exceptAll(fast).count() == 0
-
-
 def test_fixture_label_parity_e2e(verdicts):
     rows = verdicts.filter(F.col("url").startswith("https://fixtures")).collect()
     # fixture texts duplicated across sample-1/sample-2 dedup to the first
@@ -306,15 +295,17 @@ def test_committed_lineage_carries_timing(spark, tmp_path):
 
 def test_html_fallback_recovers_wet_missing_rows(spark):
     """Rows with empty text + populated html join the corpus only under
-    html_fallback=True, with the extracted text flowing through the same
+    with_html_fallback, with the extracted text flowing through the same
     scrub/classify cascade (operators/html.py stays JVM-side)."""
+    from puddin_spark.operators.html import with_html_fallback
+
     pages = synth_pages_local(spark, 150, include_fixtures=False, htmlonly_every=13)
     wet_missing = pages.filter("text = '' and html is not null")
     n_missing = wet_missing.count()
     assert n_missing > 0
 
     off = quality_pipeline(pages, num_partitions=4)
-    on = quality_pipeline(pages, num_partitions=4, html_fallback=True)
+    on = quality_pipeline(with_html_fallback(pages), num_partitions=4)
     urls = [r.url for r in wet_missing.select("url").collect()]
 
     got_off = off.filter(F.col("url").isin(urls)).collect()
@@ -417,7 +408,7 @@ def test_blocked_copy_never_shadows_unblocked_twin(spark):
         "url string, warc_ts string, html binary, text string, lang string",
     ).withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
     blocked = spark.createDataFrame([("site2.com",)], "domain string")
-    for parts in (None, 4):  # both dedup branches
+    for parts in (None, 4):  # num_partitions has no effect; both must hold
         v = quality_pipeline(pages, num_partitions=parts, blocked_domains=blocked)
         got = {r["url"]: r for r in v.collect()}
         assert "https://ok.com/dup" in got, "unblocked twin lost its verdict row"

@@ -3,6 +3,7 @@ must actually appear in the executed plan (a scan that reads all columns for
 a 2-column projection is wrong even if results match)."""
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from puddin_spark.plans import executed_plan as _plan
@@ -53,7 +54,7 @@ def test_exact_dedup_shuffles_digest_not_body(spark):
 
 
 def test_dedup_first_default_partitions_on_digest(spark, tmp_path):
-    """The pipeline's default keep-first window must hash-partition on the
+    """dedup_first's default keep-first window must hash-partition on the
     sha2(text) projection, not the raw text column — at 10^12 docs the
     difference is shuffling 32-byte digests vs multi-KB bodies."""
     import re
@@ -95,18 +96,27 @@ def test_reference_ids_no_single_partition_sort(spark):
     assert "SinglePartition" not in plan
 
 
-def test_pipeline_body_never_shuffles(spark):
+@pytest.mark.parametrize("case", ["num_partitions", "no_keywords", "blocked_domains"])
+def test_pipeline_body_never_shuffles(spark, case):
     """r6 dedup shape (guide section 8): the keep-first decision runs over a
     narrow (digest, warc_ts, url) projection, losers broadcast into a
     left-anti join, and the document bodies NEVER cross an exchange — the
     only hash exchange in the plan is the small decision shuffle, and the
-    Python UDF runs pre-shuffle on the scan partitions."""
+    Python UDF runs pre-shuffle on the scan partitions. Every call shape
+    takes this one path."""
     import re
 
     from puddin_spark.pipeline import quality_pipeline
     from puddin_spark.synth import synth_pages_local
 
-    v = quality_pipeline(synth_pages_local(spark, 100), num_partitions=4)
+    kwargs = {
+        "num_partitions": dict(num_partitions=4),
+        "no_keywords": {},
+        "blocked_domains": dict(
+            blocked_domains=spark.createDataFrame([("site2.com",)], "domain string")
+        ),
+    }[case]
+    v = quality_pipeline(synth_pages_local(spark, 100), **kwargs)
     plan = _plan(v)
     # dedup is a broadcast anti-join of the loser keys
     assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan[:2000]

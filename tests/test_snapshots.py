@@ -23,7 +23,7 @@ def test_resume_processes_only_new_docs(spark, tmp_path):
 
     total = store.read(spark)
     en_urls = pages.filter("lang = 'en'").select("url").distinct().count()
-    # dedup_first collapses duplicate texts *within* a run; across runs the
+    # keep-first dedup collapses duplicate texts *within* a run; across runs the
     # union is keyed by url, still exactly once per processed url
     assert total.select("url").distinct().count() == total.count()
     assert n0 + n1 == total.count()
