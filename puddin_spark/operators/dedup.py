@@ -3,10 +3,13 @@
 Near-duplicate families (exact keep-first dedup is pipeline.dedup_first
 and quality_pipeline's narrow decision — the shuffle moves 32-byte sha256
 digests, never document bodies):
-- minhash + LSH banding: char-shingle -> k minhashes -> band keys -> bucket
-  self-join -> exact-Jaccard verification. Built ENTIRELY from built-in
-  expressions (md5/transform/aggregate) — no Python in the hot path, and the
-  self-join key (band hash) is broadcast-free and AQE-skew-splittable.
+- minhash + LSH banding: shingles -> k minhashes -> band keys -> candidate
+  pairs -> exact-Jaccard verification. Built ENTIRELY from built-in
+  expressions (md5/transform/aggregate) — no Python in the hot path. Batch
+  pairing (minhash_lsh_pairs) collects each band bucket's ids in one
+  aggregation; incremental pairing goes through bucket_pairs, the one
+  new/committed bucket self-join the incremental minhash and SRP
+  generators share.
 - simhash: 64-bit token-hash sign-aggregate fingerprint; Hamming-adjacent
   buckets for near-dup candidates.
 - n-gram Jaccard: exact word-n-gram overlap for candidate pairs (the
@@ -90,16 +93,63 @@ def _band_key_cols(num_bands: int, band_size: int, hash_impl: str) -> list:
     ]
 
 
-def _cap_buckets(bands: DataFrame, max_bucket: int | None) -> DataFrame:
-    """Drop hot band buckets from pair generation (see minhash_lsh_pairs);
-    window count over the join key — one pass, same shuffle the join needs."""
+def _cap_buckets(
+    rows: DataFrame, keys: list[str], max_bucket: int | None
+) -> DataFrame:
+    """Drop hot buckets (more than max_bucket rows per `keys` value) from
+    pair generation (see minhash_lsh_pairs); window count over the join
+    key — one pass, same shuffle the join needs. The one hot-bucket cap
+    of every max_bucket-taking LSH pair generator."""
     if max_bucket is None:
-        return bands
-    wb = Window.partitionBy("band_ix", "band_key")
+        return rows
     return (
-        bands.withColumn("_bn", F.count("*").over(wb))
+        rows.withColumn("_bn", F.count("*").over(Window.partitionBy(*keys)))
         .filter(F.col("_bn") <= max_bucket)
         .drop("_bn")
+    )
+
+
+def bucket_pairs(
+    new_rows: DataFrame,
+    committed_rows: DataFrame | None,
+    keys: list[str],
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """Candidate pairs from a bucket self-join: (id, *keys) bucket rows of
+    a new batch and, for INCREMENTAL pairing, of the committed corpus in
+    (committed_rows=None pairs the batch alone); one (id_a, id_b, *keys,
+    committed_side) row per id_a < id_b pair sharing a bucket with at
+    least one NEW endpoint out — never committed-vs-committed.
+    committed_side is true when one endpoint is committed (the keep-first
+    policy drops the NEW doc then). A pair sharing several buckets yields
+    one row per bucket; callers collapse them.
+
+    Plan shape: only the committed side semi-joins against the batch's
+    bucket keys (the shuffle carries committed rows only for keys the batch
+    produced, and a key-partitioned committed table prunes files); the cap
+    (_cap_buckets) counts each surviving bucket's full membership, so a
+    capped incremental run drops exactly the buckets a capped full-corpus
+    run drops; then one self-join on the keys. Verification (exact
+    Jaccard / cosine) is the caller's, on the surviving candidates only."""
+    rows = new_rows.select("id", *keys, F.lit(True).alias("_new"))
+    if committed_rows is not None:
+        rows = rows.unionByName(
+            committed_rows.select("id", *keys)
+            .join(rows.select(*keys).distinct(), keys, "left_semi")
+            .withColumn("_new", F.lit(False))
+        )
+    rows = _cap_buckets(rows, keys, max_bucket)
+    a = rows.select(F.col("id").alias("id_a"), F.col("_new").alias("new_a"), *keys)
+    b = rows.select(F.col("id").alias("id_b"), F.col("_new").alias("new_b"), *keys)
+    return (
+        a.join(b, keys)
+        .filter((F.col("id_a") < F.col("id_b")) & (F.col("new_a") | F.col("new_b")))
+        .select(
+            "id_a",
+            "id_b",
+            *keys,
+            (~(F.col("new_a") & F.col("new_b"))).alias("committed_side"),
+        )
     )
 
 
@@ -186,6 +236,13 @@ def minhash_lsh_pairs(
     member of that bucket — revisit such buckets with exact grouping
     instead). None = no cap (exact LSH semantics; what the oracle-paired
     gate uses).
+
+    Memory contract: pairs come from bucket-collect, so ONE band bucket's
+    member ids form ONE collect_list row, and every row its first explode
+    emits carries that whole array — a bucket of m members costs O(m) ids
+    in a single row and O(m^2) emitted pairs in one task. max_bucket=None
+    leaves both unbounded: on corpora where mass-duplicated text can form
+    a hot bucket, pass a cap (or run exact dedup first).
     """
     num_bands = num_hashes // band_size
     sh = (
@@ -206,7 +263,7 @@ def minhash_lsh_pairs(
             F.array(*_band_key_cols(num_bands, band_size, hash_impl))
         ).alias("band_ix", "band_key"),
     )
-    bands = _cap_buckets(bands, max_bucket)
+    bands = _cap_buckets(bands, ["band_ix", "band_key"], max_bucket)
     # bucket-collect pair generation (r6): ONE shuffle (the same groupBy key
     # the old self-join needed) collects each bucket's member ids, and pairs
     # stream out of a two-level explode. The band/signature subtree is
@@ -872,9 +929,9 @@ def incremental_minhash_pairs(
     NEW doc in that case (the committed doc already shipped), mirroring the
     store's exact text_sha resume dedup.
 
-    Plan shape: band keys for BOTH sides, the committed side's bands join
-    against only the NEW side's band keys (a semi-restricted equi-join —
-    the shuffle carries committed (id, band) rows only for keys the batch
+    Plan shape: bucket_pairs over the (id, band_ix, band_key) rows — only
+    the committed side's bands semi-join against the NEW side's band keys
+    (the shuffle carries committed (id, band) rows only for keys the batch
     actually produced); shingles rejoin for exact verification on the
     surviving candidates only.
 
@@ -886,53 +943,26 @@ def incremental_minhash_pairs(
     per committed document per batch. Results are identical: a committed
     band row outside the batch's prefix set cannot equal any new band key.
     """
+    kw = dict(num_hashes=num_hashes, band_size=band_size, hash_impl=hash_impl)
     if new_bands is None:
-        new_bands = band_table(
-            new_index, num_hashes=num_hashes, band_size=band_size, hash_impl=hash_impl
-        )
-    bands = new_bands.select("id", "band_ix", "band_key").withColumn(
-        "_new", F.lit(True)
-    )
-    if committed_index is not None:
+        new_bands = band_table(new_index, **kw)
+    sh = new_index.select("id", "sh")
+    if committed_index is None:
+        committed_bands = None
+    else:
         if committed_bands is None:
-            committed_bands = band_table(
-                committed_index,
-                num_hashes=num_hashes,
-                band_size=band_size,
-                hash_impl=hash_impl,
-            )
-        bands = bands.unionByName(
-            committed_bands.select("id", "band_ix", "band_key").withColumn(
-                "_new", F.lit(False)
-            )
-        )
-    both = (
-        new_index.select("id", "sh").unionByName(committed_index.select("id", "sh"))
-        if committed_index is not None
-        else new_index
-    )
-    new_keys = bands.filter("_new").select("band_ix", "band_key").distinct()
-    bands = bands.join(new_keys, ["band_ix", "band_key"], "left_semi")
-    bands = _cap_buckets(bands, max_bucket)
-    a = bands.select(
-        F.col("id").alias("id_a"), F.col("_new").alias("new_a"), "band_ix", "band_key"
-    )
-    b = bands.select(
-        F.col("id").alias("id_b"), F.col("_new").alias("new_b"), "band_ix", "band_key"
-    )
+            committed_bands = band_table(committed_index, **kw)
+        sh = sh.unionByName(committed_index.select("id", "sh"))
     # no dropDuplicates: _verify_jaccard regroups by (id_a, id_b,
     # committed_side) and committed_side is a pure function of the endpoint
     # ids, so multi-band duplicates collapse in the aggregation it runs
     # anyway (see minhash_lsh_pairs)
-    cand = (
-        a.join(b, ["band_ix", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.col("new_a") | F.col("new_b"))  # at least one new endpoint
-        .select("id_a", "id_b", (~(F.col("new_a") & F.col("new_b"))).alias("committed_side"))
+    cand = bucket_pairs(
+        new_bands, committed_bands, ["band_ix", "band_key"], max_bucket
+    ).select("id_a", "id_b", "committed_side")
+    return _verify_jaccard(cand, sh, jaccard_threshold).select(
+        "id_a", "id_b", "jaccard", "committed_side"
     )
-    return _verify_jaccard(
-        cand, both.select("id", "sh"), jaccard_threshold
-    ).select("id_a", "id_b", "jaccard", "committed_side")
 
 
 def duplicate_cluster_weights(

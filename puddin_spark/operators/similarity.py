@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from puddin_spark.operators.dedup import bucket_pairs
+
 
 def rebalanced(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the input cannot split (single-chunk
@@ -58,6 +60,14 @@ def _norm(a: str):
 
 def cosine_col(a: str, b: str):
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _with_vectors(cand: DataFrame, vecs: DataFrame) -> DataFrame:
+    """Candidate pairs + v_a/v_b: the (id, v) rows rejoin each endpoint
+    AFTER bucket_pairs, so the bucket self-join never carries vectors."""
+    return cand.join(
+        vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a"
+    ).join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")), "id_b")
 
 
 def brute_force_topk(
@@ -139,23 +149,12 @@ def srp_candidate_pairs(
     max_bucket drops degenerate buckets from pair generation (a bucket of m
     vectors contributes m^2/2 pairs — see minhash_lsh_pairs for the scale
     rationale); None keeps exact LSH semantics."""
-    b = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        srp_bucket_col(vec_col, num_planes).alias("bucket"),
+    rows = df.select(
+        F.col(id_col).alias("id"), srp_bucket_col(vec_col, num_planes).alias("bucket")
     )
-    if max_bucket is not None:
-        wb = Window.partitionBy("bucket")
-        b = (
-            b.withColumn("_bn", F.count("*").over(wb))
-            .filter(F.col("_bn") <= max_bucket)
-            .drop("_bn")
-        )
-    a = b.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"), "bucket")
-    c = b.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"), "bucket")
+    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     return (
-        a.join(c, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _with_vectors(bucket_pairs(rows, None, ["bucket"], max_bucket), vecs)
         .withColumn("cos_sim", F.round(cosine_col("v_a", "v_b"), 6))
         .filter(F.col("cos_sim") >= min_cos)
         .select("id_a", "id_b", "bucket", "cos_sim")
@@ -362,53 +361,25 @@ def incremental_srp_pairs(
     re-pairing the corpus per batch is the non-starter). Inputs are
     srp_index frames built with the same num_planes. This single-bucket
     formulation is the ORACLE-PARITY surface (the incremental_srp_pairs
-    gate replays it in SQL); the pipeline sidecar uses the banded + numpy
-    incremental_srp_band_pairs below, whose collision/cost behavior at
-    scale is measured in BASELINE.md.
+    gate replays it in SQL); the pipeline sidecar pairs banded SRP keys
+    with the numpy kernels committed_srp_flip_ids and
+    srp_batch_pairs_matmul, whose collision/cost behavior at scale is
+    measured in BASELINE.md.
 
-    Plan shape: the committed side semi-joins against only the BATCH's
-    bucket keys (so a bucket-partitioned committed index prunes files);
-    vectors rejoin for exact-cosine verification on surviving candidates
-    only. Unlike minhash there is one bucket per vector, so no candidate
-    dedup pass is needed. Returns (id_a, id_b, bucket, cos_sim,
-    committed_side) where committed_side marks new-vs-committed pairs (the
-    keep-first ingest policy drops the NEW doc in that case)."""
-    new_b = new_index.select("id", "bucket").withColumn("_new", F.lit(True))
+    Plan shape: dedup.bucket_pairs — the committed side semi-joins against
+    only the BATCH's bucket keys (so a bucket-partitioned committed index
+    prunes files); vectors rejoin for exact-cosine verification on
+    surviving candidates only. Unlike minhash there is one bucket per
+    vector, so no candidate dedup pass is needed. Returns (id_a, id_b,
+    bucket, cos_sim, committed_side) where committed_side marks
+    new-vs-committed pairs (the keep-first ingest policy drops the NEW doc
+    in that case)."""
     vecs = new_index.select("id", "v")
-    b = new_b
     if committed_index is not None:
-        new_keys = new_b.select("bucket").distinct()
-        b = new_b.unionByName(
-            committed_index.select("id", "bucket")
-            .join(new_keys, "bucket", "left_semi")
-            .withColumn("_new", F.lit(False))
-        )
         vecs = vecs.unionByName(committed_index.select("id", "v"))
-    if max_bucket is not None:
-        wb = Window.partitionBy("bucket")
-        b = (
-            b.withColumn("_bn", F.count("*").over(wb))
-            .filter(F.col("_bn") <= max_bucket)
-            .drop("_bn")
-        )
-    a = b.select(F.col("id").alias("id_a"), F.col("_new").alias("new_a"), "bucket")
-    c = b.select(F.col("id").alias("id_b"), F.col("_new").alias("new_b"), "bucket")
-    cand = (
-        a.join(c, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.col("new_a") | F.col("new_b"))
-        .select(
-            "id_a",
-            "id_b",
-            "bucket",
-            (~(F.col("new_a") & F.col("new_b"))).alias("committed_side"),
-        )
-    )
+    cand = bucket_pairs(new_index, committed_index, ["bucket"], max_bucket)
     return (
-        cand.join(
-            vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a"
-        )
-        .join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")), "id_b")
+        _with_vectors(cand, vecs)
         .withColumn("cos_sim", F.round(cosine_col("v_a", "v_b"), 6))
         .filter(F.col("cos_sim") >= min_cos)
         .select("id_a", "id_b", "bucket", "cos_sim", "committed_side")
@@ -463,46 +434,24 @@ def incremental_srp_band_pairs(
     share ANY (band, bucket) key with a new doc — new-vs-committed and
     new-vs-new only, never committed-vs-committed. Index frames are
     (id, v); band frames are srp_band_table output built with identical
-    (num_planes, num_bands). Plan shape: the committed band side
-    semi-joins against only the BATCH's (band, bucket) keys, multi-band
-    duplicate candidates collapse BEFORE the vectors rejoin, and exact
-    cosine verifies only surviving candidates. max_bucket exists for
-    ANN-style uses; the near-dedup sidecar deliberately does NOT set it —
-    the hottest band buckets hold exactly the most-duplicated content,
-    which is what near-dedup must not skip (cost there is genuine work,
-    bounded per batch by the new side). Returns (id_a, id_b, cos_sim,
-    committed_side)."""
-    nb = new_bands.select("id", "band", "bucket").withColumn("_new", F.lit(True))
-    b = nb
-    if committed_bands is not None:
-        new_keys = nb.select("band", "bucket").distinct()
-        b = nb.unionByName(
-            committed_bands.select("id", "band", "bucket")
-            .join(new_keys, ["band", "bucket"], "left_semi")
-            .withColumn("_new", F.lit(False))
-        )
-    if max_bucket is not None:
-        wb = Window.partitionBy("band", "bucket")
-        b = (
-            b.withColumn("_bn", F.count("*").over(wb))
-            .filter(F.col("_bn") <= max_bucket)
-            .drop("_bn")
-        )
-    a = b.select(
-        F.col("id").alias("id_a"), F.col("_new").alias("new_a"), "band", "bucket"
-    )
-    c = b.select(
-        F.col("id").alias("id_b"), F.col("_new").alias("new_b"), "band", "bucket"
-    )
+    (num_planes, num_bands). Plan shape: dedup.bucket_pairs (the committed
+    band side semi-joins against only the BATCH's (band, bucket) keys),
+    multi-band duplicate candidates collapse BEFORE the vectors rejoin, and
+    exact cosine verifies only surviving candidates.
+
+    max_bucket exists for ANN-style uses; the near-dedup sidecar
+    deliberately does NOT set it — the hottest band buckets hold exactly
+    the most-duplicated content, which is what near-dedup must not skip
+    (cost there is genuine work, bounded per batch by the new side).
+    Returns (id_a, id_b, cos_sim, committed_side).
+
+    This is the full-enumeration REFERENCE: the sidecar runs the numpy
+    kernels committed_srp_flip_ids (vs-committed flips) and
+    srp_batch_pairs_matmul (new-vs-new edges), and pytest pins both
+    against this function's pair set — which is why it stays."""
     cand = (
-        a.join(c, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.col("new_a") | F.col("new_b"))
-        .select(
-            "id_a",
-            "id_b",
-            (~(F.col("new_a") & F.col("new_b"))).alias("committed_side"),
-        )
+        bucket_pairs(new_bands, committed_bands, ["band", "bucket"], max_bucket)
+        .select("id_a", "id_b", "committed_side")
         # multi-band duplicates collapse BEFORE the (wide) vector rejoin
         .distinct()
     )
@@ -510,10 +459,7 @@ def incremental_srp_band_pairs(
     if committed_index is not None:
         vecs = vecs.unionByName(committed_index.select("id", "v"))
     return (
-        cand.join(
-            vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a"
-        )
-        .join(vecs.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")), "id_b")
+        _with_vectors(cand, vecs)
         # numpy-vectorized verification: on boilerplate-heavy corpora the
         # candidate set is dominated by genuinely-similar (cos 0.8-0.99)
         # pairs LSH correctly surfaces, and the interpreted SQL fold costs
@@ -523,6 +469,24 @@ def incremental_srp_band_pairs(
         .filter(F.col("cos_sim") >= min_cos)
         .select("id_a", "id_b", "cos_sim", "committed_side")
     )
+
+
+def _band_vectors(bands: DataFrame, index: DataFrame) -> DataFrame:
+    """(id, band, bucket, v): band rows rejoin their vectors — ONE join,
+    linear in bucket membership; the row set both numpy kernels group by
+    (band, bucket)."""
+    return bands.select("id", "band", "bucket").join(index.select("id", "v"), "id")
+
+
+def _cos_block(a, an, c, cn):
+    """Cosine block a x c (rows of vectors, an/cn their norms) rounded to
+    6 dp like cosine_pairs_udf — the threshold decision of both numpy
+    kernels must match the full-enumeration path bit-for-bit."""
+    import numpy as np
+
+    scores = a @ c.T
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.round(scores / (an[:, None] * cn[None, :]), 6)
 
 
 def srp_batch_pairs_matmul(
@@ -560,9 +524,6 @@ def srp_batch_pairs_matmul(
     import numpy as np
 
     id_type = index.schema["id"].dataType.simpleString()
-    rows = bands.select("id", "band", "bucket").join(
-        index.select("id", "v"), "id"
-    )
 
     def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -579,10 +540,7 @@ def srp_batch_pairs_matmul(
         n = np.linalg.norm(v, axis=1)
         out_a, out_b, out_c = [], [], []
         for s in range(0, v.shape[0], chunk):
-            cc = v[s : s + chunk]
-            scores = v @ cc.T
-            with np.errstate(divide="ignore", invalid="ignore"):
-                scores = np.round(scores / (n[:, None] * n[s : s + chunk][None, :]), 6)
+            scores = _cos_block(v, n, v[s : s + chunk], n[s : s + chunk])
             ri, ci = np.nonzero(scores >= min_cos)
             ci_g = ci + s  # global column index
             keep = ri != ci_g  # drop self-pairs
@@ -606,7 +564,8 @@ def srp_batch_pairs_matmul(
         ).drop_duplicates(["id_a", "id_b"])
 
     return (
-        rows.groupBy("band", "bucket")
+        _band_vectors(bands, index)
+        .groupBy("band", "bucket")
         .applyInPandas(_pairs, f"id_a {id_type}, id_b {id_type}, cos_sim double")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -650,27 +609,24 @@ def committed_srp_flip_ids(
     num_planes there rather than capping recall silently.
 
     new-vs-new pairs are NOT this function's job: cluster resolution needs
-    the full edge set (run incremental_srp_band_pairs with no committed
-    side). Inputs are (id, v) index frames and srp_band_table band frames;
-    committed_bands should already be pruned to the batch's bucket
-    prefixes. Returns a single-column (new_id) DataFrame, eagerly
+    the full edge set, which srp_batch_pairs_matmul emits (both kernels
+    are pinned against incremental_srp_band_pairs, the full-enumeration
+    reference). Inputs are (id, v) index frames and srp_band_table band
+    frames; committed_bands should already be pruned to the batch's
+    bucket prefixes. Returns a single-column (new_id) DataFrame, eagerly
     materialized via localCheckpoint (caller frees with
     free_local_checkpoints once its drop set is materialized)."""
     import numpy as np
 
     new_keys = new_bands.select("band", "bucket").distinct()
-    nb = (
-        new_bands.select("id", "band", "bucket")
-        .join(new_index.select("id", "v"), "id")
-        .select("band", "bucket", "id", "v", F.lit(True).alias("_new"))
+    committed = committed_bands.join(new_keys, ["band", "bucket"], "left_semi")
+    rows = (
+        _band_vectors(new_bands, new_index)
+        .withColumn("_new", F.lit(True))
+        .unionByName(
+            _band_vectors(committed, committed_index).withColumn("_new", F.lit(False))
+        )
     )
-    cb = (
-        committed_bands.select("id", "band", "bucket")
-        .join(new_keys, ["band", "bucket"], "left_semi")
-        .join(committed_index.select("id", "v"), "id")
-        .select("band", "bucket", "id", "v", F.lit(False).alias("_new"))
-    )
-    rows = nb.unionByName(cb)
 
     def _flip(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"new_id": pd.Series([], dtype=object)})
@@ -689,14 +645,7 @@ def committed_srp_flip_ids(
         for s in range(0, c.shape[0], chunk):
             if live.size == 0:
                 break
-            cc = c[s : s + chunk]
-            scores = a[live] @ cc.T
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # np.round to 6 dp like cosine_pairs_udf: the threshold
-                # decision must match the full-enumeration path bit-for-bit
-                scores = np.round(
-                    scores / (an[live, None] * cn[s : s + chunk][None, :]), 6
-                )
+            scores = _cos_block(a[live], an[live], c[s : s + chunk], cn[s : s + chunk])
             h = (scores >= min_cos).any(axis=1)
             hits[live[h]] = True
             live = live[~h]

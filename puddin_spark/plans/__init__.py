@@ -9,20 +9,3 @@ from pyspark.sql import DataFrame
 def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
-
-def assert_pushed_filter(df: DataFrame, fragment: str) -> None:
-    plan = executed_plan(df)
-    assert f"PushedFilters: " in plan and fragment in plan, (
-        f"filter '{fragment}' not pushed to scan:\n{plan[:2000]}"
-    )
-
-
-def assert_no_python(df: DataFrame) -> None:
-    plan = executed_plan(df)
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (
-        "unexpected Python evaluation node in plan"
-    )
-
-
-def count_exchanges(df: DataFrame) -> int:
-    return executed_plan(df).count("Exchange")

@@ -153,13 +153,6 @@ def _iter_warc_stream(stream):
         yield url, ts, html, txt
 
 
-def _parse_warc_bytes(data: bytes):
-    """Bytes-form convenience wrapper around _iter_warc_stream."""
-    import io
-
-    yield from _iter_warc_stream(io.BytesIO(data))
-
-
 def read_warc(spark: SparkSession, path: str, lang: str = "en") -> DataFrame:
     """WARC file(s) -> pages table. One task per file via binaryFile (the
     standard first approach for .warc.gz, whose gzip members are not

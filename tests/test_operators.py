@@ -378,6 +378,28 @@ def test_incremental_minhash_pairs(spark):
     got = {(p.id_a, p.id_b, p.jaccard) for p in pairs}
     assert got == want
 
+    # the hot-bucket cap guards the incremental path too: it counts each
+    # bucket's full (new + committed) membership, so capped incremental
+    # pairs equal capped full-corpus pairs with >= 1 new endpoint
+    for cap in (3, 2):
+        full_c = minhash_lsh_pairs(
+            committed.unionByName(new), "doc_id", "text",
+            num_hashes=16, band_size=2, shingle_k=3,
+            jaccard_threshold=0.5, shingle_mode="word", max_bucket=cap,
+        ).collect()
+        want_c = {
+            (p.id_a, p.id_b, p.jaccard) for p in full_c
+            if p.id_a in new_ids or p.id_b in new_ids
+        }
+        got_c = {
+            (p.id_a, p.id_b, p.jaccard)
+            for p in incremental_minhash_pairs(
+                ni, ci, band_size=2, jaccard_threshold=0.5, max_bucket=cap
+            ).collect()
+        }
+        assert got_c == want_c, f"max_bucket={cap}: {got_c ^ want_c}"
+        assert len(want_c) < len(want), f"max_bucket={cap} must drop pairs"
+
 
 def test_resolve_clusters_frees_round_checkpoints(spark):
     """Iterative label propagation must not leak one checkpoint per round:
@@ -453,6 +475,22 @@ def test_incremental_srp_pairs_matches_full(spark):
         assert r.committed_side == (
             r.id_a in committed_ids or r.id_b in committed_ids
         )
+
+    # capped: incremental == capped full-corpus pairs with >= 1 new endpoint
+    for cap in (4, 2):
+        want_c = {
+            (r.id_a, r.id_b, r.cos_sim)
+            for r in srp_candidate_pairs(both, min_cos=0.2, max_bucket=cap).collect()
+            if not (r.id_a in committed_ids and r.id_b in committed_ids)
+        }
+        got_c = {
+            (r.id_a, r.id_b, r.cos_sim)
+            for r in incremental_srp_pairs(
+                srp_index(new), srp_index(committed), min_cos=0.2, max_bucket=cap
+            ).collect()
+        }
+        assert got_c == want_c, f"max_bucket={cap}: {got_c ^ want_c}"
+        assert len(want_c) < len(expected), f"max_bucket={cap} must drop pairs"
 
 
 def test_keepdrop_confusion_counts_disagreements_and_gaps(spark):
