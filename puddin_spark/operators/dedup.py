@@ -779,6 +779,14 @@ def resolve_duplicate_clusters(
     round's checkpoint; its blocks release when the caller drops the frame
     (ContextCleaner), or immediately via free_local_checkpoints(result)
     once the caller has materialized everything derived from it.
+
+    Each round costs two Spark jobs (checkpoint + convergence count) plus
+    its shuffle stages: 26 jobs and 3-5 s for the two near-dedup sidecars
+    of one 200-doc benchmark batch (a few dozen edges; 4 vCPUs at
+    local[3]). Edge sets that fit in driver memory resolve identically,
+    with no job, through union_find_min_roots; the near-dedup sidecars
+    call this function only above their driver-side edge bound
+    (snapshots._LOCAL_EDGES).
     """
     # both edge directions via ONE explode over the pair rows: the union-of-
     # two-selects form evaluated the whole upstream pair generation twice
@@ -848,6 +856,30 @@ def resolve_duplicate_clusters(
         )
     finally:
         edges.unpersist()
+
+
+def union_find_min_roots(edges) -> dict:
+    """Driver-side twin of resolve_duplicate_clusters for an edge list that
+    fits in memory: {id: root} for every id on an (a, b) edge, root = the
+    MINIMUM id of its connected component — the same (id, root) mapping.
+    Union-find with path halving, linking the larger root under the
+    smaller, so each set's root is always its minimum. O(E log V) at
+    worst and no round bound: a chain of any length resolves."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {x: find(x) for x in parent}
 
 
 def minhash_index(

@@ -518,9 +518,13 @@ def srp_batch_pairs_matmul(
     ~0.5 KB vectors attached (measured 2M candidate rows / ~2 GB of
     shuffled vector payload for a 3.5k-doc template-heavy batch); here the
     shuffle carries one vector per band row and pairs above threshold are
-    the only rows that ever exist. Per-group memory: the bucket's vectors
-    plus one m x `chunk` score block. Output id columns keep the index's
-    id type."""
+    the only rows that ever exist. A one-row group cannot hold a pair: a
+    window count drops it in the JVM, and since the window hash-partitions
+    and sorts by (band, bucket) — what the groupBy-applyInPandas needs —
+    it reuses that exchange (on a 200-doc batch nearly all of ~1600
+    groups hold one row, each one pandas call otherwise). Per-group memory: the bucket's
+    vectors plus one m x `chunk` score block. Output id columns keep the
+    index's id type."""
     import numpy as np
 
     id_type = index.schema["id"].dataType.simpleString()
@@ -533,8 +537,6 @@ def srp_batch_pairs_matmul(
                 "cos_sim": pd.Series([], dtype=float),
             }
         )
-        if len(pdf) < 2:
-            return empty
         ids = pdf["id"].to_numpy()
         v = np.asarray(pdf["v"].tolist(), dtype=np.float64)
         n = np.linalg.norm(v, axis=1)
@@ -565,6 +567,9 @@ def srp_batch_pairs_matmul(
 
     return (
         _band_vectors(bands, index)
+        .withColumn("_n", F.count("*").over(Window.partitionBy("band", "bucket")))
+        .filter("_n >= 2")
+        .drop("_n")
         .groupBy("band", "bucket")
         .applyInPandas(_pairs, f"id_a {id_type}, id_b {id_type}, cos_sim double")
         .dropDuplicates(["id_a", "id_b"])
@@ -613,15 +618,23 @@ def committed_srp_flip_ids(
     are pinned against incremental_srp_band_pairs, the full-enumeration
     reference). Inputs are (id, v) index frames and srp_band_table band
     frames; committed_bands should already be pruned to the batch's
-    bucket prefixes. Returns a single-column (new_id) DataFrame, eagerly
-    materialized via localCheckpoint (caller frees with
+    bucket prefixes. Only groups holding at least one new AND one
+    committed row reach pandas: committed rows semi-join the batch's keys
+    and new rows semi-join the surviving committed keys, so the new-only
+    groups — nearly all of them — cost no pandas call (the sidecar's SRP
+    candidate phase on a 200-doc batch, 4 vCPUs at local[3]: 4.0-5.1 s ->
+    2.2-3.1 s, for two more jobs). Not srp_batch_pairs_matmul's window
+    count: this plan stays free of Window operators (test_plans pins the
+    no-pair-ranking shape). Returns a single-column (new_id)
+    DataFrame, eagerly materialized via localCheckpoint (caller frees with
     free_local_checkpoints once its drop set is materialized)."""
     import numpy as np
 
-    new_keys = new_bands.select("band", "bucket").distinct()
-    committed = committed_bands.join(new_keys, ["band", "bucket"], "left_semi")
+    keys = ["band", "bucket"]
+    committed = committed_bands.join(new_bands.select(*keys).distinct(), keys, "left_semi")
+    new = new_bands.join(committed.select(*keys).distinct(), keys, "left_semi")
     rows = (
-        _band_vectors(new_bands, new_index)
+        _band_vectors(new, new_index)
         .withColumn("_new", F.lit(True))
         .unionByName(
             _band_vectors(committed, committed_index).withColumn("_new", F.lit(False))
@@ -629,12 +642,7 @@ def committed_srp_flip_ids(
     )
 
     def _flip(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"new_id": pd.Series([], dtype=object)})
-        if pdf.empty:
-            return empty
         new_mask = pdf["_new"].to_numpy()
-        if not new_mask.any() or new_mask.all():
-            return empty
         a_ids = pdf.loc[new_mask, "id"].to_numpy()
         a = np.asarray(pdf.loc[new_mask, "v"].tolist(), dtype=np.float64)
         c = np.asarray(pdf.loc[~new_mask, "v"].tolist(), dtype=np.float64)

@@ -9,8 +9,12 @@ overridable for cluster runs via normal spark-submit --conf.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# the directory holding the puddin_spark package
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 # Web documents average ~2-10 KB but the tail reaches tens of MB; 512 rows per
 # Arrow batch caps a batch at ~"a few hundred MB" worst-case instead of the
@@ -27,8 +31,18 @@ def get_spark(
     """Build a session with this engine's defaults WITHOUT fighting
     spark-submit: anything already set via --master/--conf/spark-defaults
     wins; our values only fill gaps. Standalone `python` runs (no submitted
-    conf) fall back to local[$SPARK_GRAFT_CPUS]."""
+    conf) fall back to local[$SPARK_GRAFT_CPUS].
+
+    The package's parent directory joins PYTHONPATH before the JVM starts:
+    Python workers inherit the JVM's environment and unpickle every UDF by
+    module name, so a driver that imports puddin_spark only through
+    sys.path (a script run from another directory) would otherwise fail in
+    its first UDF with ModuleNotFoundError."""
     from pyspark import SparkConf
+
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
 
     if "PYSPARK_GATEWAY_PORT" in os.environ:
         # running under spark-submit: connect the already-launched JVM

@@ -39,8 +39,9 @@ from functools import partial, reduce
 from pathlib import Path
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -60,6 +61,14 @@ def _stat_value(v):
         f"file-skipping stats support numeric/string/bool columns, got "
         f"{type(v).__name__}; cast (e.g. timestamps to epoch seconds) first"
     )
+
+
+def _parquet_rows(data_dir: Path) -> int:
+    """Rows in the parquet files under `data_dir`, from their footers (the
+    writer just produced them; no data pages are read)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in data_dir.rglob("*.parquet"))
 
 
 def _collect_file_stats(data_dir: Path, cols: list[str]) -> dict:
@@ -95,6 +104,53 @@ def _collect_file_stats(data_dir: Path, cols: list[str]) -> dict:
             )
         out[rel] = stats
     return out
+
+
+def _fingerprint_aggs(of: str) -> list:
+    """(fp_n, fp_xor): how many rows have a non-null `of` id, and the
+    order-independent xor of those ids' xxhash64 — two column aggregates
+    that detect MEMBERSHIP differences, not just size drift."""
+    return [
+        F.expr(f"count({of})").alias("fp_n"),
+        F.expr(f"bit_xor(if(({of}) is null, null, xxhash64({of})))").alias("fp_xor"),
+    ]
+
+
+def _record_schema(spark, rec: dict, kind: str, path: str) -> StructType:
+    """A snapshot directory's schema: recorded at commit, or — for a record
+    that predates recorded schemas — inferred (one job)."""
+    recorded = rec.get("schema" if kind == "data" else "lineage_schema")
+    schema = json.loads(recorded) if recorded else spark.read.parquet(path).schema.jsonValue()
+    return StructType.fromJson(_as_nullable(schema))
+
+
+def _as_nullable(schema_json):
+    """A schema's JSON with every field, array element and map value
+    nullable — what a parquet scan yields, so snapshots that differ only in
+    nullability read as one schema."""
+    if isinstance(schema_json, list):
+        return [_as_nullable(v) for v in schema_json]
+    if not isinstance(schema_json, dict):
+        return schema_json
+    return {
+        k: True if k in ("nullable", "containsNull", "valueContainsNull") else _as_nullable(v)
+        for k, v in schema_json.items()
+    }
+
+
+def _merge_schemas(schemas: list[StructType], partition_by) -> StructType | None:
+    """Every column of `schemas` in first-seen order, partition columns
+    last (where partition discovery puts them); None when one column name
+    carries two types."""
+    fields: dict[str, StructField] = {}
+    for schema in schemas:
+        for f in schema.fields:
+            if fields.setdefault(f.name, f).dataType != f.dataType:
+                return None
+    order = [n for n in fields if n not in partition_by] + [
+        n for n in partition_by if n in fields
+    ]
+    return StructType([fields[n] for n in order])
 
 
 class SnapshotStore:
@@ -143,6 +199,7 @@ class SnapshotStore:
         partition_by: list[str] | None = None,
         stats_cols: list[str] | None = None,
         lineage_stats_cols: list[str] | None = None,
+        fingerprint: str | None = None,
     ) -> int:
         """Atomically append one snapshot (data + optional lineage).
         base=True marks a compaction snapshot that supersedes all earlier
@@ -161,9 +218,23 @@ class SnapshotStore:
         store should open one snapshot's files, not every batch's since
         the last compact. Raises ConcurrentWriteError if
         another writer landed the same snapshot id first — link(2) is the
-        O_EXCL of the commit protocol."""
+        O_EXCL of the commit protocol.
+
+        The record also carries what readers and gates would otherwise run
+        jobs for: the data and lineage schemas (read() passes them instead
+        of inferring per directory), the data row count (from the written
+        footers), and — with `fingerprint`, a SQL id expression that is
+        null for rows outside the set — the (count, xor of xxhash64)
+        fingerprint of that id set (_fingerprint_aggs), observed on the
+        write itself: zero extra jobs. compact() and rollback() keep the
+        latest commit's fingerprint expression; row_count() and
+        fingerprint() combine the active records."""
         token = uuid.uuid4().hex
         staging = self.base / "_staging" / token
+        schema = data.schema.json()
+        if fingerprint:
+            obs = Observation(f"commit-{token}")
+            data = data.observe(obs, *_fingerprint_aggs(fingerprint))
         if partition_by and not stats_cols:
             # Iceberg write.distribution-mode=hash analog (optimization
             # guide section 6): cluster rows by the partition columns before
@@ -181,6 +252,13 @@ class SnapshotStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(str(staging / "data"))
+        rows = _parquet_rows(staging / "data")
+        fp = None
+        if fingerprint:
+            # not waited for on an empty write: Spark may prove the data
+            # empty and skip the observed operator altogether
+            got = obs.get if rows else {"fp_n": 0, "fp_xor": 0}
+            fp = {"of": fingerprint, "n": got["fp_n"], "xor": got["fp_xor"] or 0}
         file_stats = (
             _collect_file_stats(staging / "data", stats_cols) if stats_cols else None
         )
@@ -219,6 +297,10 @@ class SnapshotStore:
             "file_stats": file_stats,
             "lineage_stats_cols": lineage_stats_cols or None,
             "lineage_file_stats": lineage_file_stats,
+            "schema": schema,
+            "lineage_schema": lineage.schema.json() if lineage is not None else None,
+            "rows": rows,
+            "fingerprint": fp,
         }
         # per-writer tmp record: a shared name would let the loser unlink
         # the winner's tmp mid-protocol
@@ -246,30 +328,29 @@ class SnapshotStore:
         data = self.read(spark)
         if data is None:
             return -1
-        lineage = self.read_lineage(spark)
-        recs = self._active_commits()
-        part = recs[-1].get("partition_by") if recs else None
-        stats = recs[-1].get("stats_cols") if recs else None
-        lin_stats = recs[-1].get("lineage_stats_cols") if recs else None
-        return self.commit(
-            data, lineage, base=True, partition_by=part, stats_cols=stats,
-            lineage_stats_cols=lin_stats,
-        )
+        return self._rebase(data, self.read_lineage(spark), self._active_commits())
 
     def rollback(self, spark: SparkSession, to_snapshot: int) -> int:
         """Restore the table to a historical state by committing it as a new
         BASE snapshot (Iceberg's rollback: history moves forward, data moves
         back). Earlier states stay readable via read(as_of=...) until gc().
         Returns the new snapshot id."""
-        data = self.read(spark, as_of=to_snapshot)
-        lineage = self.read_lineage(spark, as_of=to_snapshot)
-        recs = self._active_commits(to_snapshot)
-        part = recs[-1].get("partition_by") if recs else None
-        stats = recs[-1].get("stats_cols") if recs else None
-        lin_stats = recs[-1].get("lineage_stats_cols") if recs else None
+        return self._rebase(
+            self.read(spark, as_of=to_snapshot),
+            self.read_lineage(spark, as_of=to_snapshot),
+            self._active_commits(to_snapshot),
+        )
+
+    def _rebase(self, data, lineage, recs: list[dict]) -> int:
+        """Commit `data` as a base snapshot under the latest of `recs`'
+        partition, file-stats and fingerprint specs."""
+        last = recs[-1] if recs else {}
         return self.commit(
-            data, lineage, base=True, partition_by=part, stats_cols=stats,
-            lineage_stats_cols=lin_stats,
+            data, lineage, base=True,
+            partition_by=last.get("partition_by"),
+            stats_cols=last.get("stats_cols"),
+            lineage_stats_cols=last.get("lineage_stats_cols"),
+            fingerprint=(last.get("fingerprint") or {}).get("of"),
         )
 
     def gc(self, *, staging_max_age_s: float = 3600.0) -> int:
@@ -336,48 +417,65 @@ class SnapshotStore:
 
     # --- read path ---
 
-    def _dirs(self, kind: str, as_of: int | None = None) -> list[str]:
-        out = []
-        for rec in self._active_commits(as_of):
-            d = rec.get(f"{kind}_dir")
-            if d:
-                out.append(str(self.base / d))
-        return out
-
     def _read_kind(
         self, spark: SparkSession, kind: str, as_of: int | None
     ) -> DataFrame | None:
         recs = [r for r in self._active_commits(as_of) if r.get(f"{kind}_dir")]
-        if not recs:
-            return None
-        dirs = [str(self.base / r[f"{kind}_dir"]) for r in recs]
         # an EMPTY partitioned write leaves a snapshot dir with no data
         # files at all (Spark emits only _SUCCESS — no partition dirs, so
         # no schema-bearing 0-row part file like the unpartitioned case);
         # such dirs contribute nothing and would fail schema inference
-        dirs = [d for d in dirs if any(Path(d).rglob("*.parquet"))]
-        if not dirs:
+        recs = [r for r in recs if any((self.base / r[f"{kind}_dir"]).rglob("*.parquet"))]
+        if not recs:
             return None
-        partitioned = any(r.get("partition_by") for r in recs)
-        # schema evolution (Iceberg add-column analog): snapshots written
-        # before a column existed must still read — old rows surface null.
-        # The multi-path fast scan below takes ONE file's schema and would
-        # silently DROP later-added columns, so compare per-dir schemas
-        # first (driver-side footer sample each, O(active snapshots), cheap
-        # because compact() bounds the snapshot count) and fall back to a
-        # per-dir union that fills missing columns.
-        frames = [spark.read.parquet(d) for d in dirs]
-        schemas = {tuple(sorted((f.name, f.dataType.simpleString()) for f in df.schema.fields)) for df in frames}
-        if len(schemas) > 1 or partitioned:
-            # partitioned snapshots also union per-dir: each dir is its own
-            # partition-discovery root (Spark rejects multi-root discovery).
-            # Filters push through Union into every branch's scan, so
-            # partition pruning is preserved.
-            out = frames[0]
-            for df in frames[1:]:
-                out = out.unionByName(df, allowMissingColumns=True)
-            return out
-        return spark.read.parquet(*dirs)
+        dirs = [str(self.base / r[f"{kind}_dir"]) for r in recs]
+        schemas = [_record_schema(spark, r, kind, d) for r, d in zip(recs, dirs)]
+        parts = {tuple(r.get("partition_by") or ()) for r in recs}
+        merged = _merge_schemas(schemas, next(iter(parts)) if len(parts) == 1 else ())
+        if merged is not None and len(parts) == 1:
+            # ONE scan under the recorded schemas (no inference job), even
+            # across schema evolution (Iceberg add-column analog): the
+            # merged schema null-fills a column in files written before it
+            # existed. Partitioned snapshots are one scan too: every
+            # snapshot's data dir is its own partition-discovery root, which
+            # Spark only accepts with ignoreInvalidPartitionPaths (every
+            # data file of a partitioned commit sits under col=value dirs,
+            # so nothing is ignored). A union of per-commit scans would be
+            # one plan branch per commit, and every filter or semi-join
+            # above the read is copied into each branch.
+            reader = spark.read.schema(merged)
+            if parts != {()}:
+                reader = reader.option("ignoreInvalidPartitionPaths", "true")
+            return reader.parquet(*dirs)
+        # a column whose type changed, or commits under different partition
+        # specs: one scan per snapshot, unioned by name (missing columns
+        # null-fill, types widen as unionByName allows)
+        out = None
+        for d, schema in zip(dirs, schemas):
+            df = spark.read.schema(schema).parquet(d)
+            out = df if out is None else out.unionByName(df, allowMissingColumns=True)
+        return out
+
+    def row_count(self) -> int | None:
+        """Rows in the current table state, from the commit records (no
+        job); None when an active record predates row counts."""
+        rows = self._recorded("rows")
+        return None if rows is None else sum(rows)
+
+    def fingerprint(self, of: str) -> tuple[int, int] | None:
+        """(count, xor) fingerprint of the current table's `of` id set
+        (commit(fingerprint=of)), combined from the commit records: counts
+        add and xor is its own inverse, so appends fold in and base
+        commits restart the fold. No job; None when an active record
+        carries no fingerprint of `of`."""
+        fps = self._recorded("fingerprint")
+        if fps is None or any(fp["of"] != of for fp in fps):
+            return None
+        return sum(fp["n"] for fp in fps), reduce(int.__xor__, (fp["xor"] for fp in fps), 0)
+
+    def _recorded(self, key: str) -> list | None:
+        vals = [r.get(key) for r in self._active_commits()]
+        return None if any(v is None for v in vals) else vals
 
     def read(self, spark: SparkSession, as_of: int | None = None) -> DataFrame | None:
         """Current table state, or — with as_of — the state as of that
@@ -458,8 +556,11 @@ class SnapshotStore:
                 continue
             # basePath keeps directory-partition columns visible when the
             # snapshot is partitioned
+            schema = _merge_schemas(
+                [_record_schema(spark, r, kind, str(ddir))], r.get("partition_by") or ()
+            )
             frames.append(
-                spark.read.option("basePath", str(ddir)).parquet(*files)
+                spark.read.schema(schema).option("basePath", str(ddir)).parquet(*files)
             )
         if not frames:
             return None
@@ -521,7 +622,8 @@ def record_failures(
         "snapshot_id", F.lit(store.current_snapshot_id() + 1)
     )
     snap_id = store.commit(
-        updated, lineage, base=True, lineage_stats_cols=["snapshot_id"]
+        updated, lineage, base=True, lineage_stats_cols=["snapshot_id"],
+        fingerprint=_KEPT_IDS,
     )
     _prune_near_dedup_sidecar(spark, store, updated)
     return snap_id
@@ -545,7 +647,7 @@ def _prune_near_dedup_sidecar(spark, store: SnapshotStore, verdicts: DataFrame) 
         idx = idx_store.read(spark)
         if idx is None:
             continue
-        idx_store.commit(idx.join(kept, "id", "left_semi"), base=True)
+        idx_store.commit(idx.join(kept, "id", "left_semi"), base=True, fingerprint="id")
 
 
 def run_resumable_pipeline(
@@ -702,7 +804,7 @@ def run_resumable_pipeline(
         # instead of one snapshot per batch since the last compact
         snap_id = store.commit(
             verdicts.drop("proc_ts"), lineage, partition_by=partition_by,
-            lineage_stats_cols=["snapshot_id"],
+            lineage_stats_cols=["snapshot_id"], fingerprint=_KEPT_IDS,
         )
         if sidecars:
             _commit_near_dedup(store, pending, verdicts)
@@ -714,6 +816,15 @@ def run_resumable_pipeline(
         if seen is not None:
             seen.unpersist()
 
+
+# the verdict store's kept-id set, as a commit fingerprint: every sidecar
+# index is reconciled against it (_reconciled_index)
+_KEPT_IDS = "if(keep, doc_id, null)"
+# new-vs-new edge sets up to this size resolve into clusters on the driver
+# (union_find_min_roots, ~200 bytes per edge); larger ones run the Spark
+# label propagation (resolve_duplicate_clusters). Drop sets up to this size
+# flip verdicts through an IN list (_doc_id_flag)
+_LOCAL_EDGES = 20_000
 
 # near-dedup sidecar parameters — ONE definition; the index, its band
 # table, and the incremental pair generation must agree bit-for-bit
@@ -928,37 +1039,37 @@ _SIDECARS = (_MINHASH, _SRP)
 SIDECAR_STORES = tuple(n for s in _SIDECARS for n in (s.index_name, s.bands_name))
 
 
-def _id_set_stats(df, col: str) -> tuple[int, int]:
-    """(count, order-independent xor fingerprint) of an id column — two
-    cheap column-scan aggregates that detect MEMBERSHIP differences, not
-    just size drift (a rollback can restore an equal-sized but different
-    kept set; a count-only gate would miss it and stale index entries would
-    keep dropping newcomers)."""
-    row = df.select(
-        F.count("*").alias("n"), F.expr(f"bit_xor(xxhash64({col}))").alias("fp")
-    ).first()
-    return row.n, row.fp if row.fp is not None else 0
+def _id_set_stats(df, of: str) -> tuple[int, int]:
+    """(count, xor) fingerprint of an id expression over `df` by one job —
+    the path for stores whose commit records carry no fingerprint
+    (SnapshotStore.fingerprint). A count-only gate would miss membership
+    drift: a rollback can restore an equal-sized but different kept set,
+    and stale index entries would keep dropping newcomers."""
+    row = df.select(*_fingerprint_aggs(of)).first()
+    return row.fp_n, row.fp_xor or 0
 
 
 def _reconciled_index(spark, spec: _Sidecar, idx_store, kept_committed, kept_stats):
     """The committed index, reconciled against the committed kept set, and
     its row count; (None, 0) when empty. The (count, xor-of-ids) gate
-    repairs BOTH directions as one BASE commit, so the fix runs once:
+    compares fingerprints from the commit records (no job) and repairs
+    BOTH directions as one BASE commit, so the fix runs once:
     - stale entries (docs flipped keep=false by record_failures / rollback)
       are pruned — left in place they would drop future newcomers as
       near-dups of excluded docs (both copies lost);
     - missing entries (a crash between the verdict and index commits) are
       re-indexed from committed clean_text.
-    With no committed verdicts at all (kept_committed None) a surviving
-    index outlived a wiped store: it is pruned to empty, so a first batch
-    is never deduped against documents that are not in the corpus."""
+    An index whose records carry no fingerprint takes the repair once; its
+    base commit records one. With no committed verdicts at all
+    (kept_committed None) a surviving index outlived a wiped store: it is
+    pruned to empty, so a first batch is never deduped against documents
+    that are not in the corpus."""
     committed_idx = idx_store.read(spark)
     if kept_committed is None:
         if committed_idx is not None:
-            idx_store.commit(committed_idx.limit(0), base=True)
+            idx_store.commit(committed_idx.limit(0), base=True, fingerprint="id")
         return None, 0
-    stats = _id_set_stats(committed_idx, "id") if committed_idx is not None else (0, 0)
-    if stats != kept_stats:
+    if idx_store.fingerprint("id") != kept_stats:
         lag = kept_committed.select("doc_id", "clean_text")
         reconciled = None
         if committed_idx is not None:
@@ -970,11 +1081,11 @@ def _reconciled_index(spark, spec: _Sidecar, idx_store, kept_committed, kept_sta
         lag_idx = spec.index(lag)
         idx_store.commit(
             lag_idx if reconciled is None else reconciled.unionByName(lag_idx),
-            base=True,
+            base=True, fingerprint="id",
         )
         # the index now equals the kept set by construction
-        committed_idx, stats = idx_store.read(spark), kept_stats
-    n_idx = stats[0]
+        committed_idx = idx_store.read(spark)
+    n_idx = kept_stats[0]
     return (committed_idx if n_idx else None), n_idx
 
 
@@ -982,19 +1093,23 @@ def _near_dedup(spark, store, sidecars, verdicts, committed):
     """Run each sidecar over the batch in order — reconcile, band-cache
     gate, index, prefix pruning, pairs, cluster resolution, flip — and
     return (flipped verdicts, [(sidecar, new index, new bands, occupancy)])
-    for _commit_near_dedup."""
+    for _commit_near_dedup. Spark jobs per batch do not grow with the
+    commit count: gate inputs come from commit records, each store reads
+    as one scan, and a batch-sized new-vs-new edge set resolves on the
+    driver."""
     from puddin_spark.operators.dedup import (
         free_local_checkpoints,
         resolve_duplicate_clusters,
+        union_find_min_roots,
     )
     from puddin_spark.operators.similarity import band_occupancy
     from puddin_spark.pipeline import flip_verdicts
 
     kept_committed = kept_stats = None
     if committed is not None:
-        # one (count, xor) pass over the kept set serves every sidecar
+        # one (count, xor) fingerprint of the kept set serves every sidecar
         kept_committed = committed.filter("keep")
-        kept_stats = _id_set_stats(kept_committed, "doc_id")
+        kept_stats = store.fingerprint(_KEPT_IDS) or _id_set_stats(committed, _KEPT_IDS)
     pending = []
     for spec in sidecars:
         idx_store, bands_store = spec.stores(store.base)
@@ -1006,28 +1121,33 @@ def _near_dedup(spark, store, sidecars, verdicts, committed):
             # the band table is a pure DERIVED cache of the index, rebuilt
             # by projection (never by re-shingling or re-encoding); a
             # row-count gate detects lag from a crash between the index and
-            # bands commits, or an index prune above
-            committed_bands = bands_store.read(spark)
-            n_bands = committed_bands.count() if committed_bands is not None else -1
-            if n_bands != n_idx * spec.band_rows:
+            # bands commits, or an index prune above. Records without a
+            # row count rebuild once.
+            if bands_store.row_count() != n_idx * spec.band_rows:
                 bands_store.commit(
                     spec.bands(committed_idx), base=True, partition_by=[spec.pfx_col]
                 )
-                committed_bands = bands_store.read(spark)
+            committed_bands = bands_store.read(spark)
         # localCheckpoint: ONE signature pass serves prefix discovery, the
         # pair stages and the survivors commit (blocks freed once the last
         # sidecar commit lands)
         new_idx = spec.index(
             verdicts.filter("keep").select("doc_id", "clean_text")
         ).localCheckpoint()
-        new_bands = spec.bands(new_idx).localCheckpoint()
+        prefixes = Observation(f"{spec.kind}-prefixes-{uuid.uuid4().hex}")
+        new_bands = (
+            spec.bands(new_idx)
+            .observe(prefixes, F.collect_set(spec.pfx_col).alias("pfx"))
+            .localCheckpoint()
+        )
         if committed_bands is not None:
             # static prefix pruning: filtering the directory-partitioned
-            # committed bands to the BATCH's own prefixes (<= 16 values)
-            # prunes whole partitions — the read cost tracks the batch,
-            # not the corpus
-            pfx = [r[0] for r in new_bands.select(spec.pfx_col).distinct().collect()]
-            committed_bands = committed_bands.filter(F.col(spec.pfx_col).isin(pfx))
+            # committed bands to the BATCH's own prefixes (<= 16 values,
+            # observed by the checkpoint's own job) prunes whole partitions
+            # — the read cost tracks the batch, not the corpus
+            committed_bands = committed_bands.filter(
+                F.col(spec.pfx_col).isin(prefixes.get["pfx"])
+            )
         band_col, bucket_col = spec.occupancy_cols
         occupancy = band_occupancy(
             new_bands, committed_bands, band_col=band_col, bucket_col=bucket_col
@@ -1035,16 +1155,21 @@ def _near_dedup(spark, store, sidecars, verdicts, committed):
         flips, new_new, frees = spec.candidates(
             new_idx, new_bands, committed_idx, committed_bands
         )
-        drops = [] if flips is None else [flips]
-        if not new_new.isEmpty():
+        # the drop set is a subset of the batch's kept ids, so it comes to
+        # the driver; it is the only copy anything downstream reads, so the
+        # pair frames can go
+        drop = set() if flips is None else {r.doc_id for r in flips.collect()}
+        # one fetch decides where clusters resolve: a batch's edge set is
+        # normally tiny, and label propagation costs two jobs per round
+        edges = new_new.limit(_LOCAL_EDGES + 1).collect()
+        if len(edges) > _LOCAL_EDGES:
             clusters = resolve_duplicate_clusters(new_new)
             frees.append(clusters)
-            drops.append(clusters.filter("id != root").select(F.col("id").alias("doc_id")))
-        if drops:
-            # materialize the (tiny) drop set; it is the only copy anything
-            # downstream reads, so the pair frames can go
-            drop_ids = reduce(DataFrame.unionByName, drops).distinct()
-            verdicts = flip_verdicts(verdicts, drop_ids.localCheckpoint(), spec.label)
+            drop |= {r.id for r in clusters.filter("id != root").select("id").collect()}
+        else:
+            drop |= {i for i, root in union_find_min_roots(edges).items() if i != root}
+        if drop:
+            verdicts = flip_verdicts(verdicts, _doc_id_flag(spark, drop), spec.label)
         for frame in frees:
             if frame.is_cached:
                 frame.unpersist()
@@ -1052,6 +1177,15 @@ def _near_dedup(spark, store, sidecars, verdicts, committed):
                 free_local_checkpoints(frame)
         pending.append((spec, new_idx, new_bands, occupancy))
     return verdicts, pending
+
+
+def _doc_id_flag(spark, ids: set):
+    """flip_verdicts' flag for a driver-side doc_id set: an IN list up to
+    _LOCAL_EDGES ids — a filter, no join and no broadcast job — else a
+    one-column frame."""
+    if len(ids) <= _LOCAL_EDGES:
+        return F.col("doc_id").isin(sorted(ids))
+    return spark.createDataFrame([(i,) for i in sorted(ids)], "doc_id string")
 
 
 def _commit_near_dedup(store, pending, verdicts) -> None:
@@ -1066,7 +1200,7 @@ def _commit_near_dedup(store, pending, verdicts) -> None:
     kept_ids = verdicts.filter("keep").select(F.col("doc_id").alias("id"))
     for spec, new_idx, new_bands, occupancy in pending:
         idx_store, bands_store = spec.stores(store.base)
-        idx_store.commit(new_idx.join(kept_ids, "id", "left_semi"))
+        idx_store.commit(new_idx.join(kept_ids, "id", "left_semi"), fingerprint="id")
         bands_store.commit(
             new_bands.join(kept_ids, "id", "left_semi"),
             lineage=occupancy,
@@ -1075,4 +1209,3 @@ def _commit_near_dedup(store, pending, verdicts) -> None:
     for _, new_idx, new_bands, _ in pending:
         free_local_checkpoints(new_idx)
         free_local_checkpoints(new_bands)
-    free_local_checkpoints(verdicts)

@@ -161,6 +161,48 @@ def test_compacted_sidecars_behave_identically(spark, tmp_path):
     assert idx_store.read(spark).count() == v.filter("keep").count()
 
 
+def test_records_without_recorded_stats_read_and_reconcile(spark, tmp_path):
+    """A store whose commit records predate recorded schemas, row counts
+    and fingerprints (stripped here from the JSON) still reads, still
+    flips a twin, and its sidecar takes the repair once: the base commit
+    records a fingerprint equal to the kept set's, so the gate reads
+    records from then on and does not fire again."""
+    import json
+
+    from puddin_spark.snapshots import _KEPT_IDS, _id_set_stats
+
+    store = SnapshotStore(tmp_path / "v")
+    pages = synth_pages_local(spark, 40).cache()
+    run_resumable_pipeline(spark, pages, store, num_partitions=2, near_dedup=True)
+    v0 = store.read(spark)
+    assert store.fingerprint(_KEPT_IDS) == _id_set_stats(v0, _KEPT_IDS)
+    n0 = v0.count()
+    for rec_path in tmp_path.rglob("_commits/*.json"):
+        rec = json.loads(rec_path.read_text())
+        for key in ("schema", "lineage_schema", "rows", "fingerprint"):
+            rec.pop(key)
+        rec_path.write_text(json.dumps(rec))
+    idx_store = SnapshotStore(store.base / "minhash_index")
+    bands_store = SnapshotStore(store.base / "minhash_bands")
+    assert store.fingerprint(_KEPT_IDS) is None and bands_store.row_count() is None
+    assert store.read(spark).count() == n0
+
+    kept = store.read(spark).filter("keep").orderBy("doc_id").limit(2).collect()
+    for i, src in enumerate(kept):
+        twin = _twin_of(spark, src.clean_text, f"https://twin.example/old{i}", pages)
+        run_resumable_pipeline(spark, twin, store, num_partitions=2, near_dedup=True)
+        t = store.read(spark).filter(f"url = 'https://twin.example/old{i}'").first()
+        assert t.keep is False and t.excl_type == "near_dup"
+    v = store.read(spark)
+    n_kept = v.filter("keep").count()
+    assert idx_store.fingerprint("id") == _id_set_stats(v, _KEPT_IDS)
+    assert idx_store.read(spark).count() == n_kept
+    assert bands_store.row_count() == bands_store.read(spark).count() == n_kept * 8
+    # one repair each, on the first batch after the strip
+    assert sum(r["base"] for r in idx_store.commits()) == 1
+    assert sum(r["base"] for r in bands_store.commits()) == 1
+
+
 def test_incremental_pairs_same_with_and_without_pruned_band_cache(spark):
     """Unit equivalence: supplying the persisted band table (filtered to the
     batch's prefixes) must yield the identical verified pair set as

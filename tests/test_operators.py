@@ -319,6 +319,41 @@ def test_resolve_clusters_diameter_bound(spark):
     assert all(r.root == 0 for r in roots)
 
 
+def test_union_find_matches_spark_cluster_resolution(spark):
+    """The sidecars' driver-side union-find yields the same (id, root)
+    mapping as resolve_duplicate_clusters on seeded random graphs —
+    sparse, clique-heavy, self-looped and duplicated edges, string ids —
+    and, unlike the Spark path, resolves a chain longer than
+    max_iterations."""
+    import random
+
+    import pytest
+
+    from puddin_spark.operators.dedup import (
+        resolve_duplicate_clusters,
+        union_find_min_roots,
+    )
+
+    for seed in range(4):
+        rng = random.Random(seed)
+        nodes = [f"d{rng.randrange(10**6):07d}" for _ in range(rng.randint(20, 60))]
+        edges = [tuple(rng.sample(nodes, 2)) for _ in range(rng.randint(5, 50))]
+        edges += [(a, a) for a in rng.sample(nodes, 2)]
+        edges += edges[:3]
+        local = union_find_min_roots(edges)
+        pairs = spark.createDataFrame(edges, "id_a string, id_b string")
+        remote = {r.id: r.root for r in resolve_duplicate_clusters(pairs).collect()}
+        assert local == remote, seed
+
+    chain = [(i, i + 1) for i in range(12)]
+    with pytest.raises(RuntimeError, match="did not converge"):
+        resolve_duplicate_clusters(
+            spark.createDataFrame(chain, "id_a bigint, id_b bigint"), max_iterations=2
+        )
+    assert union_find_min_roots(chain) == {i: 0 for i in range(13)}
+    assert union_find_min_roots(reversed(chain)) == {i: 0 for i in range(13)}
+
+
 def test_incremental_minhash_pairs(spark):
     """Incremental ingest dedup: pairs touch at least one NEW doc — the
     committed corpus is never re-paired against itself; committed_side

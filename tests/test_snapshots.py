@@ -399,6 +399,41 @@ def test_schema_evolution_read(spark, tmp_path):
     assert got2.filter("lang = 'de' and excl_type is not null").count() == 4
 
 
+def test_partitioned_store_reads_as_one_scan(spark, tmp_path):
+    """Three partitioned commits read as ONE file scan under the recorded
+    schemas: no per-commit Union branch (a filter or semi-join above the
+    read would be copied into each), partition pruning intact, and no
+    schema-inference job."""
+    from pyspark.sql import functions as F
+
+    from puddin_spark.plans import executed_plan
+
+    store = SnapshotStore(tmp_path / "b")
+    for i in range(3):
+        store.commit(
+            spark.range(i * 20, i * 20 + 20).select(
+                F.col("id").cast("string").alias("id"),
+                F.concat(F.lit("p"), (F.col("id") % 4).cast("string")).alias("pfx"),
+            ),
+            partition_by=["pfx"],
+        )
+    rec = store.commits()[-1]
+    assert rec["rows"] == 20 and json.loads(rec["schema"])["fields"]
+    sc = spark.sparkContext
+    sc.setJobGroup("one_scan_read", "store read")
+    try:
+        got = store.read(spark)
+    finally:
+        sc.setJobGroup("after_read", "after")
+    assert not sc.statusTracker().getJobIdsForGroup("one_scan_read")
+    q = got.filter(F.col("pfx") == "p1")
+    plan = executed_plan(q)
+    assert plan.count("FileScan") == 1 and "Union" not in plan
+    assert "PartitionFilters" in plan and "pfx" in plan.split("PartitionFilters")[1][:200]
+    assert sorted(int(r.id) for r in q.collect()) == list(range(1, 60, 4))
+    assert got.columns == ["id", "pfx"] and got.count() == store.row_count() == 60
+
+
 def test_file_skipping_stats_prune_files(spark, tmp_path):
     """commit(stats_cols=...) records per-file min/max (the Iceberg
     manifest column-stats analog); read_where opens a strict subset of
