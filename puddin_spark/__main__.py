@@ -102,6 +102,20 @@ def _gates(spark, args) -> list:
     return gates
 
 
+def _pipeline_kwargs(spark, args) -> dict:
+    """The run_resumable_pipeline keywords `run` and `stream` share."""
+    return dict(
+        num_partitions=args.partitions,
+        near_dedup=args.near_dedup,
+        embedding_near_dedup=args.embedding_near_dedup,
+        srp_planes=args.srp_planes,
+        srp_bands=args.srp_bands,
+        html_fallback=args.html_fallback,
+        fix_mojibake=args.fix_mojibake,
+        gates=_gates(spark, args),
+    )
+
+
 def _lineage_totals(lineage) -> dict:
     """Store-wide doc/keep totals summed from the store's lineage: every
     verdict commit carries the lineage of its rows (record_failures,
@@ -124,22 +138,15 @@ def cmd_run(args) -> int:
     from puddin_spark.snapshots import SnapshotStore, run_resumable_pipeline
 
     spark = get_spark(master=args.master, app_name="puddin_spark.run")
-    gates = _gates(spark, args)
+    kwargs = _pipeline_kwargs(spark, args)
     pages = _pages(spark, args.input, args.subset)
     if args.limit:
         pages = pages.limit(args.limit)
     store = SnapshotStore(f"{args.dest}/verdicts")
     snap_id, n_new = run_resumable_pipeline(
-        spark, pages, store, num_partitions=args.partitions,
-        near_dedup=args.near_dedup,
-        embedding_near_dedup=args.embedding_near_dedup,
-        srp_planes=args.srp_planes,
-        srp_bands=args.srp_bands,
-        html_fallback=args.html_fallback,
-        fix_mojibake=args.fix_mojibake,
+        spark, pages, store, **kwargs,
         # csv (header: domain) or parquet of registered domains
         blocked_domains=_read_table(spark, args.blocklist) if args.blocklist else None,
-        gates=gates,
         partition_by=args.partition_by.split(",") if args.partition_by else None,
     )
     out = {"snapshot_id": snap_id, "new_docs": n_new}
@@ -537,14 +544,7 @@ def cmd_stream(args) -> int:
         args.input,
         store,
         args.checkpoint or f"{args.dest}/checkpoint",
-        num_partitions=args.partitions,
-        near_dedup=args.near_dedup,
-        embedding_near_dedup=args.embedding_near_dedup,
-        srp_planes=args.srp_planes,
-        srp_bands=args.srp_bands,
-        html_fallback=args.html_fallback,
-        fix_mojibake=args.fix_mojibake,
-        gates=_gates(spark, args),
+        **_pipeline_kwargs(spark, args),
     )
     drained = q.awaitTermination(args.stream_timeout)
     if not drained:

@@ -85,6 +85,17 @@ class PslRules:
             out.setdefault(v.count(".") + 1, []).append(v)
         return {k: sorted(v) for k, v in sorted(out.items())}
 
+    def suffix_levels(self) -> list[tuple[int, list[str], list[str]]]:
+        """(s, exact suffixes, wildcard parents) per suffix label count s,
+        longest first: an exact entry of s labels and a wildcard `*.p` with
+        a p of s - 1 labels both match an s-label suffix."""
+        levels: dict[int, tuple[list[str], list[str]]] = {}
+        for s, vals in self.by_labels("exact").items():
+            levels.setdefault(s, ([], []))[0].extend(vals)
+        for p, vals in self.by_labels("wild").items():
+            levels.setdefault(p + 1, ([], []))[1].extend(vals)
+        return [(s, *levels[s]) for s in sorted(levels, reverse=True)]
+
 
 # embedded subset: every TWO_LEVEL entry, a few real three-level entries,
 # and the PSL's canonical wildcard/exception pair (*.ck / !www.ck)
@@ -158,13 +169,7 @@ def url_domain(host: Column | str, rules: PslRules = DEFAULT_PSL) -> Column:
     for c, vals in sorted(rules.by_labels("exc").items(), reverse=True):
         # the exception entry itself is the registered domain
         branches.append(((n >= c) & lastk(c).isin(*vals), lastk(c)))
-    suffix_levels: dict[int, tuple[list[str], list[str]]] = {}
-    for s, vals in rules.by_labels("exact").items():
-        suffix_levels.setdefault(s, ([], []))[0].extend(vals)
-    for p, vals in rules.by_labels("wild").items():
-        suffix_levels.setdefault(p + 1, ([], []))[1].extend(vals)
-    for s in sorted(suffix_levels, reverse=True):
-        exact, wildparents = suffix_levels[s]
+    for s, exact, wildparents in rules.suffix_levels():
         cond = F.lit(False)
         if exact:
             cond = cond | lastk(s).isin(*exact)
@@ -236,13 +241,7 @@ def duckdb_domain_sql(host_expr: str, rules: PslRules = DEFAULT_PSL) -> str:
         whens.append(
             f"when {n} >= {c} and {lastk(c)} in ({inlist(vals)}) then {lastk(c)}"
         )
-    suffix_levels: dict[int, tuple[list[str], list[str]]] = {}
-    for s, vals in rules.by_labels("exact").items():
-        suffix_levels.setdefault(s, ([], []))[0].extend(vals)
-    for p, vals in rules.by_labels("wild").items():
-        suffix_levels.setdefault(p + 1, ([], []))[1].extend(vals)
-    for s in sorted(suffix_levels, reverse=True):
-        exact, wildparents = suffix_levels[s]
+    for s, exact, wildparents in rules.suffix_levels():
         conds = []
         if exact:
             conds.append(f"{lastk(s)} in ({inlist(exact)})")

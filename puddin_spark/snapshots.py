@@ -11,8 +11,8 @@ This module implements that contract directly over parquet because the
 Iceberg runtime jars are not available in this sandbox. The API is shaped so
 an Iceberg catalog can replace the store without touching pipeline code:
 ``commit`` = snapshot append, ``read`` = table scan of the current snapshot
-set, ``processed_keys`` + ``resume_filter`` = the anti-join resume
-(parse_pile.py:999 isin -> left_anti).
+set, ``resume_filter`` = the anti-join resume (parse_pile.py:999 isin ->
+left_anti; run_resumable_pipeline anti-joins by url and by text digest).
 
 Commit protocol (single-writer, crash-safe):
  1. write data files to  base/_staging/<token>/data        (invisible)
@@ -784,15 +784,23 @@ def run_resumable_pipeline(
     )
     for gate in gates:
         verdicts = gate(verdicts)
-    raw_verdicts = verdicts = verdicts.persist()
+    # the one cache of the batch's verdicts: sidecar flips are IN-list
+    # projections over it
+    verdicts = cached = verdicts.persist()
     try:
-        n_new = verdicts.count()
+        # url is the document key (doc_id = sha2(url)): a null one is never
+        # removed as a keep-first loser and drops out of the kept-id
+        # fingerprint. Observed on the count, no extra job
+        nulls = Observation(f"null-urls-{uuid.uuid4().hex}")
+        n_new = cached.observe(nulls, F.count_if(F.col("url").isNull()).alias("n")).count()
         if n_new == 0:
             return -1, 0
+        # an Observation skips provably empty data, so it is read only here
+        n_null = nulls.get["n"]
+        if n_null:
+            raise ValueError(f"{n_null} of {n_new} new documents have a null url")
         if sidecars:
-            verdicts, pending = _near_dedup(spark, store, sidecars, verdicts, committed)
-            verdicts = verdicts.persist()
-            verdicts.count()  # materialize before committing
+            verdicts, pending, dropped = _near_dedup(spark, store, sidecars, verdicts, committed)
         lineage = lineage_table(verdicts, num_partitions=num_partitions).withColumn(
             "snapshot_id", F.lit(store.current_snapshot_id() + 1)
         )
@@ -807,12 +815,10 @@ def run_resumable_pipeline(
             lineage_stats_cols=["snapshot_id"], fingerprint=_KEPT_IDS,
         )
         if sidecars:
-            _commit_near_dedup(store, pending, verdicts)
+            _commit_near_dedup(store, pending, dropped)
         return snap_id, n_new
     finally:
-        verdicts.unpersist()
-        if raw_verdicts is not verdicts:
-            raw_verdicts.unpersist()
+        cached.unpersist()
         if seen is not None:
             seen.unpersist()
 
@@ -823,7 +829,8 @@ _KEPT_IDS = "if(keep, doc_id, null)"
 # new-vs-new edge sets up to this size resolve into clusters on the driver
 # (union_find_min_roots, ~200 bytes per edge); larger ones run the Spark
 # label propagation (resolve_duplicate_clusters). Drop sets up to this size
-# flip verdicts through an IN list (_doc_id_flag)
+# flip verdicts and filter the sidecar commits through an IN list
+# (_doc_id_flag)
 _LOCAL_EDGES = 20_000
 
 # near-dedup sidecar parameters — ONE definition; the index, its band
@@ -1092,11 +1099,13 @@ def _reconciled_index(spark, spec: _Sidecar, idx_store, kept_committed, kept_sta
 def _near_dedup(spark, store, sidecars, verdicts, committed):
     """Run each sidecar over the batch in order — reconcile, band-cache
     gate, index, prefix pruning, pairs, cluster resolution, flip — and
-    return (flipped verdicts, [(sidecar, new index, new bands, occupancy)])
-    for _commit_near_dedup. Spark jobs per batch do not grow with the
-    commit count: gate inputs come from commit records, each store reads
-    as one scan, and a batch-sized new-vs-new edge set resolves on the
-    driver."""
+    return (flipped verdicts, [(sidecar, new index, new bands, occupancy)],
+    the batch's drop set) for _commit_near_dedup. The drop set is the
+    union of the sidecars' driver-side drop sets: the batch's one record
+    of which new docs the sidecars removed. Spark jobs per batch do not
+    grow with the commit count: gate inputs come from commit records, each
+    store reads as one scan, and a batch-sized new-vs-new edge set
+    resolves on the driver."""
     from puddin_spark.operators.dedup import (
         free_local_checkpoints,
         resolve_duplicate_clusters,
@@ -1110,7 +1119,7 @@ def _near_dedup(spark, store, sidecars, verdicts, committed):
         # one (count, xor) fingerprint of the kept set serves every sidecar
         kept_committed = committed.filter("keep")
         kept_stats = store.fingerprint(_KEPT_IDS) or _id_set_stats(committed, _KEPT_IDS)
-    pending = []
+    pending, dropped = [], set()
     for spec in sidecars:
         idx_store, bands_store = spec.stores(store.base)
         committed_idx, n_idx = _reconciled_index(
@@ -1170,41 +1179,49 @@ def _near_dedup(spark, store, sidecars, verdicts, committed):
             drop |= {i for i, root in union_find_min_roots(edges).items() if i != root}
         if drop:
             verdicts = flip_verdicts(verdicts, _doc_id_flag(spark, drop), spec.label)
+        dropped |= drop
         for frame in frees:
             if frame.is_cached:
                 frame.unpersist()
             else:
                 free_local_checkpoints(frame)
         pending.append((spec, new_idx, new_bands, occupancy))
-    return verdicts, pending
+    return verdicts, pending, dropped
 
 
-def _doc_id_flag(spark, ids: set):
-    """flip_verdicts' flag for a driver-side doc_id set: an IN list up to
-    _LOCAL_EDGES ids — a filter, no join and no broadcast job — else a
-    one-column frame."""
+def _doc_id_flag(spark, ids: set, key: str = "doc_id"):
+    """A driver-side id set as a `key` predicate: a boolean IN-list Column
+    up to _LOCAL_EDGES ids — a filter, no join and no broadcast job — else
+    a one-column frame of the distinct ids, for a join. flip_verdicts
+    takes either form as its flag; _commit_near_dedup anti-joins the
+    frame."""
     if len(ids) <= _LOCAL_EDGES:
-        return F.col("doc_id").isin(sorted(ids))
-    return spark.createDataFrame([(i,) for i in sorted(ids)], "doc_id string")
+        return F.col(key).isin(sorted(ids))
+    return spark.createDataFrame([(i,) for i in sorted(ids)], f"{key} string")
 
 
-def _commit_near_dedup(store, pending, verdicts) -> None:
+def _commit_near_dedup(store, pending, dropped: set) -> None:
     """After the verdict commit: each sidecar's index, then its band cache
     (a crash between the two is caught by the row-count gate next batch),
-    each holding exactly the batch's finally kept docs — a doc a later
-    sidecar flipped must not linger in an earlier one's index, or the next
-    batch's reconciliation gate re-fires. Checkpoints are freed only after
-    the last commit: every survivors plan reads them."""
+    each holding exactly the batch's finally kept docs — its new rows minus
+    the batch's drop set, so a doc a later sidecar flipped does not linger
+    in an earlier one's index, or the next batch's reconciliation gate
+    re-fires. Checkpoints are freed only after the last commit: every
+    survivors plan reads them."""
     from puddin_spark.operators.dedup import free_local_checkpoints
 
-    kept_ids = verdicts.filter("keep").select(F.col("doc_id").alias("id"))
+    flag = _doc_id_flag(SparkSession.active(), dropped, "id")
+
+    def survivors(frame):
+        if isinstance(flag, DataFrame):
+            return frame.join(flag, "id", "left_anti")
+        return frame.filter(~flag)
+
     for spec, new_idx, new_bands, occupancy in pending:
         idx_store, bands_store = spec.stores(store.base)
-        idx_store.commit(new_idx.join(kept_ids, "id", "left_semi"), fingerprint="id")
+        idx_store.commit(survivors(new_idx), fingerprint="id")
         bands_store.commit(
-            new_bands.join(kept_ids, "id", "left_semi"),
-            lineage=occupancy,
-            partition_by=[spec.pfx_col],
+            survivors(new_bands), lineage=occupancy, partition_by=[spec.pfx_col]
         )
     for _, new_idx, new_bands, _ in pending:
         free_local_checkpoints(new_idx)

@@ -23,12 +23,12 @@ def validate_run(
     pages: DataFrame,
     verdicts: DataFrame,
     *,
-    selected_lang: str = "en",
     dedup: bool = True,
     digest_aware: bool = False,
     known_fail: DataFrame | None = None,
 ) -> tuple[dict, DataFrame]:
-    """Check verdicts against the pages input they were produced from.
+    """Check verdicts against the pages input they were produced from:
+    its English rows, the only language the pipeline selects.
 
     digest_aware=True validates an INCREMENTAL store (run_resumable_pipeline
     output): a url is not 'missing' if its text digest was committed under
@@ -40,7 +40,7 @@ def validate_run(
     excluded from `by_type` / `ok`, so reruns don't re-alarm on old triage;
     fresh violations alone decide `ok`.
     """
-    selected = pages.filter(F.col("lang") == selected_lang)
+    selected = pages.filter(F.col("lang") == "en")
     if dedup:
         selected = dedup_first(selected)
     sel_urls = selected.select("url")

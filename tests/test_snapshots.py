@@ -628,3 +628,37 @@ def test_resumable_pipeline_decontaminates(spark, tmp_path):
         gates=[partial(apply_decontamination_gate, eval_docs=ev)],
     )
     assert (snap2, n2) == (-1, 0)
+
+
+def test_null_url_batch_raises_before_any_commit(spark, tmp_path):
+    """url is the document key (doc_id = sha2(url)): a null url would never
+    be removed as a keep-first loser and would drop out of the kept-id
+    fingerprint. The count that sizes the batch observes null urls, and a
+    batch holding one fails loudly before anything is committed."""
+    import pytest
+
+    from puddin_spark.synth import SPARK_SCHEMA_DDL, gen_rows
+
+    store = SnapshotStore(tmp_path / "verdicts")
+    rows = gen_rows(0, 40, include_fixtures=False)
+    pages = spark.createDataFrame(rows[:20], schema=SPARK_SCHEMA_DDL)
+    run_resumable_pipeline(spark, pages, store, num_partitions=2)
+    before = store.commits()
+    batch = spark.createDataFrame(rows[20:], schema=SPARK_SCHEMA_DDL)
+    orphan = spark.createDataFrame(
+        [(None, "A null url page with plenty of ordinary english words in it.")],
+        "url string, text string",
+    ).selectExpr(
+        "url", "cast('2024-01-01' as timestamp) as warc_ts",
+        "cast(null as binary) as html", "text", "'en' as lang",
+    ).select(*pages.columns)
+    with pytest.raises(ValueError, match="1 of .* null url"):
+        run_resumable_pipeline(
+            spark, batch.unionByName(orphan), store, num_partitions=2, near_dedup=True
+        )
+    assert store.commits() == before
+    assert not (tmp_path / "verdicts" / "minhash_index").exists()
+    snap, n = run_resumable_pipeline(
+        spark, batch, store, num_partitions=2, near_dedup=True
+    )
+    assert snap == 1 and n > 0

@@ -21,6 +21,7 @@ case only the embedding family can catch.
 from __future__ import annotations
 
 import shutil
+from functools import reduce
 
 from pyspark.sql import functions as F
 
@@ -342,3 +343,92 @@ def test_stale_sidecar_over_wiped_store_heals(spark, tmp_path):
         assert {"band", "bucket", "n_new", "n_committed", "n_total"} <= set(
             occ.columns
         )
+
+
+def test_large_drop_set_branch_matches_default(spark, tmp_path, monkeypatch):
+    """Above snapshots._LOCAL_EDGES, new-vs-new clusters resolve in Spark
+    (resolve_duplicate_clusters), verdicts flip through a one-column id
+    frame, and the sidecar commits anti-join that frame. Forcing the bound
+    to 0 must commit the same verdict, index and band rows as the default
+    run. At the default bound the index and band commits read the batch's
+    drop set as an IN filter: their write plans hold no join."""
+    from puddin_spark import snapshots
+    from puddin_spark.operators import dedup
+    from puddin_spark.synth import _prose
+
+    pages = synth_pages_local(spark, 40).cache()
+
+    def page(url, text):
+        return spark.createDataFrame(
+            [(url, text)], "url string, text string"
+        ).selectExpr(
+            "url", "cast('2024-01-01' as timestamp) as warc_ts",
+            "cast(null as binary) as html", "text", "'en' as lang",
+        ).select(*pages.columns)
+
+    plans = []
+    real_commit = snapshots.SnapshotStore.commit
+
+    def commit(self, df, *a, **kw):
+        if self.base.name.endswith(("_index", "_bands")) and not kw.get("base"):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_commit(self, df, *a, **kw)
+
+    monkeypatch.setattr(snapshots.SnapshotStore, "commit", commit)
+
+    def run(name):
+        store = SnapshotStore(tmp_path / name)
+        run_resumable_pipeline(
+            spark, pages, store, num_partitions=2,
+            near_dedup=True, embedding_near_dedup=True,
+        )
+        srcs = store.read(spark).filter("keep").orderBy("doc_id").limit(2).collect()
+        mh, emb = _prose(9001), _prose(9002)
+        batch2 = [
+            page("https://twin.example/mh", srcs[0].clean_text + " extra tail words here"),
+            _emb_twin(spark, srcs[1].clean_text, "https://twin.example/eb", pages),
+            page("https://new.example/mh-a", mh),
+            page("https://new.example/mh-b", mh + " extra tail words here"),
+            page("https://new.example/eb-a", emb),
+            _emb_twin(spark, emb, "https://new.example/eb-b", pages),
+        ]
+        del plans[:]
+        run_resumable_pipeline(
+            spark, reduce(lambda a, b: a.unionByName(b), batch2), store,
+            num_partitions=2,
+            near_dedup=True, embedding_near_dedup=True,
+        )
+        tables = [store.read(spark)] + [
+            SnapshotStore(store.base / n).read(spark)
+            for n in ("minhash_index", "minhash_bands", "srp_index", "srp_bands")
+        ]
+        return tables, list(plans)
+
+    default, default_plans = run("default")
+    planted = default[0].filter("url like 'https://twin.%' or url like 'https://new.%'")
+    flips = {r.url: r.excl_type for r in planted.filter("not keep").collect()}
+    # the committed twins flip; each in-batch pair loses one member
+    assert flips.pop("https://twin.example/mh") == "near_dup"
+    assert flips.pop("https://twin.example/eb") == "emb_near_dup"
+    assert sorted((u[:-2], t) for u, t in flips.items()) == [
+        ("https://new.example/eb", "emb_near_dup"),
+        ("https://new.example/mh", "near_dup"),
+    ]
+    assert len(default_plans) == 4
+    assert not any("Join" in p for p in default_plans), default_plans
+
+    resolved = []
+    real_resolve = dedup.resolve_duplicate_clusters
+
+    def resolve(*a, **kw):
+        resolved.append(1)
+        return real_resolve(*a, **kw)
+
+    monkeypatch.setattr(snapshots, "_LOCAL_EDGES", 0)
+    monkeypatch.setattr(dedup, "resolve_duplicate_clusters", resolve)
+    forced, forced_plans = run("forced")
+    assert len(resolved) >= 2  # both sidecars, batch 2
+    assert all("Join" in p for p in forced_plans)
+    for a, b in zip(default, forced):
+        assert a.columns == b.columns
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
