@@ -12,7 +12,8 @@ Iceberg runtime jars are not available in this sandbox. The API is shaped so
 an Iceberg catalog can replace the store without touching pipeline code:
 ``commit`` = snapshot append, ``read`` = table scan of the current snapshot
 set, ``resume_filter`` = the anti-join resume (parse_pile.py:999 isin ->
-left_anti; run_resumable_pipeline anti-joins by url and by text digest).
+left_anti; run_resumable_pipeline calls it by url and by text digest on a
+narrow (url, text_sha) frame of the batch, before any UDF plan).
 
 Commit protocol (single-writer, crash-safe):
  1. write data files to  base/_staging/<token>/data        (invisible)
@@ -579,15 +580,17 @@ class SnapshotStore:
     def resume_filter(
         self, spark: SparkSession, incoming: DataFrame, key: str = "url"
     ) -> DataFrame:
-        """incoming ∖ already-committed, by key (left_anti; the committed key
-        set is typically far smaller than the input, and Spark/AQE picks
-        broadcast vs shuffled anti-join from runtime stats)."""
+        """incoming ∖ already-committed, by `key`: a left-anti join against
+        the committed `key` column as stored, with no distinct (an anti-join
+        needs none, and a distinct adds an aggregate over the whole
+        committed column). Spark/AQE picks broadcast vs shuffled anti-join
+        from runtime stats. Rows with a null `key` never match and pass
+        through. run_resumable_pipeline calls it once per key (url, then
+        text_sha) on its narrow (url, text_sha) frame of the batch."""
         committed = self.read(spark)
         if committed is None:
             return incoming
-        return incoming.join(
-            committed.select(F.col(key)).distinct(), key, "left_anti"
-        )
+        return incoming.join(committed.select(key), key, "left_anti")
 
 
 def record_failures(
@@ -669,6 +672,21 @@ def run_resumable_pipeline(
     """One resumable pipeline run: process only not-yet-committed urls,
     commit verdicts + per-partition lineage atomically.
 
+    Resume is a narrow pre-pass. Against a store with commits, the batch's
+    English rows are projected to (url, sha2(text) AS text_sha) and
+    anti-joined against the committed url and text_sha columns
+    (resume_filter, once per key); only these narrow rows and the
+    committed key columns can cross an exchange. The pre-pass is persisted,
+    and its count is the one materializing job: when it is 0 the run
+    returns (-1, 0) before any UDF plan is built. Otherwise the body pass
+    reads pages ⋉ broadcast(new urls), null-safe on url so a null-url row
+    reaches the verdict count and fails the batch. The new-url set is
+    bounded by the batch and is broadcast whole, under the same memory
+    contract as the keep-first loser set (pipeline module docstring): a
+    batch whose new urls cannot fit in a broadcast must be split by the
+    caller. A store with no commit runs quality_pipeline on the batch
+    directly.
+
     near_dedup=True and embedding_near_dedup=True each fuzzy-dedup every
     batch against every PRIOR batch through a sidecar beside the verdict
     store (_Sidecar): a signature index of the surviving kept docs plus its
@@ -741,15 +759,14 @@ def run_resumable_pipeline(
             bands=partial(_srp_bands_table, num_planes=srp_planes, num_bands=srp_bands),
             band_rows=srp_bands,
         ))
-    # one scan of the commit history serves both anti-joins (url, then
-    # text digest). The digest join is the global keep-first dedup across
-    # runs: a url whose text body was already processed under another url in
-    # a PRIOR commit never reprocesses (quality_pipeline's keep-first only
+    # the digest anti-join is the global keep-first dedup across runs: a
+    # url whose text body was already processed under another url in a
+    # PRIOR commit never reprocesses (quality_pipeline's keep-first only
     # sees the current todo set) — without it, urls shadowed by an in-run
-    # duplicate would be rediscovered on every rerun and resume would not be
-    # idempotent.
+    # duplicate would be rediscovered on every rerun and resume would not
+    # be idempotent.
     if html_fallback:
-        # substitute extracted text BEFORE the sha2 anti-join below:
+        # substitute extracted text BEFORE the digest anti-join below:
         # WET-missing rows all share the empty-string digest, so hashing
         # the raw column would anti-join every later html-only row against
         # the first committed one (operators/html.py note)
@@ -766,28 +783,37 @@ def run_resumable_pipeline(
         pages = pages.withColumn("text", F.expr(fix_mojibake_expr("text")))
     committed = store.read(spark)
     todo = pages
-    seen = None
-    if committed is not None:
-        cols = ["url"] + (["text_sha"] if "text_sha" in committed.columns else [])
-        seen = committed.select(*cols).persist()
-        todo = todo.join(seen.select("url").distinct(), "url", "left_anti")
-        if "text_sha" in cols:
-            todo = todo.join(
-                seen.select("text_sha").distinct(),
-                F.sha2(todo["text"], 256) == F.col("text_sha"),
-                "left_anti",
-            )
-    # with_timing: Arrow-batch stamps ride the UDF pass so the committed
-    # lineage carries real per-partition started_at/finished_at/duration_s
-    verdicts = quality_pipeline(
-        todo, with_timing=True, blocked_domains=blocked_domains
-    )
-    for gate in gates:
-        verdicts = gate(verdicts)
-    # the one cache of the batch's verdicts: sidecar flips are IN-list
-    # projections over it
-    verdicts = cached = verdicts.persist()
+    persisted = []
     try:
+        if committed is not None:
+            new = pages.filter(F.col("lang") == "en").select(
+                "url", F.sha2("text", 256).alias("text_sha")
+            )
+            for key in ("url", "text_sha"):
+                if key in committed.columns:
+                    new = store.resume_filter(spark, new, key)
+            new = new.persist()
+            persisted.append(new)
+            if new.count() == 0:
+                return -1, 0
+            # null-safe: a null-url row reaches the verdict count below and
+            # fails the batch
+            todo = pages.join(
+                F.broadcast(new.select(F.col("url").alias("_new_url"))),
+                F.col("url").eqNullSafe(F.col("_new_url")),
+                "left_semi",
+            )
+        # with_timing: Arrow-batch stamps ride the UDF pass so the committed
+        # lineage carries real per-partition started_at/finished_at/duration_s
+        verdicts = quality_pipeline(
+            todo, with_timing=True, blocked_domains=blocked_domains
+        )
+        for gate in gates:
+            verdicts = gate(verdicts)
+        # the one cache of the batch's verdicts: sidecar flips are IN-list
+        # projections over it
+        verdicts = cached = verdicts.persist()
+        persisted.append(cached)
         # url is the document key (doc_id = sha2(url)): a null one is never
         # removed as a keep-first loser and drops out of the kept-id
         # fingerprint. Observed on the count, no extra job
@@ -818,9 +844,8 @@ def run_resumable_pipeline(
             _commit_near_dedup(store, pending, dropped)
         return snap_id, n_new
     finally:
-        cached.unpersist()
-        if seen is not None:
-            seen.unpersist()
+        for frame in persisted:
+            frame.unpersist()
 
 
 # the verdict store's kept-id set, as a commit fingerprint: every sidecar
@@ -1194,10 +1219,15 @@ def _doc_id_flag(spark, ids: set, key: str = "doc_id"):
     up to _LOCAL_EDGES ids — a filter, no join and no broadcast job — else
     a one-column frame of the distinct ids, for a join. flip_verdicts
     takes either form as its flag; _commit_near_dedup anti-joins the
-    frame."""
+    frame. The frame is a local list with no size statistics, so it is
+    broadcast: every plan that joins it (each verdict, lineage and sidecar
+    write) then builds one hash table from it instead of shuffling both
+    sides. The set is a subset of the batch's kept ids, bounded by the
+    batch like the keep-first loser set (pipeline module docstring:
+    memory contract)."""
     if len(ids) <= _LOCAL_EDGES:
         return F.col(key).isin(sorted(ids))
-    return spark.createDataFrame([(i,) for i in sorted(ids)], f"{key} string")
+    return F.broadcast(spark.createDataFrame([(i,) for i in sorted(ids)], f"{key} string"))
 
 
 def _commit_near_dedup(store, pending, dropped: set) -> None:

@@ -128,6 +128,63 @@ def test_pipeline_body_never_shuffles(spark, case):
     assert "text#" not in hash_exchanges[0], hash_exchanges[0]
 
 
+def _exchange_outputs(df) -> list[tuple[str, list[str]]]:
+    """(node name, output column names) of every exchange in df's
+    executed plan, including the plans of the cached frames it reads."""
+    found = []
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk(node):
+        name = node.nodeName()
+        if name.endswith("Exchange"):
+            found.append((name, [a.name() for a in seq(node.output())]))
+        if name == "AdaptiveSparkPlan":
+            walk(node.executedPlan())
+        if name == "InMemoryTableScan":
+            walk(node.relation().cachedPlan())
+        for child in seq(node.children()):
+            walk(child)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def test_resume_body_never_shuffles(spark, tmp_path, monkeypatch):
+    """The resume anti-joins run on a narrow (url, text_sha) frame and the
+    body pass semi-joins the broadcast new urls: with broadcast joins
+    disabled (the regime of a large committed store), a second batch's
+    verdict plan shuffles narrow rows only — no exchange carries `text`."""
+    from puddin_spark import pipeline
+    from puddin_spark.snapshots import SnapshotStore, run_resumable_pipeline
+    from puddin_spark.synth import synth_pages_local
+
+    pages = synth_pages_local(spark, 120).cache()
+    store = SnapshotStore(tmp_path / "verdicts")
+    run_resumable_pipeline(spark, pages.limit(60), store, num_partitions=2)
+
+    verdicts = []
+    real = pipeline.quality_pipeline
+
+    def capture(*a, **kw):
+        verdicts.append(real(*a, **kw))
+        return verdicts[-1]
+
+    monkeypatch.setattr(pipeline, "quality_pipeline", capture)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        snap, n = run_resumable_pipeline(spark, pages, store, num_partitions=2)
+        exchanges = _exchange_outputs(verdicts[0])
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert snap == 1 and n > 0
+    # the committed-side anti-joins shuffle; the body pass broadcasts
+    assert any(name == "Exchange" for name, _ in exchanges), exchanges
+    assert not [e for e in exchanges if "text" in e[1]], exchanges
+
+
 def test_embedding_near_dup_is_bucket_join_not_cartesian(spark):
     """Near-dup candidates must come from the SRP-bucket equi-join — a
     cartesian/nested-loop pair generation would be the 10^12-row disaster."""

@@ -662,3 +662,30 @@ def test_null_url_batch_raises_before_any_commit(spark, tmp_path):
         spark, batch, store, num_partitions=2, near_dedup=True
     )
     assert snap == 1 and n > 0
+
+
+def test_rerun_is_narrow_no_op(spark, tmp_path, monkeypatch):
+    """A rerun that finds nothing new ends on the narrow (url, text_sha)
+    resume pre-pass: quality_pipeline is never called, and the whole call
+    runs at most 6 Spark jobs."""
+    from conftest import jobs_in
+
+    from puddin_spark import pipeline
+
+    store = SnapshotStore(tmp_path / "verdicts")
+    pages = synth_pages_local(spark, 120).cache()
+    snap, n = run_resumable_pipeline(spark, pages, store, num_partitions=2)
+    assert snap == 0 and n > 0
+
+    def no_udf_plan(*a, **kw):
+        raise AssertionError("quality_pipeline called on a no-op rerun")
+
+    monkeypatch.setattr(pipeline, "quality_pipeline", no_udf_plan)
+    out = []
+    n_jobs = jobs_in(
+        spark,
+        lambda: out.append(run_resumable_pipeline(spark, pages, store, num_partitions=2)),
+    )
+    assert out == [(-1, 0)]
+    assert n_jobs <= 6, n_jobs
+    assert store.current_snapshot_id() == 0

@@ -351,7 +351,10 @@ def test_large_drop_set_branch_matches_default(spark, tmp_path, monkeypatch):
     frame, and the sidecar commits anti-join that frame. Forcing the bound
     to 0 must commit the same verdict, index and band rows as the default
     run. At the default bound the index and band commits read the batch's
-    drop set as an IN filter: their write plans hold no join."""
+    drop set as an IN filter: their write plans hold no join. The forced
+    branch broadcasts its id frame, which bounds its extra Spark jobs."""
+    from conftest import jobs_in
+
     from puddin_spark import snapshots
     from puddin_spark.operators import dedup
     from puddin_spark.synth import _prose
@@ -393,18 +396,18 @@ def test_large_drop_set_branch_matches_default(spark, tmp_path, monkeypatch):
             _emb_twin(spark, emb, "https://new.example/eb-b", pages),
         ]
         del plans[:]
-        run_resumable_pipeline(
+        n_jobs = jobs_in(spark, lambda: run_resumable_pipeline(
             spark, reduce(lambda a, b: a.unionByName(b), batch2), store,
             num_partitions=2,
             near_dedup=True, embedding_near_dedup=True,
-        )
+        ))
         tables = [store.read(spark)] + [
             SnapshotStore(store.base / n).read(spark)
             for n in ("minhash_index", "minhash_bands", "srp_index", "srp_bands")
         ]
-        return tables, list(plans)
+        return tables, list(plans), n_jobs
 
-    default, default_plans = run("default")
+    default, default_plans, default_jobs = run("default")
     planted = default[0].filter("url like 'https://twin.%' or url like 'https://new.%'")
     flips = {r.url: r.excl_type for r in planted.filter("not keep").collect()}
     # the committed twins flip; each in-batch pair loses one member
@@ -426,9 +429,13 @@ def test_large_drop_set_branch_matches_default(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(snapshots, "_LOCAL_EDGES", 0)
     monkeypatch.setattr(dedup, "resolve_duplicate_clusters", resolve)
-    forced, forced_plans = run("forced")
+    forced, forced_plans, forced_jobs = run("forced")
     assert len(resolved) >= 2  # both sidecars, batch 2
     assert all("Join" in p for p in forced_plans)
+    # the id frame is broadcast, so no plan that joins it shuffles it: on
+    # this batch the branch costs 48 jobs over the default (label
+    # propagation included), and 64 when every join shuffled both sides
+    assert forced_jobs - default_jobs <= 56, (default_jobs, forced_jobs)
     for a, b in zip(default, forced):
         assert a.columns == b.columns
         assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
