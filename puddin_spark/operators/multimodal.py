@@ -1,13 +1,15 @@
-"""Multimodal column plumbing: images/audio/video as opaque binary columns
-with typed metadata, processed via Arrow-batched mapInPandas.
+"""Multimodal column plumbing: images/audio/video as opaque binary columns,
+processed via Arrow-batched mapInPandas in three shapes: binary -> typed
+metadata (`extract_media_meta`), binary -> one row per sampled frame
+(`sample_frames`) and binary -> embedding (`embed_media`).
 
-The decode libraries (Pillow, ffmpeg, torchaudio, ...) are NOT in this
-container, so the actual pixel/sample decoding is stubbed behind
-`NotImplementedError` (decode_image_real) with a deterministic fake
-(decode_stub) that exercises the REAL Spark plumbing: binary column in,
-struct-of-metadata out, bounded Arrow batches, per-executor worker reuse.
-Swap `_DECODER` for a real function on a cluster with the libs installed —
-the schema, partitioning and batch shape don't change.
+No decode library (Pillow, ffmpeg, torchaudio, ...) is a dependency, so each
+shape calls a deterministic stub that is a pure function of the bytes
+(`decode_stub`, `frames_stub`, `embed_stub`) through a module-level seam
+(`_DECODER`, `_FRAMER`, `_EMBEDDER`). The Spark side is real: binary column
+in, bounded Arrow batches out, per-executor worker reuse. Binding a seam to a
+real function changes neither the schema, the partitioning nor the batch
+shape.
 """
 from __future__ import annotations
 
@@ -21,14 +23,6 @@ from pyspark.sql import functions as F
 META_SCHEMA = (
     "doc_id bigint, n_bytes bigint, sha256 string, fake_width int, fake_height int"
 )
-
-
-def decode_image_real(data: bytes) -> dict:
-    """Real decode path — requires an image library not present here."""
-    raise NotImplementedError(
-        "image decoding requires Pillow/libvips; install on the cluster and "
-        "swap _DECODER = decode_image_real"
-    )
 
 
 def decode_stub(data: bytes) -> dict:
@@ -68,20 +62,9 @@ def extract_media_meta(
     return cols.mapInPandas(run, schema=META_SCHEMA)
 
 
-# --- frame sampling (video), resize (image), feature extraction ---
-# Same stub-behind-a-seam discipline as decode: the real functions raise
-# until the decode libs exist; the stubs are deterministic pure functions of
-# the bytes so tests and SQL oracles can verify the full Spark plumbing
-# (row multiplication, binary passthrough, Arrow batch shapes).
+# --- frame sampling (video) and feature extraction ---
 
 FRAME_SCHEMA = "doc_id bigint, frame_ix int, ts_ms int, frame binary"
-
-
-def extract_frames_real(data: bytes, frame_bytes: int):
-    raise NotImplementedError(
-        "video frame extraction requires ffmpeg/pyav; install on the "
-        "cluster and swap _FRAMER = extract_frames_real"
-    )
 
 
 def frames_stub(data: bytes, frame_bytes: int = 256, frame_ms: int = 40):
@@ -107,7 +90,7 @@ def sample_frames(
     """Video binary -> one row per sampled frame (keep every n-th): the
     row-MULTIPLYING mapInPandas shape — one input batch yields a larger
     output batch, which Arrow streams without materializing per-doc frame
-    lists. Downstream ops (resize, embed, dedup) are per-frame rows, so
+    lists. Downstream ops (embed, dedup) are per-frame rows, so
     partitioning/skew handling is the ordinary row machinery."""
     cols = df.select(F.col(id_col).alias("doc_id"), F.col(bin_col).alias("media"))
 
@@ -124,66 +107,6 @@ def sample_frames(
             yield pd.DataFrame(rows, columns=["doc_id", "frame_ix", "ts_ms", "frame"])
 
     return cols.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-RESIZE_SCHEMA = "doc_id bigint, width int, height int, pixels binary"
-
-
-def resize_image_real(data: bytes, width: int, height: int):
-    raise NotImplementedError(
-        "image resize requires Pillow/libvips; install on the cluster and "
-        "swap _RESIZER = resize_image_real"
-    )
-
-
-def resize_stub(data: bytes, width: int, height: int) -> bytes:
-    """Deterministic fake resample: nearest-neighbor over the byte stream to
-    exactly width*height output bytes (empty input -> zero bytes)."""
-    n = width * height
-    if not data:
-        return bytes(n)
-    src = len(data)
-    return bytes(data[(i * src) // n] for i in range(n))
-
-
-_RESIZER = resize_stub
-
-
-def resize_images(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    bin_col: str = "media",
-    *,
-    width: int = 32,
-    height: int = 32,
-) -> DataFrame:
-    """Image binary -> fixed-size pixel buffer (binary out, size-checked):
-    the binary-to-binary mapInPandas shape."""
-    cols = df.select(F.col(id_col).alias("doc_id"), F.col(bin_col).alias("media"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        resizer = _RESIZER
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": width,
-                    "height": height,
-                    "pixels": [
-                        resizer(bytes(b), width, height) if b is not None else None
-                        for b in pdf["media"]
-                    ],
-                }
-            )
-
-    return cols.mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-def embed_media_real(data: bytes, dim: int):
-    raise NotImplementedError(
-        "media embedding requires a vision/audio model; install on the "
-        "cluster and swap _EMBEDDER = embed_media_real"
-    )
 
 
 def embed_stub(data: bytes, dim: int = 64) -> list[float]:

@@ -157,11 +157,6 @@ def _scrub_stage1_batch(texts: pd.Series) -> pd.Series:
 scrub_stage1_udf = F.pandas_udf(_scrub_stage1_batch, T.StringType())
 
 
-@F.pandas_udf(T.StringType())
-def scrub_full_udf(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: rules.scrub(t) if t is not None else None)
-
-
 def _classify_batch(mids: pd.Series) -> pd.Series:
     _, midword_mask = _classify_guard_masks(list(mids), with_punc=False)
     return pd.Series(

@@ -179,15 +179,11 @@ def test_minhash_xxhash64_path_matches_md5_pairs(spark):
         minhash_lsh_pairs(both, "doc_id", "text", hash_impl="sha1", **kw)
 
 
-def test_multimodal_frame_resize_embed_plumbing(spark):
-    """The three media plumbing shapes: row-multiplying frame sampling
-    (with tail frame), binary->binary resize (size contract), and
-    binary->embedding feature extraction composing with the similarity
-    operators (equal media -> cosine 1.0 near-dup pair)."""
-    from puddin_spark.operators.multimodal import (
-        embed_media, embed_media_real, extract_frames_real, resize_image_real,
-        resize_images, sample_frames,
-    )
+def test_multimodal_frame_embed_plumbing(spark):
+    """Two media plumbing shapes: row-multiplying frame sampling (with tail
+    frame) and binary->embedding feature extraction composing with the
+    similarity operators (equal media -> cosine 1.0 near-dup pair)."""
+    from puddin_spark.operators.multimodal import embed_media, sample_frames
     from puddin_spark.operators.similarity import srp_candidate_pairs
 
     media = spark.createDataFrame(
@@ -208,27 +204,10 @@ def test_multimodal_frame_resize_embed_plumbing(spark):
     fr2 = sample_frames(media, frame_bytes=256, every_n=2).collect()
     assert sorted(r.frame_ix for r in fr2 if r.doc_id == 1) == [0, 2]
 
-    # resize: exact width*height bytes, deterministic
-    rs = {r.doc_id: r for r in resize_images(media, width=8, height=4).collect()}
-    assert len(bytes(rs[1].pixels)) == 32
-    assert bytes(rs[1].pixels) == bytes(rs[3].pixels)  # same media, same pixels
-    assert rs[4].pixels is None
-
     # embed: equal media -> identical embeddings -> exact-duplicate pair
     emb = embed_media(media.filter("media is not null"), dim=16)
     pairs = srp_candidate_pairs(emb, min_cos=0.999).collect()
     assert {(p.id_a, p.id_b) for p in pairs} == {(1, 3)}
-
-    # real seams stay honest
-    import pytest
-
-    for fn, args in [
-        (extract_frames_real, (b"x", 256)),
-        (resize_image_real, (b"x", 2, 2)),
-        (embed_media_real, (b"x", 8)),
-    ]:
-        with pytest.raises(NotImplementedError):
-            fn(*args)
 
 
 def test_lsh_hot_bucket_guard(spark):
