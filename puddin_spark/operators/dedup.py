@@ -21,6 +21,7 @@ bit-for-bit (Spark's xxhash64/hash are not portable across engines).
 from __future__ import annotations
 
 import hashlib
+from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -781,11 +782,11 @@ def resolve_duplicate_clusters(
     once the caller has materialized everything derived from it.
 
     Each round costs two Spark jobs (checkpoint + convergence count) plus
-    its shuffle stages: 26 jobs and 3-5 s for the two near-dedup sidecars
-    of one 200-doc benchmark batch (a few dozen edges; 4 vCPUs at
-    local[3]). Edge sets that fit in driver memory resolve identically,
-    with no job, through union_find_min_roots; the near-dedup sidecars
-    call this function only above their driver-side edge bound
+    its shuffle stages, and one call runs at least two rounds (the last
+    one confirms convergence): ~10 jobs per call on the sidecars' LSH
+    graphs. Edge sets that fit in driver memory resolve identically, with
+    no job, through union_find_min_roots; the near-dedup sidecars call
+    this function only above their driver-side edge bound
     (snapshots._LOCAL_EDGES).
     """
     # both edge directions via ONE explode over the pair rows: the union-of-
@@ -882,6 +883,54 @@ def union_find_min_roots(edges) -> dict:
     return {x: find(x) for x in parent}
 
 
+def round6_at_least(x: float, threshold: float) -> bool:
+    """Spark's `round(x, 6) >= threshold` for a double x, on the driver.
+    Spark rounds a double HALF_UP on its decimal string
+    (java.math.BigDecimal.valueOf, i.e. Double.toString); Python's repr is
+    the same shortest round-trip string, so both round the same digits."""
+    return float(Decimal(repr(x)).quantize(_ROUND6, rounding=ROUND_HALF_UP)) >= threshold
+
+
+_ROUND6 = Decimal("0.000001")
+
+
+def jaccard_at_least(a: set, b: set, threshold: float) -> bool:
+    """_verify_jaccard's decision for two shingle sets, on the driver:
+    |a & b| / |a | b| thresholded the way Spark's round(x, 6) decides it
+    (round6_at_least)."""
+    inter = len(a & b)
+    return round6_at_least(inter / (len(a) + len(b) - inter), threshold)
+
+
+def local_buckets(keys) -> dict:
+    """{(band, key): [row, ...]} over per-row band-key lists (position =
+    band): the driver twin of bucket_pairs' new-side self-join."""
+    out: dict = {}
+    for row, row_keys in enumerate(keys):
+        for band, key in enumerate(row_keys):
+            out.setdefault((band, key), []).append(row)
+    return out
+
+
+def local_minhash_pairs(ids, shingles, keys, *, jaccard_threshold: float = 0.5) -> set:
+    """Driver twin of incremental_minhash_pairs(new, None): the (id_a,
+    id_b) pairs, id_a < id_b, that share a (band_ix, band_key) and whose
+    shingle-set Jaccard passes _verify_jaccard's threshold
+    (jaccard_at_least). `keys` holds each row's band_table keys in band
+    order."""
+    sets = [set(s) for s in shingles]
+    cand = set()
+    for rows in local_buckets(keys).values():
+        for i, a in enumerate(rows):
+            for b in rows[i + 1:]:
+                cand.add((a, b) if ids[a] < ids[b] else (b, a))
+    return {
+        (ids[a], ids[b])
+        for a, b in cand
+        if jaccard_at_least(sets[a], sets[b], jaccard_threshold)
+    }
+
+
 def minhash_index(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -929,11 +978,15 @@ def band_table(
             F.array(*_band_key_cols(num_bands, band_size, hash_impl))
         ).alias("band_ix", "band_key"),
     )
+    return bands.withColumn("band_pfx", band_prefix(F.col("band_key"), hash_impl))
+
+
+def band_prefix(key, hash_impl: str = "md5"):
+    """band_table's band_pfx of a band-key Column: 'p' and the key's first
+    hex digit (md5), or 'p' and its value mod 16 in hex (xxhash64)."""
     if hash_impl == "xxhash64":
-        pfx = F.concat(F.lit("p"), F.lower(F.hex(F.pmod("band_key", F.lit(16)))))
-    else:
-        pfx = F.concat(F.lit("p"), F.substring("band_key", 1, 1))
-    return bands.withColumn("band_pfx", pfx)
+        return F.concat(F.lit("p"), F.lower(F.hex(F.pmod(key, F.lit(16)))))
+    return F.concat(F.lit("p"), F.substring(key, 1, 1))
 
 
 def incremental_minhash_pairs(

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from puddin_spark.operators.dedup import bucket_pairs
+from puddin_spark.operators.dedup import bucket_pairs, local_buckets
 
 
 def rebalanced(df: DataFrame) -> DataFrame:
@@ -489,6 +489,83 @@ def _cos_block(a, an, c, cn):
         return np.round(scores / (an[:, None] * cn[None, :]), 6)
 
 
+def _block_pairs(ids, vectors, min_cos: float, chunk: int) -> pd.DataFrame:
+    """(id_a, id_b, cos_sim) with id_a < id_b for every pair of one bucket's
+    members whose _cos_block score clears min_cos: the bucket's pairwise
+    block as chunked matmuls, self-pairs dropped, one row per pair."""
+    import numpy as np
+
+    v = np.asarray(vectors, dtype=np.float64)
+    n = np.linalg.norm(v, axis=1)
+    out_a, out_b, out_c = [], [], []
+    for s in range(0, v.shape[0], chunk):
+        scores = _cos_block(v, n, v[s : s + chunk], n[s : s + chunk])
+        ri, ci = np.nonzero(scores >= min_cos)
+        ci_g = ci + s  # global column index
+        keep = ri != ci_g  # drop self-pairs
+        ri, ci_g = ri[keep], ci_g[keep]
+        if ri.size:
+            a_ids, b_ids = ids[ri], ids[ci_g]
+            swap = a_ids > b_ids
+            out_a.append(np.where(swap, b_ids, a_ids))
+            out_b.append(np.where(swap, a_ids, b_ids))
+            out_c.append(scores[ri, ci_g - s])
+    if not out_a:
+        return pd.DataFrame(
+            {
+                "id_a": pd.Series([], dtype=object),
+                "id_b": pd.Series([], dtype=object),
+                "cos_sim": pd.Series([], dtype=float),
+            }
+        )
+    return pd.DataFrame(
+        {
+            "id_a": np.concatenate(out_a),
+            "id_b": np.concatenate(out_b),
+            "cos_sim": np.concatenate(out_c),
+        }
+    ).drop_duplicates(["id_a", "id_b"])
+
+
+def first_hits(a, c, min_cos: float, chunk: int = 4096):
+    """Boolean mask over the rows of `a` (vectors): True where some row of
+    `c` scores _cos_block >= min_cos. `c` is scanned in `chunk`-row slices
+    and a row stops being scored at its first hit (the vs-committed kernel
+    of committed_srp_flip_ids)."""
+    import numpy as np
+
+    a = np.asarray(a, dtype=np.float64)
+    c = np.asarray(c, dtype=np.float64)
+    an = np.linalg.norm(a, axis=1)
+    cn = np.linalg.norm(c, axis=1)
+    hits = np.zeros(len(a), dtype=bool)
+    live = np.arange(len(a))
+    for s in range(0, c.shape[0], chunk):
+        if live.size == 0:
+            break
+        scores = _cos_block(a[live], an[live], c[s : s + chunk], cn[s : s + chunk])
+        h = (scores >= min_cos).any(axis=1)
+        hits[live[h]] = True
+        live = live[~h]
+    return hits
+
+
+def local_srp_pairs(ids, vectors, keys, *, min_cos: float, chunk: int = 4096) -> set:
+    """Driver twin of srp_batch_pairs_matmul: the (id_a, id_b) pairs that
+    share a (band, bucket) and clear min_cos in that bucket's block
+    (_block_pairs, the same kernel). `keys` holds each row's
+    srp_band_buckets_udf buckets in band order."""
+    import numpy as np
+
+    ids = np.asarray(ids, dtype=object)
+    out = set()
+    for rows in local_buckets(keys).values():
+        if len(rows) > 1:
+            pairs = _block_pairs(ids[rows], [vectors[r] for r in rows], min_cos, chunk)
+            out.update(zip(pairs["id_a"], pairs["id_b"]))
+    return out
+
+
 def srp_batch_pairs_matmul(
     index: DataFrame,
     bands: DataFrame,
@@ -525,45 +602,10 @@ def srp_batch_pairs_matmul(
     groups hold one row, each one pandas call otherwise). Per-group memory: the bucket's
     vectors plus one m x `chunk` score block. Output id columns keep the
     index's id type."""
-    import numpy as np
-
     id_type = index.schema["id"].dataType.simpleString()
 
     def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series([], dtype=object),
-                "id_b": pd.Series([], dtype=object),
-                "cos_sim": pd.Series([], dtype=float),
-            }
-        )
-        ids = pdf["id"].to_numpy()
-        v = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-        n = np.linalg.norm(v, axis=1)
-        out_a, out_b, out_c = [], [], []
-        for s in range(0, v.shape[0], chunk):
-            scores = _cos_block(v, n, v[s : s + chunk], n[s : s + chunk])
-            ri, ci = np.nonzero(scores >= min_cos)
-            ci_g = ci + s  # global column index
-            keep = ri != ci_g  # drop self-pairs
-            ri, ci_g = ri[keep], ci_g[keep]
-            if ri.size:
-                a_ids, b_ids = ids[ri], ids[ci_g]
-                swap = a_ids > b_ids
-                lo = np.where(swap, b_ids, a_ids)
-                hi = np.where(swap, a_ids, b_ids)
-                out_a.append(lo)
-                out_b.append(hi)
-                out_c.append(scores[ri, ci_g - s])
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cos_sim": np.concatenate(out_c),
-            }
-        ).drop_duplicates(["id_a", "id_b"])
+        return _block_pairs(pdf["id"].to_numpy(), pdf["v"].tolist(), min_cos, chunk)
 
     return (
         _band_vectors(bands, index)
@@ -621,15 +663,16 @@ def committed_srp_flip_ids(
     bucket prefixes. Only groups holding at least one new AND one
     committed row reach pandas: committed rows semi-join the batch's keys
     and new rows semi-join the surviving committed keys, so the new-only
-    groups — nearly all of them — cost no pandas call (the sidecar's SRP
-    candidate phase on a 200-doc batch, 4 vCPUs at local[3]: 4.0-5.1 s ->
-    2.2-3.1 s, for two more jobs). Not srp_batch_pairs_matmul's window
+    groups — nearly all of them — cost no pandas call. On a 200-doc
+    sidecar batch (4 vCPUs at local[3]) the call and its collect ran 10
+    Spark jobs in ~2 s, most of them the AQE stages of those semi-joins;
+    the sidecars call it above snapshots._LOCAL_ROWS kept docs only, and
+    below it snapshots._committed_pass runs the same first-hit kernel
+    (first_hits) in 3 jobs. Not srp_batch_pairs_matmul's window
     count: this plan stays free of Window operators (test_plans pins the
     no-pair-ranking shape). Returns a single-column (new_id)
     DataFrame, eagerly materialized via localCheckpoint (caller frees with
     free_local_checkpoints once its drop set is materialized)."""
-    import numpy as np
-
     keys = ["band", "bucket"]
     committed = committed_bands.join(new_bands.select(*keys).distinct(), keys, "left_semi")
     new = new_bands.join(committed.select(*keys).distinct(), keys, "left_semi")
@@ -644,19 +687,9 @@ def committed_srp_flip_ids(
     def _flip(pdf: pd.DataFrame) -> pd.DataFrame:
         new_mask = pdf["_new"].to_numpy()
         a_ids = pdf.loc[new_mask, "id"].to_numpy()
-        a = np.asarray(pdf.loc[new_mask, "v"].tolist(), dtype=np.float64)
-        c = np.asarray(pdf.loc[~new_mask, "v"].tolist(), dtype=np.float64)
-        an = np.linalg.norm(a, axis=1)
-        cn = np.linalg.norm(c, axis=1)
-        hits = np.zeros(len(a), dtype=bool)
-        live = np.arange(len(a))
-        for s in range(0, c.shape[0], chunk):
-            if live.size == 0:
-                break
-            scores = _cos_block(a[live], an[live], c[s : s + chunk], cn[s : s + chunk])
-            h = (scores >= min_cos).any(axis=1)
-            hits[live[h]] = True
-            live = live[~h]
+        hits = first_hits(
+            pdf.loc[new_mask, "v"].tolist(), pdf.loc[~new_mask, "v"].tolist(), min_cos, chunk
+        )
         return pd.DataFrame({"new_id": a_ids[hits]})
 
     return (
@@ -667,13 +700,17 @@ def committed_srp_flip_ids(
     )
 
 
+# band_occupancy's top-K: the hottest keys a batch's lineage records
+OCCUPANCY_TOP_K = 20
+
+
 def band_occupancy(
     bands: DataFrame,
     committed_bands: DataFrame | None,
     *,
     band_col: str = "band",
     bucket_col: str = "bucket",
-    top_k: int = 20,
+    top_k: int = OCCUPANCY_TOP_K,
 ) -> DataFrame:
     """Top-K hottest (band, bucket) keys a batch touches, split into new vs
     committed membership — the no-silent-caps telemetry for LSH degeneracy

@@ -76,10 +76,15 @@ def doc_id_col(url: Column | str = "url") -> Column:
     return F.sha2(F.col(url) if isinstance(url, str) else url, 256)
 
 
+# the keep-first winner of an exact-duplicate group: min (warc_ts, url).
+# quality_pipeline ranks unblocked copies ahead of it when given a blocklist
+KEEP_FIRST_ORDER = ("warc_ts", "url")
+
+
 def dedup_first(
     pages: DataFrame,
     key: Column | str | None = None,
-    order: tuple[str, ...] = ("warc_ts", "url"),
+    order: tuple[str, ...] = KEEP_FIRST_ORDER,
 ) -> DataFrame:
     """Deterministic keep-first exact dedup (reference: drop_duplicates on
     raw, parse_pile.py:588). 'First' = min `order` (default (warc_ts, url))
@@ -183,7 +188,7 @@ def quality_pipeline(
     # ts in the anti-join and dup copies would survive). Inputs that
     # violate the contract (two rows sharing a url) dedup at url
     # granularity.
-    w = Window.partitionBy("_dig").orderBy(*order, "warc_ts", "url")
+    w = Window.partitionBy("_dig").orderBy(*order, *KEEP_FIRST_ORDER)
     losers = (
         df.select(F.sha2("text", 256).alias("_dig"), "warc_ts", "url", *carried)
         .withColumn("_rn", F.row_number().over(w))

@@ -44,6 +44,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from puddin_spark.operators.dedup import band_prefix, local_minhash_pairs
+from puddin_spark.operators.similarity import first_hits, local_srp_pairs
+
 
 class ConcurrentWriteError(RuntimeError):
     """Two writers raced on the same snapshot id — the store is
@@ -725,6 +728,17 @@ def run_resumable_pipeline(
     silently generating no candidates. Both are off by default: their
     labels are graft-axis labels the reference doesn't emit.
 
+    The verdict count also observes the batch's kept count, which picks
+    the sidecars' path (_near_dedup). Up to _LOCAL_ROWS kept docs, ONE
+    collect encodes the batch for both sidecars (signatures, shingles,
+    embeddings, band keys and prefixes), new-vs-new pairs and clusters
+    resolve on the driver, and each sidecar runs one Spark pass against
+    its committed side (_committed_pass) that returns the drop set and the
+    committed band-key counts the occupancy lineage needs: a batch of 200
+    docs runs 31 Spark jobs, the same count every batch. Above the bound
+    each sidecar checkpoints its own index and band frames and pairs in
+    Spark (_sidecars_in_spark). Both paths commit the same rows.
+
     fix_mojibake=True repairs double-encoded UTF-8 in the incoming text
     (operators/encoding.py replace chain — pure codegen) BEFORE anything
     else: before the resume sha2 digest (so a re-crawl delivering the
@@ -758,6 +772,7 @@ def run_resumable_pipeline(
         sidecars.append(_SRP._replace(
             bands=partial(_srp_bands_table, num_planes=srp_planes, num_bands=srp_bands),
             band_rows=srp_bands,
+            keys=partial(_srp_keys, srp_planes, srp_bands),
         ))
     # the digest anti-join is the global keep-first dedup across runs: a
     # url whose text body was already processed under another url in a
@@ -816,17 +831,24 @@ def run_resumable_pipeline(
         persisted.append(cached)
         # url is the document key (doc_id = sha2(url)): a null one is never
         # removed as a keep-first loser and drops out of the kept-id
-        # fingerprint. Observed on the count, no extra job
-        nulls = Observation(f"null-urls-{uuid.uuid4().hex}")
-        n_new = cached.observe(nulls, F.count_if(F.col("url").isNull()).alias("n")).count()
+        # fingerprint. Observed on the count with the kept count the
+        # sidecars branch on, no extra job
+        seen = Observation(f"verdict-count-{uuid.uuid4().hex}")
+        n_new = cached.observe(
+            seen,
+            F.count_if(F.col("url").isNull()).alias("nulls"),
+            F.count_if("keep").alias("kept"),
+        ).count()
         if n_new == 0:
             return -1, 0
         # an Observation skips provably empty data, so it is read only here
-        n_null = nulls.get["n"]
+        n_null = seen.get["nulls"]
         if n_null:
             raise ValueError(f"{n_null} of {n_new} new documents have a null url")
         if sidecars:
-            verdicts, pending, dropped = _near_dedup(spark, store, sidecars, verdicts, committed)
+            verdicts, pending, dropped = _near_dedup(
+                spark, store, sidecars, verdicts, committed, seen.get["kept"]
+            )
         lineage = lineage_table(verdicts, num_partitions=num_partitions).withColumn(
             "snapshot_id", F.lit(store.current_snapshot_id() + 1)
         )
@@ -857,12 +879,24 @@ _KEPT_IDS = "if(keep, doc_id, null)"
 # flip verdicts and filter the sidecar commits through an IN list
 # (_doc_id_flag)
 _LOCAL_EDGES = 20_000
+# batches with up to this many kept docs run the sidecars' batch-sized half
+# on the driver (_sidecars_local): one collect brings every kept doc's
+# signature, shingles, embedding and band keys. Set from a measured sweep
+# (perfbench corpus, seed 11, a seed batch then one batch of N docs, both
+# sidecars, local[3] on 4 vCPUs; batch wall, checkpointed path -> driver
+# path): N=1024 19-20 s -> 14 s, 2048 25 s -> 16-19 s, 3072 25 s -> 21 s,
+# 4096 27-31 s -> 29-30 s. Past ~3k docs the per-key vs-committed scan in
+# pandas (_committed_pass) eats the gain. The driver's Python RSS rose
+# ~20 KB per kept doc (40 MB at 2048). Larger batches run the checkpointed
+# Spark path (_sidecars_in_spark).
+_LOCAL_ROWS = 2048
 
 # near-dedup sidecar parameters — ONE definition; the index, its band
 # table, and the incremental pair generation must agree bit-for-bit
 _ND_IDX_KW = dict(num_hashes=16, shingle_k=3, shingle_mode="word")
 _ND_BAND_KW = dict(num_hashes=16, band_size=2, hash_impl="md5")
 _ND_NUM_BANDS = _ND_BAND_KW["num_hashes"] // _ND_BAND_KW["band_size"]
+_ND_MIN_JACCARD = 0.5
 
 # embedding near-dedup sidecar parameters. Banded SRP: num_bands bucket
 # keys per doc, each from a disjoint hyperplane family of num_planes
@@ -880,11 +914,14 @@ _ND_NUM_BANDS = _ND_BAND_KW["num_hashes"] // _ND_BAND_KW["band_size"]
 _SRP_ND_PLANES_DEFAULT = 16
 _SRP_ND_BANDS_DEFAULT = 8
 _SRP_ND_MIN_COS = 0.99
-# bucket -> 16 'pX' directory partitions, FIXED cardinality regardless of
-# num_planes (mod, not div: div 16 explodes to 2^(planes-4) dirs at high
-# planes). Letter prefix: a bare hex digit would partition-type-infer as
-# numeric.
-_SRP_PFX_EXPR = "concat('p', lower(hex(pmod(bucket, 16))))"
+
+
+def _srp_pfx(bucket):
+    """bucket -> 16 'pX' directory partitions, FIXED cardinality regardless
+    of num_planes (mod, not div: div 16 explodes to 2^(planes-4) dirs at
+    high planes). Letter prefix: a bare hex digit would partition-type-infer
+    as numeric."""
+    return F.concat(F.lit("p"), F.lower(F.hex(F.pmod(bucket, F.lit(16)))))
 
 
 def _srp_meta(
@@ -953,7 +990,7 @@ def _srp_bands_table(idx: DataFrame, num_planes: int, num_bands: int) -> DataFra
     buckets = srp_band_buckets_udf(num_planes, num_bands)
     return (
         idx.select("id", F.posexplode(buckets("v")).alias("band", "bucket"))
-        .withColumn("bucket_pfx", F.expr(_SRP_PFX_EXPR))
+        .withColumn("bucket_pfx", _srp_pfx(F.col("bucket")))
     )
 
 
@@ -963,7 +1000,12 @@ class _Sidecar(NamedTuple):
     beside the verdicts, and its exploded band table — a pure derived cache,
     directory-partitioned on `pfx_col` — in `<kind>_bands`, whose lineage
     is each batch's hottest (band, bucket) keys
-    (similarity.band_occupancy over `occupancy_cols`)."""
+    (similarity.band_occupancy over `occupancy_cols`).
+
+    A batch's rows are paired two ways: up to _LOCAL_ROWS kept docs on the
+    driver (_sidecars_local: `keys`, `pfx`, `payload`, `local_pairs`,
+    `local_hits`), above it by checkpointed Spark plans (_sidecars_in_spark:
+    `candidates`). Both read the same index and band expressions."""
 
     kind: str
     label: str  # excl_type of the docs it flips
@@ -977,6 +1019,17 @@ class _Sidecar(NamedTuple):
     # committed near-twin | None, new-vs-new edges (id_a, id_b), frames to
     # free once the drop set is materialized)
     candidates: Callable[..., tuple]
+    # () -> the index's band-key array Column, in band order: the band
+    # table's key expression before its explode
+    keys: Callable[[], object]
+    # band-key Column -> its pfx_col value (the band table's expression)
+    pfx: Callable[[object], object]
+    payload: str  # the index column a candidate pair is verified on
+    # (ids, payloads, band-key lists) -> new-vs-new edges {(id_a, id_b)}
+    local_pairs: Callable[..., set]
+    # (new payloads, committed payloads) -> one bool per new payload: has
+    # a near-twin among the committed ones
+    local_hits: Callable[..., object]
 
     @property
     def index_name(self) -> str:
@@ -1004,6 +1057,15 @@ def _minhash_bands_table(idx: DataFrame) -> DataFrame:
     return band_table(idx, **_ND_BAND_KW)
 
 
+def _minhash_keys():
+    """band_table's key array over a minhash index's `mh`."""
+    from puddin_spark.operators.dedup import _band_key_cols
+
+    return F.array(*_band_key_cols(
+        _ND_NUM_BANDS, _ND_BAND_KW["band_size"], _ND_BAND_KW["hash_impl"]
+    ))
+
+
 def _minhash_candidates(new_idx, new_bands, committed_idx, committed_bands):
     """Verified Jaccard >= 0.5 pairs (incremental_minhash_pairs) split by
     side: the newcomer of each new-vs-committed pair, and the new-vs-new
@@ -1014,7 +1076,7 @@ def _minhash_candidates(new_idx, new_bands, committed_idx, committed_bands):
         new_idx,
         committed_idx,
         band_size=_ND_BAND_KW["band_size"],
-        jaccard_threshold=0.5,
+        jaccard_threshold=_ND_MIN_JACCARD,
         new_bands=new_bands,
         committed_bands=committed_bands,
     ).persist()
@@ -1056,14 +1118,35 @@ def _srp_candidates(new_idx, new_bands, committed_idx, committed_bands):
     return flips, pairs.select("id_a", "id_b"), frees
 
 
+def _srp_keys(num_planes: int, num_bands: int):
+    """_srp_bands_table's bucket array over an SRP index's `v`."""
+    from puddin_spark.operators.similarity import srp_band_buckets_udf
+
+    return srp_band_buckets_udf(num_planes, num_bands)("v")
+
+
+def _jaccard_hits(new, committed, threshold: float) -> list[bool]:
+    """For each new shingle list: does a committed one share Jaccard >=
+    threshold with it, decided as _verify_jaccard decides it."""
+    from puddin_spark.operators.dedup import jaccard_at_least
+
+    csets = [set(c) for c in committed]
+    return [any(jaccard_at_least(set(a), c, threshold) for c in csets) for a in new]
+
+
 _MINHASH = _Sidecar(
     "minhash", "near_dup", _minhash_index_table, _minhash_bands_table,
     _ND_NUM_BANDS, "band_pfx", ("band_ix", "band_key"), _minhash_candidates,
+    _minhash_keys, partial(band_prefix, hash_impl=_ND_BAND_KW["hash_impl"]), "sh",
+    partial(local_minhash_pairs, jaccard_threshold=_ND_MIN_JACCARD),
+    partial(_jaccard_hits, threshold=_ND_MIN_JACCARD),
 )
-# bands/band_rows are bound per store to the persisted config (_srp_meta)
+# bands/band_rows/keys are bound per store to the persisted config (_srp_meta)
 _SRP = _Sidecar(
     "srp", "emb_near_dup", _srp_index_table, None, None,
     "bucket_pfx", ("band", "bucket"), _srp_candidates,
+    None, _srp_pfx, "v", partial(local_srp_pairs, min_cos=_SRP_ND_MIN_COS),
+    partial(first_hits, min_cos=_SRP_ND_MIN_COS),
 )
 # pipeline order: minhash flips land first, the embedding pass sees only
 # survivors
@@ -1121,30 +1204,28 @@ def _reconciled_index(spark, spec: _Sidecar, idx_store, kept_committed, kept_sta
     return (committed_idx if n_idx else None), n_idx
 
 
-def _near_dedup(spark, store, sidecars, verdicts, committed):
-    """Run each sidecar over the batch in order — reconcile, band-cache
-    gate, index, prefix pruning, pairs, cluster resolution, flip — and
-    return (flipped verdicts, [(sidecar, new index, new bands, occupancy)],
-    the batch's drop set) for _commit_near_dedup. The drop set is the
-    union of the sidecars' driver-side drop sets: the batch's one record
-    of which new docs the sidecars removed. Spark jobs per batch do not
-    grow with the commit count: gate inputs come from commit records, each
-    store reads as one scan, and a batch-sized new-vs-new edge set
-    resolves on the driver."""
-    from puddin_spark.operators.dedup import (
-        free_local_checkpoints,
-        resolve_duplicate_clusters,
-        union_find_min_roots,
-    )
-    from puddin_spark.operators.similarity import band_occupancy
-    from puddin_spark.pipeline import flip_verdicts
+def _near_dedup(spark, store, sidecars, verdicts, committed, n_kept: int):
+    """Run the sidecars over the batch's verdicts in order — minhash flips
+    land first, the embedding pass sees only survivors — and return
+    (flipped verdicts, [(sidecar, new index, new bands, occupancy)], the
+    batch's drop set) for _commit_near_dedup. The drop set is the union of
+    the sidecars' driver-side drop sets: the batch's one record of which
+    new docs the sidecars removed.
 
+    Each sidecar's committed side is reconciled and band-gated first (no
+    job on a consistent store: the gates read commit records). A batch of
+    up to _LOCAL_ROWS kept docs then runs _sidecars_local, which pairs the
+    batch's own docs on the driver and runs one Spark pass per sidecar
+    against the committed side; a larger one runs _sidecars_in_spark, the
+    checkpointed Spark path. Both give the same flips, index, band and
+    occupancy rows. Spark jobs per batch do not grow with the commit
+    count."""
     kept_committed = kept_stats = None
     if committed is not None:
         # one (count, xor) fingerprint of the kept set serves every sidecar
         kept_committed = committed.filter("keep")
         kept_stats = store.fingerprint(_KEPT_IDS) or _id_set_stats(committed, _KEPT_IDS)
-    pending, dropped = [], set()
+    sides = []
     for spec in sidecars:
         idx_store, bands_store = spec.stores(store.base)
         committed_idx, n_idx = _reconciled_index(
@@ -1162,9 +1243,40 @@ def _near_dedup(spark, store, sidecars, verdicts, committed):
                     spec.bands(committed_idx), base=True, partition_by=[spec.pfx_col]
                 )
             committed_bands = bands_store.read(spark)
-        # localCheckpoint: ONE signature pass serves prefix discovery, the
-        # pair stages and the survivors commit (blocks freed once the last
-        # sidecar commit lands)
+        sides.append((spec, committed_idx, committed_bands))
+    run = _sidecars_local if n_kept <= _LOCAL_ROWS else _sidecars_in_spark
+    return run(spark, sides, verdicts)
+
+
+def _cluster_losers(edges, edge_frame) -> set:
+    """The non-root ids of the clusters a new-vs-new edge list forms (the
+    root is each cluster's minimum id): union_find_min_roots on the driver
+    up to _LOCAL_EDGES edges, else label propagation in Spark
+    (resolve_duplicate_clusters) over edge_frame(), the same edges as an
+    (id_a, id_b) frame."""
+    from puddin_spark.operators import dedup
+
+    if len(edges) <= _LOCAL_EDGES:
+        return {i for i, root in dedup.union_find_min_roots(edges).items() if i != root}
+    clusters = dedup.resolve_duplicate_clusters(edge_frame())
+    try:
+        return {r.id for r in clusters.filter("id != root").select("id").collect()}
+    finally:
+        dedup.free_local_checkpoints(clusters)
+
+
+def _sidecars_in_spark(spark, sides, verdicts):
+    """The checkpointed path, for batches above _LOCAL_ROWS kept docs: per
+    sidecar, the survivors' index and band frames are localCheckpointed
+    (one signature pass serves prefix discovery, the pair stages and the
+    commit), pairs run as Spark plans (spec.candidates) and the drop set is
+    collected."""
+    from puddin_spark.operators.dedup import free_local_checkpoints
+    from puddin_spark.operators.similarity import band_occupancy
+    from puddin_spark.pipeline import flip_verdicts
+
+    pending, dropped = [], set()
+    for spec, committed_idx, committed_bands in sides:
         new_idx = spec.index(
             verdicts.filter("keep").select("doc_id", "clean_text")
         ).localCheckpoint()
@@ -1196,12 +1308,7 @@ def _near_dedup(spark, store, sidecars, verdicts, committed):
         # one fetch decides where clusters resolve: a batch's edge set is
         # normally tiny, and label propagation costs two jobs per round
         edges = new_new.limit(_LOCAL_EDGES + 1).collect()
-        if len(edges) > _LOCAL_EDGES:
-            clusters = resolve_duplicate_clusters(new_new)
-            frees.append(clusters)
-            drop |= {r.id for r in clusters.filter("id != root").select("id").collect()}
-        else:
-            drop |= {i for i, root in union_find_min_roots(edges).items() if i != root}
+        drop |= _cluster_losers(edges, lambda: new_new)
         if drop:
             verdicts = flip_verdicts(verdicts, _doc_id_flag(spark, drop), spec.label)
         dropped |= drop
@@ -1212,6 +1319,201 @@ def _near_dedup(spark, store, sidecars, verdicts, committed):
                 free_local_checkpoints(frame)
         pending.append((spec, new_idx, new_bands, occupancy))
     return verdicts, pending, dropped
+
+
+def _sidecars_local(spark, sides, verdicts):
+    """The driver path, for batches of up to _LOCAL_ROWS kept docs. ONE
+    collect brings every kept doc's index row, band keys and band prefixes
+    for every sidecar (the index and band tables' own expressions). Then,
+    per sidecar over the docs the earlier sidecars kept:
+    - new-vs-new pairs on the driver (spec.local_pairs: candidates are the
+      pairs sharing a band key, verified by the same threshold decision as
+      the Spark path), into cluster resolution (_cluster_losers);
+    - vs-committed in one Spark pass (_committed_pass), which also counts
+      the committed members of the batch's band keys;
+    - the index and band rows to commit, and the band occupancy, become
+      local relations: no checkpoint, and the occupancy lineage write is
+      its only job. The band prefixes to prune the committed side come
+      from the collected rows."""
+    from puddin_spark.pipeline import flip_verdicts
+
+    kept = verdicts.filter("keep").select("doc_id", "clean_text")
+    indexes, proj = {}, None
+    for spec, _, _ in sides:
+        idx = indexes[spec.kind] = spec.index(kept)
+        frame = (
+            idx.withColumn(f"_{spec.kind}_keys", spec.keys())
+            .withColumn("_pfx", F.transform(f"_{spec.kind}_keys", lambda k: spec.pfx(k)))
+            .withColumn("_kind", F.lit(spec.kind))
+        )
+        proj = frame if proj is None else proj.unionByName(frame, allowMissingColumns=True)
+    rows = proj.collect()
+    pending, dropped = [], set()
+    for spec, committed_idx, committed_bands in sides:
+        idx, keys_col = indexes[spec.kind], f"_{spec.kind}_keys"
+        mine = [r for r in rows if r._kind == spec.kind and r.id not in dropped]
+        drop, n_committed = set(), {}
+        if committed_bands is not None and mine:
+            drop, n_committed = _committed_pass(
+                spec, committed_idx, committed_bands, mine, keys_col
+            )
+        edges = sorted(spec.local_pairs(
+            [r.id for r in mine], [r[spec.payload] for r in mine], [r[keys_col] for r in mine]
+        ))
+        drop |= _cluster_losers(
+            edges, lambda: spark.createDataFrame(edges, "id_a string, id_b string")
+        )
+        if drop:
+            verdicts = flip_verdicts(verdicts, _doc_id_flag(spark, drop), spec.label)
+        dropped |= drop
+        bands = spec.bands(idx)
+        new_idx = _local_frame(
+            spark, [tuple(r[c] for c in idx.columns) for r in mine], idx.schema
+        )
+        new_bands = _local_frame(
+            spark,
+            [
+                (r.id, band, key, pfx)
+                for r in mine
+                for band, (key, pfx) in enumerate(zip(r[keys_col], r._pfx))
+            ],
+            bands.schema,
+        )
+        pending.append((
+            spec, new_idx, new_bands,
+            _occupancy(
+                spark, spec, bands, committed_bands, [r[keys_col] for r in mine], n_committed
+            ),
+        ))
+    return verdicts, pending, dropped
+
+
+def _committed_pass(spec, committed_idx, committed_bands, rows, keys_col):
+    """The vs-committed half for a batch whose kept docs are on the driver,
+    in ONE Spark pass: (ids of `rows` with a committed near-twin,
+    {(band, key): committed members}) for every band key of `rows` and for
+    the committed keys that could rank in band_occupancy's top-K.
+
+    The committed band rows are pruned to the batch's prefixes. Those on
+    the batch's keys (an IN list) join their index payloads, the filtered
+    side broadcast, and are scanned where they land, in pandas: per key, a
+    partition's committed payloads are verified against the batch docs
+    sharing it (spec.local_hits: the first hit decides, as in
+    committed_srp_flip_ids) and counted; the driver sums the counts. The
+    rest aggregate to one count per key, map-side first, and each
+    partition of the counts reports its top OCCUPANCY_TOP_K by (count desc,
+    band, key): a superset of the committed-only keys band_occupancy can
+    rank. Pair rows are never materialized, and the batch's payloads reach
+    the scan in the kernel's closure."""
+    import pandas as pd
+
+    from puddin_spark.operators.similarity import OCCUPANCY_TOP_K
+
+    band_col, bucket_col = spec.occupancy_cols
+    members, prefixes = {}, set()
+    for i, r in enumerate(rows):
+        prefixes.update(r._pfx)
+        for band, key in enumerate(r[keys_col]):
+            members.setdefault(f"{band}:{key}", []).append(i)
+    ids = [r.id for r in rows]
+    payload, hits = spec.payload, spec.local_hits
+    payloads = [r[payload] for r in rows]
+    cols = [band_col, bucket_col, "new_id", "n"]
+    out_schema = (
+        f"{band_col} int, {bucket_col} "
+        f"{committed_bands.schema[bucket_col].dataType.simpleString()}, "
+        "new_id string, n long"
+    )
+
+    def scan(batches):
+        for pdf in batches:
+            out = []
+            for key, grp in pdf.groupby("_k", sort=False):
+                band, bucket = grp[band_col].iloc[0], grp[bucket_col].iloc[0]
+                new = members[key]
+                out.append((band, bucket, None, len(grp)))
+                mask = hits([payloads[i] for i in new], grp[payload].tolist())
+                out.extend((band, bucket, ids[i], None) for i, hit in zip(new, mask) if hit)
+            if out:
+                yield pd.DataFrame(out, columns=cols)
+
+    def top(batches):
+        batches = [b for b in batches if len(b)]
+        if batches:
+            pdf = pd.concat(batches, ignore_index=True).sort_values(
+                ["n", band_col, bucket_col], ascending=[False, True, True]
+            )
+            yield pdf.head(OCCUPANCY_TOP_K).assign(new_id=None)[cols]
+
+    found = committed_bands.filter(_sql_in(spec.pfx_col, sorted(prefixes))).select(
+        "id", band_col, bucket_col, F.concat_ws(":", band_col, bucket_col).alias("_k")
+    )
+    on_batch = _sql_in("_k", sorted(members))
+    shared = committed_idx.select("id", payload).join(F.broadcast(found.filter(on_batch)), "id")
+    others = found.filter(~on_batch).groupBy(band_col, bucket_col).agg(F.count("*").alias("n"))
+    out = (
+        shared.mapInPandas(scan, out_schema)
+        .unionByName(others.mapInPandas(top, out_schema))
+        .collect()
+    )
+    n_committed = {}
+    for r in out:
+        if r.new_id is None:
+            n_committed[r[0], r[1]] = n_committed.get((r[0], r[1]), 0) + r.n
+    return {r.new_id for r in out if r.new_id is not None}, n_committed
+
+
+def _occupancy(spark, spec, bands, committed_bands, keys, n_committed):
+    """band_occupancy of a driver-side batch as a local relation: every
+    band key the batch touches and every committed key _committed_pass
+    reported, with new and committed member counts, the top
+    OCCUPANCY_TOP_K by (n_total desc, band, bucket). Same schema as
+    band_occupancy over the same frames."""
+    from collections import Counter
+
+    from puddin_spark.operators.similarity import OCCUPANCY_TOP_K, band_occupancy
+
+    n_new = Counter((band, key) for row in keys for band, key in enumerate(row))
+    top = sorted(
+        (
+            (band, key, n_new.get((band, key), 0), c, n_new.get((band, key), 0) + c)
+            for (band, key), c in {**dict.fromkeys(n_new, 0), **n_committed}.items()
+        ),
+        key=lambda r: (-r[4], r[0], r[1]),
+    )[:OCCUPANCY_TOP_K]
+    band_col, bucket_col = spec.occupancy_cols
+    schema = band_occupancy(
+        bands, committed_bands, band_col=band_col, bucket_col=bucket_col
+    ).schema
+    return _local_frame(spark, top, schema)
+
+
+def _sql_in(col: str, values):
+    """`col IN (values)` for str/int values as ONE SQL expression: one JVM
+    call however many values there are (Column.isin makes one per literal,
+    which costs seconds at a batch's thousands of band keys)."""
+    if not values:
+        return F.lit(False)
+    lits = (
+        str(v) if isinstance(v, int)
+        else "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        for v in values
+    )
+    return F.expr(f"{col} IN ({', '.join(lits)})")
+
+
+def _local_frame(spark, rows: list, schema: StructType) -> DataFrame:
+    """Driver rows as a one-partition DataFrame of `schema`, through pandas
+    and Arrow (from a plain list, Spark unpickles every row in the JVM on
+    every read: ~2x slower writes at a batch's size). Arrow slices the rows
+    into one partition per maxRecordsPerBatch rows; coalescing them keeps a
+    commit of these rows to one file, as few as the checkpointed path
+    writes."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame.from_records(rows, columns=schema.fieldNames()), schema
+    ).coalesce(1)
 
 
 def _doc_id_flag(spark, ids: set, key: str = "doc_id"):
@@ -1226,7 +1528,7 @@ def _doc_id_flag(spark, ids: set, key: str = "doc_id"):
     batch like the keep-first loser set (pipeline module docstring:
     memory contract)."""
     if len(ids) <= _LOCAL_EDGES:
-        return F.col(key).isin(sorted(ids))
+        return _sql_in(key, sorted(ids))
     return F.broadcast(spark.createDataFrame([(i,) for i in sorted(ids)], f"{key} string"))
 
 
@@ -1236,8 +1538,10 @@ def _commit_near_dedup(store, pending, dropped: set) -> None:
     each holding exactly the batch's finally kept docs — its new rows minus
     the batch's drop set, so a doc a later sidecar flipped does not linger
     in an earlier one's index, or the next batch's reconciliation gate
-    re-fires. Checkpoints are freed only after the last commit: every
-    survivors plan reads them."""
+    re-fires — and the band occupancy as the band commit's lineage. The
+    new rows are local relations of driver rows (_sidecars_local) or
+    checkpoints (_sidecars_in_spark), freed only after the last commit:
+    every survivors plan reads them."""
     from puddin_spark.operators.dedup import free_local_checkpoints
 
     flag = _doc_id_flag(SparkSession.active(), dropped, "id")
