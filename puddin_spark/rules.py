@@ -12,9 +12,12 @@ Semantics reproduce the reference exactly, including its quirks:
   (/root/reference/script/pile_regex_imports.py) — the patterns ARE the spec.
   Two malformed quantifiers ('{2:3}' at pile_regex_imports.py:23 and '{3:}'
   at :31) are literals under Python `re` and must stay that way; this is why
-  all regex work runs in Python `re` inside pandas UDFs, never in Spark's
+  the spec regexes run in Python `re` inside pandas UDFs, never in Spark's
   Java-regex `regexp_replace`/`rlike` (Java rejects them, and the inline
-  '(?#...)' comments at :59-64 are not valid Java regex either).
+  '(?#...)' comments at :59-64 are not valid Java regex either). A pattern
+  that RE2 provably runs byte-identically (MISSING_SPACE_FAST, below) may run
+  as a pyarrow.compute RE2 kernel over a whole Arrow batch inside the UDF;
+  this module keeps the `re` form as the spec the kernel is fuzzed against.
 * Scrub order is clean_df's (parse_pile.py:894-974): transliterate (C1) →
   bbcode-url unwrap (C2) → url removal (C3) → missing-space repair (C4) →
   [exclusion battery runs HERE on the mid-state text] → punctuation-run
@@ -114,7 +117,16 @@ UNK_AS_REGEX = re.compile(UNK)
 # needs punc-or-uppercase at position 2). Removing the `+` removes sre's
 # O(run^2) consume-and-backtrack per lowercase run — profiled ~4x on prose.
 # tests/test_rules_fast.py fuzzes the equivalence.
+#
+# The pattern is also RE2-exact, so the batch UDFs run it as one
+# pyarrow.compute.replace_substring_regex per Arrow batch (udfs._stage1_batch):
+# it uses only explicit ASCII classes (no \w, \s, \b, lookaround or
+# backrefs), cannot match empty, and at most one match can start at any
+# position (the greedy `*` runs over a set disjoint from [A-Z]), so RE2's
+# leftmost-first global replace and sre's sub give the same bytes on any
+# string, ASCII or not.
 MISSING_SPACE_FAST = re.compile(r"([a-z][.!?,;:]*)([A-Z])")
+MISSING_SPACE_REPL = r"\1 \2"
 
 # Every EOL_ABBR alternative contains exactly one '\n', with at most
 # _EOL_PRE chars of pattern before it (longest abbreviation 'Messrs'/'Assemb'
@@ -126,11 +138,11 @@ MISSING_SPACE_FAST = re.compile(r"([a-z][.!?,;:]*)([A-Z])")
 # semantics are preserved by resuming at each match end, exactly like
 # Pattern.sub. tests/test_rules_fast.py fuzzes the equivalence.
 _EOL_PRE = 12
-_EOL_REPL = r"\1\2\5\6 \3\4"
 
 
 def _eol_abbr_sub(t: str) -> str:
-    """EOL_ABBR.sub(_EOL_REPL, t), windowed around newlines (see above)."""
+    r"""EOL_ABBR.sub(r"\1\2\5\6 \3\4", t), windowed around newlines (see
+    above)."""
     pieces: list[str] = []
     last = 0
     search_from = 0
@@ -149,8 +161,11 @@ def _eol_abbr_sub(t: str) -> str:
                 break
             start += 1
         if m is not None:
+            # the template r"\1\2\5\6 \3\4" spelled out: Match.expand
+            # re-parses it on every match; unmatched groups expand to ""
+            g = m.groups("")
             pieces.append(t[last : m.start()])
-            pieces.append(m.expand(_EOL_REPL))
+            pieces.append(g[0] + g[1] + g[4] + g[5] + " " + g[2] + g[3])
             last = m.end()
             search_from = m.end()
         nl = nxt
@@ -179,10 +194,9 @@ def _has_upper(t: str) -> bool:
     return t != t.lower()
 
 
-def scrub_stage1(text: str, *, url_possible: bool = True) -> str:
-    """C1-C4: transliterate, unwrap bbcode urls, strip urls, repair missing
-    spaces (clean_df, parse_pile.py:910-934). Output = the mid-state text the
-    exclusion battery sees.
+def scrub_urls(text: str, *, url_possible: bool = True) -> str:
+    """C1-C3: transliterate, unwrap bbcode urls, strip urls (clean_df,
+    parse_pile.py:910-930) — scrub_stage1 up to the missing-space repair.
 
     url_possible=False asserts a caller-side guarantee that LIKELY_URL cannot
     match (the batch UDFs precompute that with one vectorized RE2 pass over a
@@ -193,8 +207,17 @@ def scrub_stage1(text: str, *, url_possible: bool = True) -> str:
         t = BRACKET_URL.sub(r"\1", t)
     if url_possible:
         t = LIKELY_URL.sub(" ", t)
+    return t
+
+
+def scrub_stage1(text: str) -> str:
+    """C1-C4: scrub_urls, then repair missing spaces (clean_df,
+    parse_pile.py:910-934). Output = the mid-state text the exclusion
+    battery sees. The batch UDFs run C4 as one RE2 pass per Arrow batch
+    instead (udfs._stage1_batch); this scalar form is the spec."""
+    t = scrub_urls(text)
     if _has_upper(t):
-        t = MISSING_SPACE_FAST.sub(r"\1 \2", t)
+        t = MISSING_SPACE_FAST.sub(MISSING_SPACE_REPL, t)
     return t
 
 
@@ -258,11 +281,21 @@ def classify(mid: str, *, midword_possible: bool = True) -> str | None:
     return None
 
 
+# json.loads skips leading [ \t\n\r] and then needs a value's first char:
+# an object, array, string, number, true/false/null, NaN or (-)Infinity. A
+# text failing this cannot parse (a leading BOM already fails), so the
+# match skips the parse attempt on prose.
+_JSON_HEAD = re.compile(r'[ \t\n\r]*[{\["\-0-9tfnNI]')
+
+
 def is_jsonish(textstr: str) -> bool:
     """Parse-time 'fail' gate (parse_pile.py:1428-1438): text that parses as
     JSON after stripping surrounding quote chars is dropped."""
+    textstr = textstr.strip("\"'")
+    if not _JSON_HEAD.match(textstr):
+        return False
     try:
-        json.loads(textstr.strip("\"'"))
+        json.loads(textstr)
     except (json.JSONDecodeError, ValueError):
         return False
     return True

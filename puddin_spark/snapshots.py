@@ -42,7 +42,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from puddin_spark.operators.dedup import band_prefix, local_minhash_pairs
 from puddin_spark.operators.similarity import first_hits, local_srp_pairs
@@ -118,6 +118,12 @@ def _fingerprint_aggs(of: str) -> list:
         F.expr(f"count({of})").alias("fp_n"),
         F.expr(f"bit_xor(if(({of}) is null, null, xxhash64({of})))").alias("fp_xor"),
     ]
+
+
+def _planned_partitions(df: DataFrame) -> int:
+    """Partition count the frame's physical plan declares, 0 when unknown
+    (file scans, checkpoints of unclustered frames). Planning only, no job."""
+    return df._jdf.queryExecution().sparkPlan().outputPartitioning().numPartitions()
 
 
 def _record_schema(spark, rec: dict, kind: str, path: str) -> StructType:
@@ -239,7 +245,7 @@ class SnapshotStore:
         if fingerprint:
             obs = Observation(f"commit-{token}")
             data = data.observe(obs, *_fingerprint_aggs(fingerprint))
-        if partition_by and not stats_cols:
+        if partition_by and not stats_cols and _planned_partitions(data) != 1:
             # Iceberg write.distribution-mode=hash analog (optimization
             # guide section 6): cluster rows by the partition columns before
             # a partitionBy write, or every input task writes one file into
@@ -250,7 +256,10 @@ class SnapshotStore:
             # contract requires the CALLER's range clustering
             # (repartitionByRange + sortWithinPartitions, see docstring) to
             # reach the files unchanged, or every file's min/max overlaps
-            # and read_where prunes nothing.
+            # and read_where prunes nothing. Skipped too for a frame whose
+            # plan is one partition (a driver-side batch's band rows): its
+            # one write task already writes one file per directory, so the
+            # shuffle would only add a job.
             data = data.repartition(*[F.col(c) for c in partition_by])
         writer = data.write.mode("overwrite")
         if partition_by:
@@ -1468,10 +1477,10 @@ def _occupancy(spark, spec, bands, committed_bands, keys, n_committed):
     band key the batch touches and every committed key _committed_pass
     reported, with new and committed member counts, the top
     OCCUPANCY_TOP_K by (n_total desc, band, bucket). Same schema as
-    band_occupancy over the same frames."""
+    band_occupancy over the same frames (_occupancy_schema)."""
     from collections import Counter
 
-    from puddin_spark.operators.similarity import OCCUPANCY_TOP_K, band_occupancy
+    from puddin_spark.operators.similarity import OCCUPANCY_TOP_K
 
     n_new = Counter((band, key) for row in keys for band, key in enumerate(row))
     top = sorted(
@@ -1481,11 +1490,25 @@ def _occupancy(spark, spec, bands, committed_bands, keys, n_committed):
         ),
         key=lambda r: (-r[4], r[0], r[1]),
     )[:OCCUPANCY_TOP_K]
-    band_col, bucket_col = spec.occupancy_cols
-    schema = band_occupancy(
-        bands, committed_bands, band_col=band_col, bucket_col=bucket_col
-    ).schema
-    return _local_frame(spark, top, schema)
+    return _local_frame(spark, top, _occupancy_schema(spec, bands, committed_bands))
+
+
+def _occupancy_schema(spec, bands, committed_bands) -> StructType:
+    """band_occupancy(bands, committed_bands).schema over spec's occupancy
+    columns, without planning the aggregate: band and bucket keep the band
+    table's types and are nullable when either side of band_occupancy's
+    union is (committed bands read back from parquet are), the three counts
+    are sums, nullable longs."""
+    keys = []
+    for name, col in zip(("band", "bucket"), spec.occupancy_cols):
+        field = bands.schema[col]
+        nullable = field.nullable or (
+            committed_bands is not None and committed_bands.schema[col].nullable
+        )
+        keys.append(StructField(name, field.dataType, nullable))
+    return StructType(
+        keys + [StructField(c, LongType()) for c in ("n_new", "n_committed", "n_total")]
+    )
 
 
 def _sql_in(col: str, values):

@@ -17,6 +17,13 @@ ASCII \\w/\\s/\\W only under-approximates Python's on non-ASCII text, so
 non-ASCII (and null) rows are forced through the full Python path — guards
 are strictly conservative. The guard patterns and the skip contract are
 fuzz-tested against the spec patterns in tests/test_rules_fast.py.
+
+The missing-space repair (C4) is not guarded but replaced: nearly every
+document has a match, so the batch stage 1 (_stage1_batch) runs C1-C3 per
+row and then C4 as ONE pyarrow.compute.replace_substring_regex pass over the
+batch's Arrow array (RE2 is byte-exact for that pattern, see
+rules.MISSING_SPACE_FAST). The same array feeds the PUNC_ONLY/MIDWORD_PUNC
+guard pass.
 """
 from __future__ import annotations
 
@@ -77,11 +84,28 @@ def _url_guard_mask(texts: pd.Series) -> list:
     return pc.or_kleene(pc.match_substring_regex(arr, _URL_GUARD_RE2), force).to_pylist()
 
 
+def _stage1_batch(texts: pd.Series) -> pa.Array:
+    """rules.scrub_stage1 over a batch, as an Arrow string array: C1-C3 per
+    row (rules.scrub_urls, the URL guard deciding per row whether the
+    LIKELY_URL scan can be skipped), then C4 as one RE2 replace over the
+    whole batch. Nulls stay null."""
+    pre = [
+        None if t is None else rules.scrub_urls(t, url_possible=url_possible is not False)
+        for t, url_possible in zip(texts, _url_guard_mask(texts))
+    ]
+    return pc.replace_substring_regex(
+        pa.array(pre, type=pa.string()),
+        rules.MISSING_SPACE_FAST.pattern,
+        rules.MISSING_SPACE_REPL,
+    )
+
+
 def _classify_guard_masks(
-    mids: list, with_punc: bool = True
+    mids: list | pa.Array, with_punc: bool = True
 ) -> tuple[list, list]:
     """(punc_possible, midword_possible) per row, evaluated on the exact
     mid-state strings the spec patterns run against (no staging gap).
+    `mids` is a list or an Arrow string array (used as is, no copy).
     with_punc=False skips the PUNC_ONLY DFA pass (and returns an all-True
     punc mask) for callers that only classify and never run scrub_stage2."""
     arr = pa.array(mids, type=pa.string())
@@ -104,21 +128,18 @@ def _process_batch(texts: pd.Series) -> pd.DataFrame:
       scrub_stage2 (C5-C6, kept docs only) -> jsonish 'fail' gate.
     Dropped docs get clean_text=null; kept docs get excl_type=null.
 
-    Two passes: pass 1 builds the mid-state texts (with the vectorized URL
-    guard deciding per row whether the LIKELY_URL scan can be skipped);
-    pass 2 classifies and finishes kept docs, with the PUNC_ONLY and
-    MIDWORD_PUNC guards computed in one RE2 sweep over the mid-state batch.
+    Two passes: pass 1 builds the mid-state texts as one Arrow array
+    (_stage1_batch); pass 2 classifies and finishes kept docs, with the
+    PUNC_ONLY and MIDWORD_PUNC guards computed in one RE2 sweep over that
+    array.
     """
-    mids: list[str | None] = []
-    for t, url_possible in zip(texts, _url_guard_mask(texts)):
-        if t is None:
-            mids.append(None)
-            continue
-        mids.append(rules.scrub_stage1(t, url_possible=url_possible is not False))
+    mids = _stage1_batch(texts)
     punc_mask, midword_mask = _classify_guard_masks(mids)
     clean_out: list[str | None] = []
     excl_out: list[str | None] = []
-    for mid, punc_possible, midword_possible in zip(mids, punc_mask, midword_mask):
+    for mid, punc_possible, midword_possible in zip(
+        mids.to_pylist(), punc_mask, midword_mask
+    ):
         if mid is None:
             clean_out.append(None)
             excl_out.append("fail")
@@ -142,16 +163,7 @@ process_udf = F.pandas_udf(_process_batch, PROCESS_SCHEMA)
 
 
 def _scrub_stage1_batch(texts: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None
-            if t is None
-            else rules.scrub_stage1(t, url_possible=url_possible is not False)
-            for t, url_possible in zip(texts, _url_guard_mask(texts))
-        ],
-        index=texts.index,
-        dtype=object,
-    )
+    return pd.Series(_stage1_batch(texts).to_pylist(), index=texts.index, dtype=object)
 
 
 scrub_stage1_udf = F.pandas_udf(_scrub_stage1_batch, T.StringType())

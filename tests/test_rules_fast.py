@@ -4,11 +4,13 @@ The spec patterns (MISSING_SPACE, EOL_ABBR, PUNC_ONLY, MIDWORD_PUNC,
 LIKELY_URL) are the reference transcription and stay untouched; the fast
 paths must be *provably* output-identical:
 
-- MISSING_SPACE_FAST: fused single-alternative sub, byte-identical output.
+- MISSING_SPACE_FAST: fused single-alternative sub, byte-identical output,
+  also as the one RE2 replace per Arrow batch the UDFs run.
 - _eol_abbr_sub: windowed sub around newlines, byte-identical output.
 - RE2 guard masks (udfs): necessary conditions only — a row the guard skips
   must be one where the guarded pattern cannot match (no false negatives;
   false positives merely run the original scan).
+- is_jsonish: its first-character guard only skips texts json.loads rejects.
 - _process_batch: end-to-end byte parity vs a straight transcription of the
   pre-round-6 per-row chain.
 """
@@ -20,12 +22,15 @@ import re
 from pathlib import Path
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
 from puddin_spark import rules
 from puddin_spark.udfs import (
     _classify_guard_masks,
     _process_batch,
+    _stage1_batch,
     _url_guard_mask,
 )
 
@@ -79,6 +84,58 @@ def test_missing_space_fast_fuzz():
     for _ in range(60_000):
         s = "".join(rng.choice(alph) for _ in range(rng.randint(0, 30)))
         assert _orig_ms(s) == rules.MISSING_SPACE_FAST.sub(r"\1 \2", s), repr(s)
+
+
+def test_missing_space_arrow_replace_fuzz():
+    """C4 as the batch UDFs run it, one RE2 replace over an Arrow array,
+    equals the spec sub row by row: non-ASCII letters (which RE2 reads as
+    UTF-8, sre as code points), NUL, empty rows and nulls included."""
+    rng = random.Random(3)
+    alph = "abcXY.!?,;: \n5_-\"'\tzéÄßİ\x00"
+    mixed = [
+        "".join(rng.choice(alph) for _ in range(rng.randint(0, 30)))
+        for _ in range(60_000)
+    ] + ["", None, "\x00", None]
+    # a batch where every row matches
+    every = ["aB", "x.,Y", "zzzQzzzQ", "éaÄbCß", "a!?Z\x00qW", "İiJ" + "kL" * 50]
+    assert all(rules.MISSING_SPACE.search(s) for s in every)
+    for rows in (mixed, every):
+        got = pc.replace_substring_regex(
+            pa.array(rows, type=pa.string()),
+            rules.MISSING_SPACE_FAST.pattern,
+            rules.MISSING_SPACE_REPL,
+        ).to_pylist()
+        assert got == [None if s is None else _orig_ms(s) for s in rows]
+    # and the whole batch stage 1 equals the scalar spec chain
+    url_rows = mixed[:5_000] + ["[url=http://x.y]LinkText[/url]aB", "see www.aB.c dD"]
+    got = _stage1_batch(pd.Series(url_rows, dtype=object)).to_pylist()
+    assert got == [None if s is None else rules.scrub_stage1(s) for s in url_rows]
+
+
+def test_is_jsonish_guard_fuzz():
+    """The first-character guard never changes is_jsonish's answer: every
+    text it skips is one json.loads rejects."""
+    def unguarded(t: str) -> bool:
+        try:
+            json.loads(t.strip("\"'"))
+        except (json.JSONDecodeError, ValueError):
+            return False
+        return True
+
+    rng = random.Random(4)
+    toks = [
+        "true", "false", "null", "NaN", "Infinity", "-Infinity", "-", "1",
+        "0.5", "1e3", "{}", "[]", "[1, 2]", '{"a": 1}', '"x"', "'", '"',
+        " ", "\t", "\n", "\r", "\x0b", "\x0c", "\xa0", "\ufeff", ",", ":",
+        "{", "[", "]", "}", "word", "T", "F", "n", "é", "\x00", "+1", ".5",
+    ]
+    samples = [
+        "".join(rng.choice(toks) for _ in range(rng.randint(0, 6)))
+        for _ in range(60_000)
+    ]
+    for s in samples:
+        assert rules.is_jsonish(s) == unguarded(s), repr(s)
+    assert sum(map(rules.is_jsonish, samples)) > 1_000
 
 
 def test_eol_abbr_fast_fuzz():

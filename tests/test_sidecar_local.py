@@ -5,9 +5,11 @@
   minhash sidecar's twins) and `perm` copies (words shuffled, same bag of
   words, so the same embedding), including one batch at the row bound.
 - Its Jaccard threshold decides like Spark's HALF_UP round(x, 6) >= 0.5.
-- A sidecar batch against a committed store runs a bounded, flat number of
+- A sidecar batch against a committed store runs a pinned, flat number of
   Spark jobs, and commits what the checkpointed path above the bound
   commits.
+- The driver path's occupancy schema, built without planning
+  band_occupancy, equals band_occupancy's on a first and a later batch.
 """
 from __future__ import annotations
 
@@ -144,8 +146,10 @@ def _run(spark, pages, store):
 
 def test_sidecar_batch_jobs_bounded_and_flat(spark, tmp_path):
     """A sidecar batch against a committed store (both sidecars, planted
-    minhash and embedding twins of committed docs) runs at most 36 Spark
-    jobs, and the next batch runs as many."""
+    minhash and embedding twins of committed docs) runs 29 Spark jobs, and
+    the next batch runs as many. Every band commit writes one file per
+    populated prefix directory: the driver-side band rows are written
+    without a shuffle, and no more files than the shuffle gave."""
     from conftest import jobs_in
 
     store = snapshots.SnapshotStore(tmp_path / "v")
@@ -160,8 +164,13 @@ def test_sidecar_batch_jobs_bounded_and_flat(spark, tmp_path):
             f"https://twin.example/{b}/mh": "near_dup",
             f"https://twin.example/{b}/eb": "emb_near_dup",
         }
-    assert counts[0] <= 36, counts
+    assert counts[0] == 29, counts
     assert counts[0] == counts[1], counts
+    for name in ("minhash_bands", "srp_bands"):
+        for rec in snapshots.SnapshotStore(store.base / name).commits():
+            data = store.base / name / rec["data_dir"]
+            dirs = [d for d in data.iterdir() if d.is_dir()]
+            assert sum(len(list(d.glob("*.parquet"))) for d in dirs) == len(dirs), rec
 
 
 def test_checkpointed_path_commits_what_the_driver_path_commits(spark, tmp_path, monkeypatch):
@@ -189,3 +198,32 @@ def test_checkpointed_path_commits_what_the_driver_path_commits(spark, tmp_path,
         for a, b in zip(after[n], tables(forced)):
             assert a.schema == b.schema
             assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def test_occupancy_schema_is_band_occupancy_schema(spark, tmp_path):
+    """_occupancy_schema equals band_occupancy's planned schema for both
+    sidecars' band tables: band non-null on a first batch (no committed
+    bands; the SRP bucket, a UDF array element, is nullable already), band
+    and bucket nullable once committed bands are read back."""
+    from functools import partial
+
+    from puddin_spark.operators.similarity import band_occupancy
+
+    kept = spark.createDataFrame(_batch(5, 40, families=2), "doc_id string, clean_text string")
+    srp = snapshots._SRP._replace(
+        bands=partial(snapshots._srp_bands_table, num_planes=16, num_bands=8)
+    )
+    for spec in (snapshots._MINHASH, srp):
+        bands = spec.bands(spec.index(kept))
+        store = snapshots.SnapshotStore(tmp_path / spec.kind)
+        store.commit(bands, partition_by=[spec.pfx_col])
+        band_col, bucket_col = spec.occupancy_cols
+        nullable = []
+        for committed in (None, store.read(spark)):
+            want = band_occupancy(
+                bands, committed, band_col=band_col, bucket_col=bucket_col
+            ).schema
+            assert snapshots._occupancy_schema(spec, bands, committed) == want, spec.kind
+            nullable.append((want["band"].nullable, want["bucket"].nullable))
+        # the two cases differ: band is non-null only without committed bands
+        assert nullable[0][0] is False and nullable[1] == (True, True), (spec.kind, nullable)
