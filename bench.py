@@ -313,8 +313,10 @@ def main() -> None:
     # --- incremental embedding near-dedup: FIXED-size batches against a
     # committed corpus growing 1x -> 4x — the committed-ratio curve the r4
     # verdict asked for (its one perf-weak flag: vs-committed verification
-    # grew with committed bucket occupancy; committed_srp_flip_ids'
-    # two-phase early exit bounds phase A at probe * |batch|). A flat(ter)
+    # grew with committed bucket occupancy). A batch above
+    # snapshots._LOCAL_ROWS kept docs commits as driver-sized sub-batches,
+    # each verified against the committed side by one first-hit pass
+    # (snapshots._committed_pass). A flat(ter)
     # batch_secs curve at fixed batch size is the signal; flips are
     # reported so genuine dedup work (template near-dups) stays visible.
     # Then ONE skewed batch (~1% 150 KB giants — giants share sentence

@@ -665,10 +665,11 @@ def committed_srp_flip_ids(
     and new rows semi-join the surviving committed keys, so the new-only
     groups — nearly all of them — cost no pandas call. On a 200-doc
     sidecar batch (4 vCPUs at local[3]) the call and its collect ran 10
-    Spark jobs in ~2 s, most of them the AQE stages of those semi-joins;
-    the sidecars call it above snapshots._LOCAL_ROWS kept docs only, and
-    below it snapshots._committed_pass runs the same first-hit kernel
-    (first_hits) in 3 jobs. Not srp_batch_pairs_matmul's window
+    Spark jobs in ~2 s, most of them the AQE stages of those semi-joins.
+    The sidecars do not call it: snapshots._committed_pass runs the same
+    first-hit kernel (first_hits) in 3 jobs. perfbench/walk.py times it
+    as the Spark vs-committed step, and tests pin it against
+    incremental_srp_band_pairs. Not srp_batch_pairs_matmul's window
     count: this plan stays free of Window operators (test_plans pins the
     no-pair-ranking shape). Returns a single-column (new_id)
     DataFrame, eagerly materialized via localCheckpoint (caller frees with

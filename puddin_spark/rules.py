@@ -136,7 +136,11 @@ MISSING_SPACE_REPL = r"\1 \2"
 # the full-text scan (~200 us/doc on prose) collapses to a handful of
 # anchored match attempts per newline (~5 us/doc). Left-to-right non-overlap
 # semantics are preserved by resuming at each match end, exactly like
-# Pattern.sub. tests/test_rules_fast.py fuzzes the equivalence.
+# Pattern.sub. Every alternative also needs the char after its '\n' to be
+# [A-Z], a decimal digit ('\d' is str.isdecimal) or a non-word char other
+# than '\n' ('\w' is str.isalnum or '_'), so a newline followed by anything
+# else (the end, '\n', a lowercase or non-ASCII letter, '_') is skipped with
+# no match attempt. tests/test_rules_fast.py fuzzes the equivalence.
 _EOL_PRE = 12
 
 
@@ -150,6 +154,12 @@ def _eol_abbr_sub(t: str) -> str:
     n = len(t)
     while nl != -1:
         nxt = t.find("\n", nl + 1)
+        c = t[nl + 1 : nl + 2]
+        if not c or c == "\n" or (
+            (c.isalnum() or c == "_") and not ("A" <= c <= "Z" or c.isdecimal())
+        ):
+            nl = nxt
+            continue
         endpos = nxt if nxt != -1 else n
         start = max(search_from, nl - _EOL_PRE)
         m = None

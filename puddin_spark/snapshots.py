@@ -737,16 +737,24 @@ def run_resumable_pipeline(
     silently generating no candidates. Both are off by default: their
     labels are graft-axis labels the reference doesn't emit.
 
-    The verdict count also observes the batch's kept count, which picks
-    the sidecars' path (_near_dedup). Up to _LOCAL_ROWS kept docs, ONE
-    collect encodes the batch for both sidecars (signatures, shingles,
-    embeddings, band keys and prefixes), new-vs-new pairs and clusters
-    resolve on the driver, and each sidecar runs one Spark pass against
-    its committed side (_committed_pass) that returns the drop set and the
-    committed band-key counts the occupancy lineage needs: a batch of 200
-    docs runs 31 Spark jobs, the same count every batch. Above the bound
-    each sidecar checkpoints its own index and band frames and pairs in
-    Spark (_sidecars_in_spark). Both paths commit the same rows.
+    The sidecars run on the driver (_near_dedup): ONE collect encodes the
+    batch for both sidecars (signatures, shingles, embeddings, band keys
+    and prefixes), new-vs-new pairs and clusters resolve on the driver,
+    and each sidecar runs one Spark pass against its committed side
+    (_committed_pass) that returns the drop set and the committed band-key
+    counts the occupancy lineage needs: a batch of 200 docs runs 29 Spark
+    jobs, the same count every batch. The verdict count also observes the
+    batch's kept count, which bounds that collect: with sidecars on, a
+    batch above _LOCAL_ROWS kept docs commits as k = ceil(kept /
+    _LOCAL_ROWS) sub-batches, split by pmod(xxhash64(doc_id), k) AFTER
+    exact keep-first was decided over the whole batch. Each sub-batch, in
+    order, runs the sidecars against a fresh read of the store (so the
+    reconciliation gates see the earlier sub-batches) and commits its own
+    verdicts, lineage and sidecar rows: a crash between sub-batches is the
+    per-commit resume contract. A near-dup family that straddles two
+    sub-batches resolves as vs-committed, exactly as ingesting the
+    sub-batches one after another would: one member is still kept, but
+    which one may differ from an unsplit batch.
 
     fix_mojibake=True repairs double-encoded UTF-8 in the incoming text
     (operators/encoding.py replace chain — pure codegen) BEFORE anything
@@ -764,9 +772,9 @@ def run_resumable_pipeline(
     see those docstrings for each gate's rules and label. Order matters:
     a gate sees only the previous gates' survivors.
 
-    Returns (snapshot_id, n_new_docs); snapshot_id is -1 when there was
-    nothing new (no empty commits — rerun after success is a no-op, the
-    kill/rerun contract from BASELINE.md).
+    Returns (snapshot_id, n_new_docs): the last snapshot committed, -1
+    when there was nothing new (no empty commits — rerun after success is
+    a no-op, the kill/rerun contract from BASELINE.md).
     """
     from puddin_spark.pipeline import lineage_table, quality_pipeline
 
@@ -854,25 +862,34 @@ def run_resumable_pipeline(
         n_null = seen.get["nulls"]
         if n_null:
             raise ValueError(f"{n_null} of {n_new} new documents have a null url")
+        parts = [cached]
         if sidecars:
-            verdicts, pending, dropped = _near_dedup(
-                spark, store, sidecars, verdicts, committed, seen.get["kept"]
+            k = max(1, -(-seen.get["kept"] // max(_LOCAL_ROWS, 1)))
+            if k > 1:
+                part = F.pmod(F.xxhash64("doc_id"), F.lit(k))
+                parts = [cached.filter(part == i) for i in range(k)]
+        for i, verdicts in enumerate(parts):
+            if i:
+                committed = store.read(spark)
+            if sidecars:
+                verdicts, pending, dropped = _near_dedup(
+                    spark, store, sidecars, verdicts, committed
+                )
+            lineage = lineage_table(verdicts, num_partitions=num_partitions).withColumn(
+                "snapshot_id", F.lit(store.current_snapshot_id() + 1)
             )
-        lineage = lineage_table(verdicts, num_partitions=num_partitions).withColumn(
-            "snapshot_id", F.lit(store.current_snapshot_id() + 1)
-        )
-        # proc_ts is lineage-only instrumentation — the published verdict
-        # schema (OUTPUT_COLS) is what lands in the store
-        # lineage carries snapshot_id on every row and is committed with
-        # per-file snapshot_id stats: per-batch metric reads
-        # (read_lineage_where) open exactly this batch's lineage files
-        # instead of one snapshot per batch since the last compact
-        snap_id = store.commit(
-            verdicts.drop("proc_ts"), lineage, partition_by=partition_by,
-            lineage_stats_cols=["snapshot_id"], fingerprint=_KEPT_IDS,
-        )
-        if sidecars:
-            _commit_near_dedup(store, pending, dropped)
+            # proc_ts is lineage-only instrumentation — the published verdict
+            # schema (OUTPUT_COLS) is what lands in the store
+            # lineage carries snapshot_id on every row and is committed with
+            # per-file snapshot_id stats: per-batch metric reads
+            # (read_lineage_where) open exactly this batch's lineage files
+            # instead of one snapshot per batch since the last compact
+            snap_id = store.commit(
+                verdicts.drop("proc_ts"), lineage, partition_by=partition_by,
+                lineage_stats_cols=["snapshot_id"], fingerprint=_KEPT_IDS,
+            )
+            if sidecars:
+                _commit_near_dedup(store, pending, dropped)
         return snap_id, n_new
     finally:
         for frame in persisted:
@@ -888,16 +905,16 @@ _KEPT_IDS = "if(keep, doc_id, null)"
 # flip verdicts and filter the sidecar commits through an IN list
 # (_doc_id_flag)
 _LOCAL_EDGES = 20_000
-# batches with up to this many kept docs run the sidecars' batch-sized half
-# on the driver (_sidecars_local): one collect brings every kept doc's
-# signature, shingles, embedding and band keys. Set from a measured sweep
-# (perfbench corpus, seed 11, a seed batch then one batch of N docs, both
-# sidecars, local[3] on 4 vCPUs; batch wall, checkpointed path -> driver
-# path): N=1024 19-20 s -> 14 s, 2048 25 s -> 16-19 s, 3072 25 s -> 21 s,
-# 4096 27-31 s -> 29-30 s. Past ~3k docs the per-key vs-committed scan in
-# pandas (_committed_pass) eats the gain. The driver's Python RSS rose
-# ~20 KB per kept doc (40 MB at 2048). Larger batches run the checkpointed
-# Spark path (_sidecars_in_spark).
+# the most kept docs one sidecar pass brings to the driver (_sidecars_local):
+# one collect holds every kept doc's signature, shingles, embedding and band
+# keys, ~20 KB each in the driver's Python RSS (40 MB at 2048). A sidecar
+# batch with more kept docs commits as ceil(kept / _LOCAL_ROWS) sub-batches
+# (run_resumable_pipeline). Set from a measured sweep (perfbench corpus, seed
+# 11, a seed batch then one batch of N docs, both sidecars, local[3] on 4
+# vCPUs; batch wall of an all-Spark checkpointed pairing -> the driver pass):
+# N=1024 19-20 s -> 14 s, 2048 25 s -> 16-19 s, 3072 25 s -> 21 s, 4096
+# 27-31 s -> 29-30 s. Past ~3k docs the per-key vs-committed scan in pandas
+# (_committed_pass) eats the gain.
 _LOCAL_ROWS = 2048
 
 # near-dedup sidecar parameters — ONE definition; the index, its band
@@ -1009,12 +1026,9 @@ class _Sidecar(NamedTuple):
     beside the verdicts, and its exploded band table — a pure derived cache,
     directory-partitioned on `pfx_col` — in `<kind>_bands`, whose lineage
     is each batch's hottest (band, bucket) keys
-    (similarity.band_occupancy over `occupancy_cols`).
-
-    A batch's rows are paired two ways: up to _LOCAL_ROWS kept docs on the
-    driver (_sidecars_local: `keys`, `pfx`, `payload`, `local_pairs`,
-    `local_hits`), above it by checkpointed Spark plans (_sidecars_in_spark:
-    `candidates`). Both read the same index and band expressions."""
+    (similarity.band_occupancy over `occupancy_cols`). A batch's rows are
+    paired on the driver (_sidecars_local: `keys`, `pfx`, `payload`,
+    `local_pairs`, `local_hits`), from the index and band expressions."""
 
     kind: str
     label: str  # excl_type of the docs it flips
@@ -1023,11 +1037,6 @@ class _Sidecar(NamedTuple):
     band_rows: int  # band rows per indexed doc
     pfx_col: str
     occupancy_cols: tuple[str, str]
-    # (new index, new bands, committed index | None, committed bands pruned
-    # to the batch's prefixes | None) -> (newcomer ids (doc_id) with a
-    # committed near-twin | None, new-vs-new edges (id_a, id_b), frames to
-    # free once the drop set is materialized)
-    candidates: Callable[..., tuple]
     # () -> the index's band-key array Column, in band order: the band
     # table's key expression before its explode
     keys: Callable[[], object]
@@ -1075,58 +1084,6 @@ def _minhash_keys():
     ))
 
 
-def _minhash_candidates(new_idx, new_bands, committed_idx, committed_bands):
-    """Verified Jaccard >= 0.5 pairs (incremental_minhash_pairs) split by
-    side: the newcomer of each new-vs-committed pair, and the new-vs-new
-    edges."""
-    from puddin_spark.operators.dedup import incremental_minhash_pairs
-
-    pairs = incremental_minhash_pairs(
-        new_idx,
-        committed_idx,
-        band_size=_ND_BAND_KW["band_size"],
-        jaccard_threshold=_ND_MIN_JACCARD,
-        new_bands=new_bands,
-        committed_bands=committed_bands,
-    ).persist()
-    flips = None
-    if committed_idx is not None:
-        flips = (
-            pairs.filter("committed_side")
-            .select(F.explode(F.array("id_a", "id_b")).alias("doc_id"))
-            .join(new_idx.select(F.col("id").alias("doc_id")), "doc_id", "left_semi")
-        )
-    return flips, pairs.filter("not committed_side").select("id_a", "id_b"), [pairs]
-
-
-def _srp_candidates(new_idx, new_bands, committed_idx, committed_bands):
-    """Cosine >= _SRP_ND_MIN_COS twins from per-bucket numpy blocks.
-    vs-committed runs through committed_srp_flip_ids (first-hit early exit;
-    pair rows are never materialized — enumerating every (new, committed)
-    bucket co-member grew per-batch cost linearly with corpus-side
-    occupancy, VERDICT r4, profiled in BASELINE.md). new-vs-new needs the
-    whole edge set for cluster resolution: srp_batch_pairs_matmul emits it
-    without materializing bucket-co-member candidate rows (measured 2M
-    candidate rows / ~2 GB of shuffled vectors per 6k-doc batch on the
-    enumerate-then-join path)."""
-    from puddin_spark.operators.similarity import (
-        committed_srp_flip_ids,
-        srp_batch_pairs_matmul,
-    )
-
-    frees, flips = [], None
-    if committed_idx is not None:
-        checkpoint = committed_srp_flip_ids(
-            new_idx, new_bands, committed_idx, committed_bands,
-            min_cos=_SRP_ND_MIN_COS,
-        )
-        frees.append(checkpoint)
-        flips = checkpoint.select(F.col("new_id").alias("doc_id"))
-    pairs = srp_batch_pairs_matmul(new_idx, new_bands, min_cos=_SRP_ND_MIN_COS).persist()
-    frees.append(pairs)
-    return flips, pairs.select("id_a", "id_b"), frees
-
-
 def _srp_keys(num_planes: int, num_bands: int):
     """_srp_bands_table's bucket array over an SRP index's `v`."""
     from puddin_spark.operators.similarity import srp_band_buckets_udf
@@ -1145,16 +1102,16 @@ def _jaccard_hits(new, committed, threshold: float) -> list[bool]:
 
 _MINHASH = _Sidecar(
     "minhash", "near_dup", _minhash_index_table, _minhash_bands_table,
-    _ND_NUM_BANDS, "band_pfx", ("band_ix", "band_key"), _minhash_candidates,
-    _minhash_keys, partial(band_prefix, hash_impl=_ND_BAND_KW["hash_impl"]), "sh",
+    _ND_NUM_BANDS, "band_pfx", ("band_ix", "band_key"), _minhash_keys,
+    partial(band_prefix, hash_impl=_ND_BAND_KW["hash_impl"]), "sh",
     partial(local_minhash_pairs, jaccard_threshold=_ND_MIN_JACCARD),
     partial(_jaccard_hits, threshold=_ND_MIN_JACCARD),
 )
 # bands/band_rows/keys are bound per store to the persisted config (_srp_meta)
 _SRP = _Sidecar(
     "srp", "emb_near_dup", _srp_index_table, None, None,
-    "bucket_pfx", ("band", "bucket"), _srp_candidates,
-    None, _srp_pfx, "v", partial(local_srp_pairs, min_cos=_SRP_ND_MIN_COS),
+    "bucket_pfx", ("band", "bucket"), None, _srp_pfx, "v",
+    partial(local_srp_pairs, min_cos=_SRP_ND_MIN_COS),
     partial(first_hits, min_cos=_SRP_ND_MIN_COS),
 )
 # pipeline order: minhash flips land first, the embedding pass sees only
@@ -1213,7 +1170,7 @@ def _reconciled_index(spark, spec: _Sidecar, idx_store, kept_committed, kept_sta
     return (committed_idx if n_idx else None), n_idx
 
 
-def _near_dedup(spark, store, sidecars, verdicts, committed, n_kept: int):
+def _near_dedup(spark, store, sidecars, verdicts, committed):
     """Run the sidecars over the batch's verdicts in order — minhash flips
     land first, the embedding pass sees only survivors — and return
     (flipped verdicts, [(sidecar, new index, new bands, occupancy)], the
@@ -1222,13 +1179,11 @@ def _near_dedup(spark, store, sidecars, verdicts, committed, n_kept: int):
     new docs the sidecars removed.
 
     Each sidecar's committed side is reconciled and band-gated first (no
-    job on a consistent store: the gates read commit records). A batch of
-    up to _LOCAL_ROWS kept docs then runs _sidecars_local, which pairs the
-    batch's own docs on the driver and runs one Spark pass per sidecar
-    against the committed side; a larger one runs _sidecars_in_spark, the
-    checkpointed Spark path. Both give the same flips, index, band and
-    occupancy rows. Spark jobs per batch do not grow with the commit
-    count."""
+    job on a consistent store: the gates read commit records); then
+    _sidecars_local pairs the batch's own docs on the driver
+    (run_resumable_pipeline splits a batch above _LOCAL_ROWS kept docs)
+    and runs one Spark pass per sidecar against the committed side. Spark
+    jobs per batch do not grow with the commit count."""
     kept_committed = kept_stats = None
     if committed is not None:
         # one (count, xor) fingerprint of the kept set serves every sidecar
@@ -1253,8 +1208,7 @@ def _near_dedup(spark, store, sidecars, verdicts, committed, n_kept: int):
                 )
             committed_bands = bands_store.read(spark)
         sides.append((spec, committed_idx, committed_bands))
-    run = _sidecars_local if n_kept <= _LOCAL_ROWS else _sidecars_in_spark
-    return run(spark, sides, verdicts)
+    return _sidecars_local(spark, sides, verdicts)
 
 
 def _cluster_losers(edges, edge_frame) -> set:
@@ -1274,76 +1228,20 @@ def _cluster_losers(edges, edge_frame) -> set:
         dedup.free_local_checkpoints(clusters)
 
 
-def _sidecars_in_spark(spark, sides, verdicts):
-    """The checkpointed path, for batches above _LOCAL_ROWS kept docs: per
-    sidecar, the survivors' index and band frames are localCheckpointed
-    (one signature pass serves prefix discovery, the pair stages and the
-    commit), pairs run as Spark plans (spec.candidates) and the drop set is
-    collected."""
-    from puddin_spark.operators.dedup import free_local_checkpoints
-    from puddin_spark.operators.similarity import band_occupancy
-    from puddin_spark.pipeline import flip_verdicts
-
-    pending, dropped = [], set()
-    for spec, committed_idx, committed_bands in sides:
-        new_idx = spec.index(
-            verdicts.filter("keep").select("doc_id", "clean_text")
-        ).localCheckpoint()
-        prefixes = Observation(f"{spec.kind}-prefixes-{uuid.uuid4().hex}")
-        new_bands = (
-            spec.bands(new_idx)
-            .observe(prefixes, F.collect_set(spec.pfx_col).alias("pfx"))
-            .localCheckpoint()
-        )
-        if committed_bands is not None:
-            # static prefix pruning: filtering the directory-partitioned
-            # committed bands to the BATCH's own prefixes (<= 16 values,
-            # observed by the checkpoint's own job) prunes whole partitions
-            # — the read cost tracks the batch, not the corpus
-            committed_bands = committed_bands.filter(
-                F.col(spec.pfx_col).isin(prefixes.get["pfx"])
-            )
-        band_col, bucket_col = spec.occupancy_cols
-        occupancy = band_occupancy(
-            new_bands, committed_bands, band_col=band_col, bucket_col=bucket_col
-        )
-        flips, new_new, frees = spec.candidates(
-            new_idx, new_bands, committed_idx, committed_bands
-        )
-        # the drop set is a subset of the batch's kept ids, so it comes to
-        # the driver; it is the only copy anything downstream reads, so the
-        # pair frames can go
-        drop = set() if flips is None else {r.doc_id for r in flips.collect()}
-        # one fetch decides where clusters resolve: a batch's edge set is
-        # normally tiny, and label propagation costs two jobs per round
-        edges = new_new.limit(_LOCAL_EDGES + 1).collect()
-        drop |= _cluster_losers(edges, lambda: new_new)
-        if drop:
-            verdicts = flip_verdicts(verdicts, _doc_id_flag(spark, drop), spec.label)
-        dropped |= drop
-        for frame in frees:
-            if frame.is_cached:
-                frame.unpersist()
-            else:
-                free_local_checkpoints(frame)
-        pending.append((spec, new_idx, new_bands, occupancy))
-    return verdicts, pending, dropped
-
-
 def _sidecars_local(spark, sides, verdicts):
-    """The driver path, for batches of up to _LOCAL_ROWS kept docs. ONE
-    collect brings every kept doc's index row, band keys and band prefixes
-    for every sidecar (the index and band tables' own expressions). Then,
+    """The sidecars' batch-sized half on the driver. ONE collect brings
+    every kept doc's index row, band keys and band prefixes for every
+    sidecar (the index and band tables' own expressions). Then,
     per sidecar over the docs the earlier sidecars kept:
     - new-vs-new pairs on the driver (spec.local_pairs: candidates are the
       pairs sharing a band key, verified by the same threshold decision as
-      the Spark path), into cluster resolution (_cluster_losers);
+      the Spark pair generators), into cluster resolution (_cluster_losers);
     - vs-committed in one Spark pass (_committed_pass), which also counts
       the committed members of the batch's band keys;
     - the index and band rows to commit, and the band occupancy, become
-      local relations: no checkpoint, and the occupancy lineage write is
-      its only job. The band prefixes to prune the committed side come
-      from the collected rows."""
+      local relations, and the occupancy lineage write is its only job.
+      The band prefixes to prune the committed side come from the
+      collected rows."""
     from puddin_spark.pipeline import flip_verdicts
 
     kept = verdicts.filter("keep").select("doc_id", "clean_text")
@@ -1530,8 +1428,7 @@ def _local_frame(spark, rows: list, schema: StructType) -> DataFrame:
     and Arrow (from a plain list, Spark unpickles every row in the JVM on
     every read: ~2x slower writes at a batch's size). Arrow slices the rows
     into one partition per maxRecordsPerBatch rows; coalescing them keeps a
-    commit of these rows to one file, as few as the checkpointed path
-    writes."""
+    commit of these rows to one file."""
     import pandas as pd
 
     return spark.createDataFrame(
@@ -1547,9 +1444,9 @@ def _doc_id_flag(spark, ids: set, key: str = "doc_id"):
     frame. The frame is a local list with no size statistics, so it is
     broadcast: every plan that joins it (each verdict, lineage and sidecar
     write) then builds one hash table from it instead of shuffling both
-    sides. The set is a subset of the batch's kept ids, bounded by the
-    batch like the keep-first loser set (pipeline module docstring:
-    memory contract)."""
+    sides. The set is a subset of the batch's kept ids, which
+    run_resumable_pipeline bounds at about _LOCAL_ROWS per sidecar
+    pass."""
     if len(ids) <= _LOCAL_EDGES:
         return _sql_in(key, sorted(ids))
     return F.broadcast(spark.createDataFrame([(i,) for i in sorted(ids)], f"{key} string"))
@@ -1562,11 +1459,7 @@ def _commit_near_dedup(store, pending, dropped: set) -> None:
     the batch's drop set, so a doc a later sidecar flipped does not linger
     in an earlier one's index, or the next batch's reconciliation gate
     re-fires — and the band occupancy as the band commit's lineage. The
-    new rows are local relations of driver rows (_sidecars_local) or
-    checkpoints (_sidecars_in_spark), freed only after the last commit:
-    every survivors plan reads them."""
-    from puddin_spark.operators.dedup import free_local_checkpoints
-
+    new rows are local relations of driver rows (_sidecars_local)."""
     flag = _doc_id_flag(SparkSession.active(), dropped, "id")
 
     def survivors(frame):
@@ -1580,6 +1473,3 @@ def _commit_near_dedup(store, pending, dropped: set) -> None:
         bands_store.commit(
             survivors(new_bands), lineage=occupancy, partition_by=[spec.pfx_col]
         )
-    for _, new_idx, new_bands, _ in pending:
-        free_local_checkpoints(new_idx)
-        free_local_checkpoints(new_bands)

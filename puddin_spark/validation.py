@@ -6,7 +6,8 @@ joins — no process pool, no egrep:
 
 invariant (confirm_doc_ids.py:3-27): every selected input document appears
 EXACTLY ONCE across keep ∪ drop; no document is both kept and dropped; no
-kept document lacks clean text; no dropped document has clean text.
+kept document lacks clean text; no dropped document has clean text; and
+keep-first holds: no text body has more than one verdict row.
 
 Returns a small summary dict (counts only — never collects documents) and a
 violations DataFrame for drill-down.
@@ -70,6 +71,15 @@ def validate_run(
         .filter("count > 1")
         .select("url", F.lit("duplicate").alias("violation"))
     )
+    # keep-first, in every mode: exact duplicates leave one verdict row per
+    # text body, within a batch and (resume anti-joins text_sha) across
+    # commits. One row per offending body, under its least url
+    dup_body = (
+        verdicts.groupBy("text_sha")
+        .agg(F.count("*").alias("n"), F.min("url").alias("url"))
+        .filter("n > 1")
+        .select("url", F.lit("duplicate_body").alias("violation"))
+    )
     # J4-analog: invalid states within a verdict row
     # (validate_data_group.py:475-493 invalid-exclusions check)
     bad_state = verdicts.filter(
@@ -82,6 +92,7 @@ def validate_run(
     violations = (
         missing.unionByName(extra)
         .unionByName(dup)
+        .unionByName(dup_body)
         .unionByName(bad_state)
         .unionByName(bad_text)
     )

@@ -236,6 +236,37 @@ def test_validation_known_fail_allowlist(spark, verdicts):
     assert s3["n_known_fail"] == s1["n_violations"]
 
 
+def test_validation_sees_keep_first(spark, verdicts, monkeypatch):
+    """duplicate_body: with quality_pipeline's loser anti-join removed,
+    every copy of a duplicated body gets a verdict row, and validate_run in
+    the CLI's mode (dedup=False, digest_aware=True), which has no winner
+    check, reports it; the intact pipeline's verdicts validate."""
+    from puddin_spark import pipeline
+    from puddin_spark.validation import validate_run
+
+    pages = synth_pages_local(spark, N)
+    summary, _ = validate_run(pages, verdicts, dedup=False, digest_aware=True)
+    assert summary["ok"], summary
+
+    class NoLosers:
+        """pipeline.F whose broadcast, without a blocklist only the loser
+        url set's, yields no rows: the anti-join then removes nothing."""
+
+        def __getattr__(self, name):
+            return getattr(F, name)
+
+        @staticmethod
+        def broadcast(df):
+            return df.limit(0)
+
+    monkeypatch.setattr(pipeline, "F", NoLosers())
+    broken = quality_pipeline(pages)
+    monkeypatch.undo()
+    summary, _ = validate_run(pages, broken, dedup=False, digest_aware=True)
+    assert not summary["ok"], summary
+    assert set(summary["by_type"]) == {"duplicate_body"}, summary
+
+
 def test_giant_document_skew(spark):
     """A multi-MB document flows through the Arrow UDF stage without
     stalling the run (north-rule skew case; Arrow batches are row-capped)."""

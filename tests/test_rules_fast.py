@@ -145,11 +145,14 @@ def test_eol_abbr_fast_fuzz():
         "Hon", "i.e", "e.g", "ca", "c", "Jan", "Feb", "Sept", "Dec", "A",
         "B", "ABC", ".", "?", " ", "\n", "\n\n", "x", "yz", "3", "14", "!",
         "'", '"', ",", "es.", "s.", "Assemb", "Pharm",
+        # after a newline, lowercase, '_', non-ASCII letters and '²' skip
+        # the match attempts; '٣', a non-ASCII decimal digit, must not
+        "q", "_", "é", "ß", "É", "٣", "²",
     ]
     for _ in range(60_000):
         s = "".join(rng.choice(toks) for _ in range(rng.randint(0, 14)))
         assert _orig_eol(s) == rules._eol_abbr_sub(s), repr(s)
-    alph = "AbC.\n ?!,eszgrMxJanSeptDc014'\"\t"
+    alph = "AbC.\n ?!,eszgrMxJanSeptDc014'\"\t_éßÉ٣²"
     for _ in range(60_000):
         s = "".join(rng.choice(alph) for _ in range(rng.randint(0, 40)))
         assert _orig_eol(s) == rules._eol_abbr_sub(s), repr(s)

@@ -1,4 +1,4 @@
-"""The near-dedup sidecars' driver path (snapshots._sidecars_local).
+"""The near-dedup sidecars' driver pass (snapshots._sidecars_local).
 
 - Its new-vs-new pair sets equal the Spark generators' on seeded random
   batches with planted families: `sub` copies (one token swapped, the
@@ -6,8 +6,8 @@
   words, so the same embedding), including one batch at the row bound.
 - Its Jaccard threshold decides like Spark's HALF_UP round(x, 6) >= 0.5.
 - A sidecar batch against a committed store runs a pinned, flat number of
-  Spark jobs, and commits what the checkpointed path above the bound
-  commits.
+  Spark jobs; one above the row bound commits as driver-sized sub-batches
+  that keep every invariant, also when killed between sub-batches.
 - The driver path's occupancy schema, built without planning
   band_occupancy, equals band_occupancy's on a first and a later batch.
 """
@@ -173,31 +173,114 @@ def test_sidecar_batch_jobs_bounded_and_flat(spark, tmp_path):
             assert sum(len(list(d.glob("*.parquet"))) for d in dirs) == len(dirs), rec
 
 
-def test_checkpointed_path_commits_what_the_driver_path_commits(spark, tmp_path, monkeypatch):
-    """With the row bound forced to 0 every batch runs the checkpointed
-    Spark path (_sidecars_in_spark); after each batch its verdict, index
-    and band rows and its band occupancy lineage equal the driver path's."""
-    def tables(store):
-        out = [store.read(spark)]
-        for name in snapshots.SIDECAR_STORES:
-            side = snapshots.SnapshotStore(store.base / name)
-            out.append(side.read(spark))
-            if name.endswith("_bands"):
-                out.append(side.read_lineage(spark))
-        return out
+def _split_batch(spark, tmp_path, store):
+    """Commit a seed batch to `store`, then return (every page, the next
+    batch, its planted families): ~300 fresh synthetic pages plus a
+    minhash twin (a tail added) and an embedding twin (words reversed) of
+    two committed kept docs, and three minhash and three embedding
+    families of two new docs each."""
+    from puddin_spark.synth import _prose, gen_rows
 
-    default = snapshots.SnapshotStore(tmp_path / "default")
-    after = []
-    for _, pages in _sidecar_batches(spark, tmp_path, default):
-        _run(spark, pages, default)
-        after.append(tables(default))
-    monkeypatch.setattr(snapshots, "_LOCAL_ROWS", 0)
-    forced = snapshots.SnapshotStore(tmp_path / "forced")
-    for n, (_, pages) in enumerate(_sidecar_batches(spark, tmp_path, forced)):
-        _run(spark, pages, forced)
-        for a, b in zip(after[n], tables(forced)):
-            assert a.schema == b.schema
-            assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    cols = "url string, warc_ts timestamp, html binary, text string, lang string"
+
+    def parquet(frame: pd.DataFrame, name: str):
+        path = tmp_path / f"{store.base.name}-{name}"
+        spark.createDataFrame(frame, schema=cols).write.parquet(str(path))
+        return spark.read.parquet(str(path))
+
+    seed = parquet(gen_rows(0, 80, include_fixtures=False), "seed")
+    assert _run(spark, seed, store)[0] == 0
+    kept = [
+        (r.url, r.clean_text)
+        for r in store.read(spark).filter("keep").orderBy("doc_id").limit(2).collect()
+    ]
+    fams = {
+        "committed-mh": [kept[0][0], "https://twin.example/mh"],
+        "committed-eb": [kept[1][0], "https://twin.example/eb"],
+    }
+    planted = [
+        ("https://twin.example/mh", kept[0][1] + " extra tail words here"),
+        ("https://twin.example/eb", " ".join(reversed(kept[1][1].split()))),
+    ]
+    for f in range(6):
+        text, kind = _prose(9100 + f), ("mh", "eb")[f % 2]
+        twin = text + " extra tail words here" if kind == "mh" else " ".join(
+            reversed(text.split())
+        )
+        urls = [f"https://new.example/{f}/{kind}-a", f"https://new.example/{f}/{kind}-b"]
+        fams[f"new-{f}"] = urls
+        planted += list(zip(urls, (text, twin)))
+    frame = gen_rows(80, 380, include_fixtures=False)
+    extra = pd.DataFrame({
+        "url": [u for u, _ in planted],
+        "warc_ts": frame["warc_ts"].iloc[: len(planted)].tolist(),
+        "html": None,
+        "text": [t for _, t in planted],
+        "lang": "en",
+    })
+    batch = parquet(pd.concat([frame, extra], ignore_index=True), "batch")
+    return seed.unionByName(batch), batch, fams
+
+
+def _assert_split_store_valid(spark, store, pages, fams):
+    """validate_run is ok (duplicate_body included), each family keeps one
+    member, and each sidecar index holds exactly the committed kept set,
+    with index rows x band_rows band rows."""
+    from puddin_spark.validation import validate_run
+
+    verdicts = store.read(spark)
+    summary, _ = validate_run(pages, verdicts, digest_aware=True)
+    assert summary["ok"], summary
+    kept = {r.url for r in verdicts.filter("keep").select("url").collect()}
+    assert {f: sum(u in kept for u in m) for f, m in fams.items()} == dict.fromkeys(fams, 1)
+    want = snapshots._id_set_stats(verdicts, snapshots._KEPT_IDS)
+    for spec, band_rows in ((snapshots._MINHASH, snapshots._ND_NUM_BANDS), (snapshots._SRP, 8)):
+        idx_store, bands_store = spec.stores(store.base)
+        idx = idx_store.read(spark)
+        assert snapshots._id_set_stats(idx, "id") == want, spec.kind
+        assert idx_store.fingerprint("id") == want, spec.kind
+        assert bands_store.read(spark).count() == want[0] * band_rows, spec.kind
+
+
+def test_oversized_batch_commits_driver_sized_sub_batches(spark, tmp_path, monkeypatch):
+    """With the row bound forced to 64, a ~300-doc sidecar batch commits k
+    = ceil(kept / 64) verdict snapshots, one per sub-batch: the store
+    validates, every planted family (committed twins, and new pairs that
+    may straddle sub-batches) keeps exactly one member, each sidecar index
+    equals the committed kept set, and a rerun is a no-op. A run killed
+    after the first sub-batch's verdict commit, before its sidecar
+    commits, ends in the same invariants when rerun."""
+    import pytest
+
+    monkeypatch.setattr(snapshots, "_LOCAL_ROWS", 64)
+    store = snapshots.SnapshotStore(tmp_path / "split")
+    pages, batch, fams = _split_batch(spark, tmp_path, store)
+    snap_id, n_new = _run(spark, batch, store)
+    new = store.read(spark).join(batch.select("url"), "url", "left_semi")
+    assert n_new == new.count()
+    # the sidecars flip only docs the rules kept: k is fixed by those
+    n_kept = new.filter("keep or excl_type in ('near_dup', 'emb_near_dup')").count()
+    k = -(-n_kept // 64)
+    assert k >= 3 and snap_id == k, (n_kept, snap_id)
+    assert [r["snapshot_id"] for r in store.commits()] == list(range(k + 1))
+    _assert_split_store_valid(spark, store, pages, fams)
+    assert _run(spark, batch, store) == (-1, 0)
+
+    killed = snapshots.SnapshotStore(tmp_path / "killed")
+    pages, batch, fams = _split_batch(spark, tmp_path, killed)
+    real = snapshots._commit_near_dedup
+
+    def crash(*args):
+        monkeypatch.setattr(snapshots, "_commit_near_dedup", real)
+        raise RuntimeError("killed after the first sub-batch's verdict commit")
+
+    monkeypatch.setattr(snapshots, "_commit_near_dedup", crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        _run(spark, batch, killed)
+    assert killed.current_snapshot_id() == 1
+    assert _run(spark, batch, killed)[0] > 1
+    _assert_split_store_valid(spark, killed, pages, fams)
+    assert _run(spark, batch, killed) == (-1, 0)
 
 
 def test_occupancy_schema_is_band_occupancy_schema(spark, tmp_path):
