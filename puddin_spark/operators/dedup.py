@@ -785,9 +785,9 @@ def resolve_duplicate_clusters(
     its shuffle stages, and one call runs at least two rounds (the last
     one confirms convergence): ~10 jobs per call on the sidecars' LSH
     graphs. Edge sets that fit in driver memory resolve identically, with
-    no job, through union_find_min_roots; the near-dedup sidecars call
-    this function only above their driver-side edge bound
-    (snapshots._LOCAL_EDGES).
+    no job, through union_find_min_roots, which is what the near-dedup
+    sidecars use: their sub-batch bound (snapshots._LOCAL_ROWS) keeps every
+    edge set on the driver.
     """
     # both edge directions via ONE explode over the pair rows: the union-of-
     # two-selects form evaluated the whole upstream pair generation twice

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from puddin_spark.operators.dedup import band_prefix, local_minhash_pairs
+from puddin_spark.operators.dedup import band_prefix, local_minhash_pairs, union_find_min_roots
 from puddin_spark.operators.similarity import first_hits, local_srp_pairs
 
 
@@ -621,6 +621,12 @@ def record_failures(
     see exactly one row per doc and resume semantics are unchanged. Lineage
     is recomputed from the updated verdicts so rule-hit counts include the
     failures. Returns the new snapshot id, or -1 if `failed` is empty.
+
+    The near-dedup sidecar indexes are left as they are: the base commit
+    changes the kept-id fingerprint, so the next ingest's reconciliation
+    gate (_reconciled_index) prunes the flipped docs' index entries before
+    any newcomer is paired against them, as it does after rollback. Only
+    ingest pairs documents against a sidecar index.
     """
     from puddin_spark.pipeline import flip_verdicts, lineage_table
 
@@ -636,33 +642,10 @@ def record_failures(
     lineage = lineage_table(updated, num_partitions=num_partitions).withColumn(
         "snapshot_id", F.lit(store.current_snapshot_id() + 1)
     )
-    snap_id = store.commit(
+    return store.commit(
         updated, lineage, base=True, lineage_stats_cols=["snapshot_id"],
         fingerprint=_KEPT_IDS,
     )
-    _prune_near_dedup_sidecar(spark, store, updated)
-    return snap_id
-
-
-def _prune_near_dedup_sidecar(spark, store: SnapshotStore, verdicts: DataFrame) -> None:
-    """Keep the near-dedup indexes consistent with a verdict flip: entries
-    for now-excluded docs would otherwise keep dropping future newcomers as
-    near-dups of documents no longer in the corpus — both copies lost — and
-    the ingest-time reconciliation gate would re-fire forever. Prunes every
-    sidecar's signature index to the current kept id set as a base commit;
-    the band caches are left to their row-count gates, which rebuild them
-    from the pruned indexes by projection on the next ingest. No-op for any
-    sidecar that was never enabled."""
-    kept = verdicts.filter("keep").select(F.col("doc_id").alias("id"))
-    for spec in _SIDECARS:
-        idx_base = store.base / spec.index_name
-        if not any((idx_base / "_commits").glob("*.json")):
-            continue
-        idx_store = SnapshotStore(idx_base)
-        idx = idx_store.read(spark)
-        if idx is None:
-            continue
-        idx_store.commit(idx.join(kept, "id", "left_semi"), base=True, fingerprint="id")
 
 
 def run_resumable_pipeline(
@@ -721,29 +704,30 @@ def run_resumable_pipeline(
     survivors. They differ in signature and label. near_dedup indexes word
     3-shingle minhash signatures at <base>/minhash_index (bands at
     <base>/minhash_bands, partitioned by band_pfx) and flips Jaccard >= 0.5
-    twins to excl_type='near_dup' (incremental_minhash_pairs).
-    embedding_near_dedup indexes document embeddings (models.
-    doc_embedding_udf, the sentence-transformer seam's deterministic
-    stand-in) at <base>/srp_index (SRP band keys at <base>/srp_bands,
-    partitioned by bucket_pfx) and flips cosine >= 0.99 twins to
-    excl_type='emb_near_dup' (similarity.committed_srp_flip_ids +
-    srp_batch_pairs_matmul). Its index is BANDED — srp_bands keys per doc,
-    each from a disjoint srp_planes-plane family; candidates share ANY band
-    key — so near-twin recall stays high while random collisions per band
-    scale as N/2^planes. srp_planes/srp_bands apply on FIRST use (defaults
-    16/8; raise planes at larger corpus scales), persist in the sidecar's
-    _meta.json, and later runs must match or omit them — band keys from
-    different configs are incomparable, so a mismatch raises instead of
-    silently generating no candidates. Both are off by default: their
+    twins to excl_type='near_dup' (dedup.local_minhash_pairs new-vs-new,
+    _jaccard_hits vs-committed). embedding_near_dedup indexes document
+    embeddings (models.doc_embedding_udf, the sentence-transformer seam's
+    deterministic stand-in) at <base>/srp_index (SRP band keys at
+    <base>/srp_bands, partitioned by bucket_pfx) and flips cosine >= 0.99
+    twins to excl_type='emb_near_dup' (similarity.local_srp_pairs
+    new-vs-new, similarity.first_hits vs-committed; the vs-committed half
+    of both runs in _committed_pass). Its index is BANDED — srp_bands keys
+    per doc, each from a disjoint srp_planes-plane family; candidates share
+    ANY band key — so near-twin recall stays high while random collisions
+    per band scale as N/2^planes. srp_planes/srp_bands apply on FIRST use
+    (defaults 16/8; raise planes at larger corpus scales), persist in the
+    sidecar's _meta.json, and later runs must match or omit them — band
+    keys from different configs are incomparable, so a mismatch raises
+    instead of silently generating no candidates. Both are off by default: their
     labels are graft-axis labels the reference doesn't emit.
 
     The sidecars run on the driver (_near_dedup): ONE collect encodes the
     batch for both sidecars (signatures, shingles, embeddings, band keys
-    and prefixes), new-vs-new pairs and clusters resolve on the driver,
-    and each sidecar runs one Spark pass against its committed side
-    (_committed_pass) that returns the drop set and the committed band-key
-    counts the occupancy lineage needs: a batch of 200 docs runs 29 Spark
-    jobs, the same count every batch. The verdict count also observes the
+    and prefixes), new-vs-new pairs and clusters resolve on the driver
+    (union-find over the pair set), and each sidecar runs one Spark pass
+    against its committed side (_committed_pass) that returns the drop set
+    and the committed band-key counts the occupancy lineage needs: a batch
+    of 200 docs runs 29 Spark jobs, the same count every batch. The verdict count also observes the
     batch's kept count, which bounds that collect: with sidecars on, a
     batch above _LOCAL_ROWS kept docs commits as k = ceil(kept /
     _LOCAL_ROWS) sub-batches, split by pmod(xxhash64(doc_id), k) AFTER
@@ -899,17 +883,13 @@ def run_resumable_pipeline(
 # the verdict store's kept-id set, as a commit fingerprint: every sidecar
 # index is reconciled against it (_reconciled_index)
 _KEPT_IDS = "if(keep, doc_id, null)"
-# new-vs-new edge sets up to this size resolve into clusters on the driver
-# (union_find_min_roots, ~200 bytes per edge); larger ones run the Spark
-# label propagation (resolve_duplicate_clusters). Drop sets up to this size
-# flip verdicts and filter the sidecar commits through an IN list
-# (_doc_id_flag)
-_LOCAL_EDGES = 20_000
 # the most kept docs one sidecar pass brings to the driver (_sidecars_local):
 # one collect holds every kept doc's signature, shingles, embedding and band
 # keys, ~20 KB each in the driver's Python RSS (40 MB at 2048). A sidecar
 # batch with more kept docs commits as ceil(kept / _LOCAL_ROWS) sub-batches
-# (run_resumable_pipeline). Set from a measured sweep (perfbench corpus, seed
+# (run_resumable_pipeline), so each pass's drop set (an IN list) and the
+# docs on its new-vs-new edges (a driver-side set, clustered by union-find)
+# are bounded too. Set from a measured sweep (perfbench corpus, seed
 # 11, a seed batch then one batch of N docs, both sidecars, local[3] on 4
 # vCPUs; batch wall of an all-Spark checkpointed pairing -> the driver pass):
 # N=1024 19-20 s -> 14 s, 2048 25 s -> 16-19 s, 3072 25 s -> 21 s, 4096
@@ -1135,9 +1115,11 @@ def _reconciled_index(spark, spec: _Sidecar, idx_store, kept_committed, kept_sta
     its row count; (None, 0) when empty. The (count, xor-of-ids) gate
     compares fingerprints from the commit records (no job) and repairs
     BOTH directions as one BASE commit, so the fix runs once:
-    - stale entries (docs flipped keep=false by record_failures / rollback)
-      are pruned — left in place they would drop future newcomers as
-      near-dups of excluded docs (both copies lost);
+    - stale entries (docs flipped keep=false by record_failures / rollback,
+      which leave the indexes as they are) are pruned — left in place they
+      would drop future newcomers as near-dups of excluded docs (both
+      copies lost). This gate is the only prune, and it runs before any
+      newcomer is paired;
     - missing entries (a crash between the verdict and index commits) are
       re-indexed from committed clean_text.
     An index whose records carry no fingerprint takes the repair once; its
@@ -1211,23 +1193,6 @@ def _near_dedup(spark, store, sidecars, verdicts, committed):
     return _sidecars_local(spark, sides, verdicts)
 
 
-def _cluster_losers(edges, edge_frame) -> set:
-    """The non-root ids of the clusters a new-vs-new edge list forms (the
-    root is each cluster's minimum id): union_find_min_roots on the driver
-    up to _LOCAL_EDGES edges, else label propagation in Spark
-    (resolve_duplicate_clusters) over edge_frame(), the same edges as an
-    (id_a, id_b) frame."""
-    from puddin_spark.operators import dedup
-
-    if len(edges) <= _LOCAL_EDGES:
-        return {i for i, root in dedup.union_find_min_roots(edges).items() if i != root}
-    clusters = dedup.resolve_duplicate_clusters(edge_frame())
-    try:
-        return {r.id for r in clusters.filter("id != root").select("id").collect()}
-    finally:
-        dedup.free_local_checkpoints(clusters)
-
-
 def _sidecars_local(spark, sides, verdicts):
     """The sidecars' batch-sized half on the driver. ONE collect brings
     every kept doc's index row, band keys and band prefixes for every
@@ -1235,7 +1200,8 @@ def _sidecars_local(spark, sides, verdicts):
     per sidecar over the docs the earlier sidecars kept:
     - new-vs-new pairs on the driver (spec.local_pairs: candidates are the
       pairs sharing a band key, verified by the same threshold decision as
-      the Spark pair generators), into cluster resolution (_cluster_losers);
+      the Spark pair generators); every non-root member of a cluster they
+      form is dropped (union_find_min_roots: the root is the minimum id);
     - vs-committed in one Spark pass (_committed_pass), which also counts
       the committed members of the batch's band keys;
     - the index and band rows to commit, and the band occupancy, become
@@ -1264,14 +1230,12 @@ def _sidecars_local(spark, sides, verdicts):
             drop, n_committed = _committed_pass(
                 spec, committed_idx, committed_bands, mine, keys_col
             )
-        edges = sorted(spec.local_pairs(
+        edges = spec.local_pairs(
             [r.id for r in mine], [r[spec.payload] for r in mine], [r[keys_col] for r in mine]
-        ))
-        drop |= _cluster_losers(
-            edges, lambda: spark.createDataFrame(edges, "id_a string, id_b string")
         )
+        drop |= {i for i, root in union_find_min_roots(edges).items() if i != root}
         if drop:
-            verdicts = flip_verdicts(verdicts, _doc_id_flag(spark, drop), spec.label)
+            verdicts = flip_verdicts(verdicts, _sql_in("doc_id", sorted(drop)), spec.label)
         dropped |= drop
         bands = spec.bands(idx)
         new_idx = _local_frame(
@@ -1436,40 +1400,19 @@ def _local_frame(spark, rows: list, schema: StructType) -> DataFrame:
     ).coalesce(1)
 
 
-def _doc_id_flag(spark, ids: set, key: str = "doc_id"):
-    """A driver-side id set as a `key` predicate: a boolean IN-list Column
-    up to _LOCAL_EDGES ids — a filter, no join and no broadcast job — else
-    a one-column frame of the distinct ids, for a join. flip_verdicts
-    takes either form as its flag; _commit_near_dedup anti-joins the
-    frame. The frame is a local list with no size statistics, so it is
-    broadcast: every plan that joins it (each verdict, lineage and sidecar
-    write) then builds one hash table from it instead of shuffling both
-    sides. The set is a subset of the batch's kept ids, which
-    run_resumable_pipeline bounds at about _LOCAL_ROWS per sidecar
-    pass."""
-    if len(ids) <= _LOCAL_EDGES:
-        return _sql_in(key, sorted(ids))
-    return F.broadcast(spark.createDataFrame([(i,) for i in sorted(ids)], f"{key} string"))
-
-
 def _commit_near_dedup(store, pending, dropped: set) -> None:
     """After the verdict commit: each sidecar's index, then its band cache
     (a crash between the two is caught by the row-count gate next batch),
     each holding exactly the batch's finally kept docs — its new rows minus
-    the batch's drop set, so a doc a later sidecar flipped does not linger
-    in an earlier one's index, or the next batch's reconciliation gate
-    re-fires — and the band occupancy as the band commit's lineage. The
-    new rows are local relations of driver rows (_sidecars_local)."""
-    flag = _doc_id_flag(SparkSession.active(), dropped, "id")
-
-    def survivors(frame):
-        if isinstance(flag, DataFrame):
-            return frame.join(flag, "id", "left_anti")
-        return frame.filter(~flag)
-
+    the batch's drop set (an IN-list filter), so a doc a later sidecar
+    flipped does not linger in an earlier one's index, or the next batch's
+    reconciliation gate re-fires — and the band occupancy as the band
+    commit's lineage. The new rows are local relations of driver rows
+    (_sidecars_local)."""
+    survives = ~_sql_in("id", sorted(dropped))
     for spec, new_idx, new_bands, occupancy in pending:
         idx_store, bands_store = spec.stores(store.base)
-        idx_store.commit(survivors(new_idx), fingerprint="id")
+        idx_store.commit(new_idx.filter(survives), fingerprint="id")
         bands_store.commit(
-            survivors(new_bands), lineage=occupancy, partition_by=[spec.pfx_col]
+            new_bands.filter(survives), lineage=occupancy, partition_by=[spec.pfx_col]
         )

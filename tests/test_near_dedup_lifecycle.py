@@ -1,8 +1,9 @@
 """Near-dedup sidecar lifecycle (round-3 hardening):
 
-- record_failures prunes stale index entries, so a future fuzzy twin of a
-  now-excluded doc is KEPT (the both-copies-lost bug) and the ingest-time
-  reconciliation gate stops re-firing;
+- after record_failures, the next ingest's reconciliation gate prunes
+  the stale index entries before pairing, so a future fuzzy twin of a
+  now-excluded doc is KEPT (the both-copies-lost bug) and the index
+  equals the kept set again;
 - the (count, xor-of-ids) gate catches same-count membership drift (the
   rollback blind spot of a count-only gate);
 - the persisted band table is directory-partitioned by band-key prefix and
@@ -55,18 +56,23 @@ def test_record_failures_prunes_index_and_twin_of_excluded_doc_is_kept(
     record_failures(spark, store, failed, num_partitions=2)
     v1 = store.read(spark)
     assert v1.filter(f"doc_id = '{victim.doc_id}'").first().keep is False
-    # the sidecar index was pruned in the same operation — no stale entry
-    assert idx_store.read(spark).count() == v1.filter("keep").count()
 
     # a fuzzy twin of the EXCLUDED doc must be kept: its only near-dup is
-    # no longer in the corpus (stale-index bug would drop it — both lost)
+    # no longer in the corpus, and the next ingest's reconciliation gate
+    # prunes the stale index entry before pairing (else it would drop the
+    # twin — both copies lost)
     twin = _twin_of(spark, victim.clean_text, "https://twin.example/kept", pages)
     run_resumable_pipeline(spark, twin, store, num_partitions=2, near_dedup=True)
     v2 = store.read(spark)
     t = v2.filter("url = 'https://twin.example/kept'").first()
     assert t.keep is True and t.excl_type is None
-    # index consistent afterwards (gate does not re-fire)
-    assert idx_store.read(spark).count() == v2.filter("keep").count()
+    # the index equals the kept set, without the victim (the gate will not
+    # re-fire)
+    idx = idx_store.read(spark)
+    assert {r.id for r in idx.select("id").collect()} == {
+        r.doc_id for r in v2.filter("keep").select("doc_id").collect()
+    }
+    assert idx.filter(F.col("id") == victim.doc_id).count() == 0
 
 
 def test_fingerprint_gate_catches_same_count_membership_drift(spark, tmp_path):

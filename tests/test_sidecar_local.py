@@ -8,6 +8,8 @@
 - A sidecar batch against a committed store runs a pinned, flat number of
   Spark jobs; one above the row bound commits as driver-sized sub-batches
   that keep every invariant, also when killed between sub-batches.
+- A hot family with more than 20 000 new-vs-new edges clusters on the
+  driver and keeps exactly one member.
 - The driver path's occupancy schema, built without planning
   band_occupancy, equals band_occupancy's on a first and a later batch.
 """
@@ -281,6 +283,67 @@ def test_oversized_batch_commits_driver_sized_sub_batches(spark, tmp_path, monke
     assert _run(spark, batch, killed)[0] > 1
     _assert_split_store_valid(spark, killed, pages, fams)
     assert _run(spark, batch, killed) == (-1, 0)
+
+
+def test_hot_family_stays_on_the_driver(spark, tmp_path, monkeypatch):
+    """One sidecar batch holds a family of 216 near-identical new docs (one
+    text, a distinct two-word tail each: no exact duplicates) whose
+    new-vs-new minhash edges number more than 20 000. They cluster on the
+    driver, with Spark label propagation unreachable: the family keeps
+    exactly one member, its minimum doc_id, the rest flip to near_dup, and
+    both sidecar indexes equal the committed kept set."""
+    from itertools import islice, permutations
+
+    from puddin_spark.operators import dedup
+    from puddin_spark.synth import _WORDS, _prose, gen_rows
+
+    def resolve(*a, **kw):
+        raise AssertionError("resolve_duplicate_clusters ran")
+
+    monkeypatch.setattr(dedup, "resolve_duplicate_clusters", resolve)
+    n_edges = []
+    real_pairs = snapshots._MINHASH.local_pairs
+
+    def local_pairs(*a, **kw):
+        edges = real_pairs(*a, **kw)
+        n_edges.append(len(edges))
+        return edges
+
+    monkeypatch.setattr(
+        snapshots, "_MINHASH", snapshots._MINHASH._replace(local_pairs=local_pairs)
+    )
+    cols = "url string, warc_ts timestamp, html binary, text string, lang string"
+    store = snapshots.SnapshotStore(tmp_path / "hot")
+    seed = spark.createDataFrame(gen_rows(0, 40, include_fixtures=False), cols)
+    assert _run(spark, seed, store)[0] == 0
+    frame = gen_rows(40, 80, include_fixtures=False)
+    base = _prose(9200, 24)
+    urls = [f"https://hot.example/{i}" for i in range(216)]
+    hot = pd.DataFrame({
+        "url": urls,
+        "warc_ts": frame["warc_ts"].iloc[0],
+        "html": None,
+        "text": [
+            f"{base} Then the {a} and the {b} left."
+            for a, b in islice(permutations(_WORDS, 2), len(urls))
+        ],
+        "lang": "en",
+    })
+    batch = spark.createDataFrame(pd.concat([frame, hot], ignore_index=True), cols)
+    assert _run(spark, batch, store)[0] == 1
+    assert n_edges[-1] > 20_000, n_edges
+
+    verdicts = store.read(spark)
+    family = verdicts.filter(F.col("url").startswith("https://hot.example/")).collect()
+    assert len(family) == len(urls)
+    kept = [r for r in family if r.keep]
+    assert [r.doc_id for r in kept] == [min(r.doc_id for r in family)]
+    assert {r.excl_type for r in family if not r.keep} == {"near_dup"}
+    want = snapshots._id_set_stats(verdicts, snapshots._KEPT_IDS)
+    for spec in (snapshots._MINHASH, snapshots._SRP):
+        idx_store, _ = spec.stores(store.base)
+        assert idx_store.fingerprint("id") == want, spec.kind
+        assert snapshots._id_set_stats(idx_store.read(spark), "id") == want, spec.kind
 
 
 def test_occupancy_schema_is_band_occupancy_schema(spark, tmp_path):

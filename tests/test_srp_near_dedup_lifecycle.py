@@ -8,9 +8,13 @@ mirror of test_near_dedup_across_resumes / test_near_dedup_lifecycle:
   crash self-heals by re-encoding committed clean_text;
 - the committed index is directory-partitioned by bucket prefix and the
   incremental scan prunes partitions;
-- record_failures prunes the srp sidecar alongside the minhash one;
+- after record_failures, the next ingest prunes the srp index (its
+  reconciliation gate) before pairing, so a twin of the excluded doc is
+  kept;
 - composing with near_dedup=True keeps BOTH indexes consistent with the
-  final kept set.
+  final kept set;
+- the index and band commits filter the batch's drop set as an IN list:
+  their write plans hold no join.
 
 The deterministic twin is the doc's text with word order REVERSED: the
 signed hashed-BoW embedding is bit-identical (cosine exactly 1.0, same SRP
@@ -167,18 +171,23 @@ def test_record_failures_prunes_srp_sidecar(spark, tmp_path):
         spark.createDataFrame([(victim.doc_id,)], "doc_id string"),
         num_partitions=2,
     )
-    v1 = store.read(spark)
-    pruned = srp_store.read(spark)
-    assert pruned.count() == v1.filter("keep").count()
-    assert pruned.filter(F.col("id") == victim.doc_id).count() == 0
-    # a future embedding twin of the now-excluded doc is KEPT (no stale
-    # index entry drops it — the both-copies-lost bug)
+    assert store.read(spark).filter(f"doc_id = '{victim.doc_id}'").first().keep is False
+    # a future embedding twin of the now-excluded doc is KEPT: the next
+    # ingest's reconciliation gate prunes the stale index entry before
+    # pairing (else it drops the twin — the both-copies-lost bug)
     twin = _emb_twin(spark, victim.clean_text, "https://twin.example/rf", pages)
     run_resumable_pipeline(
         spark, twin, store, num_partitions=2, embedding_near_dedup=True
     )
-    t = store.read(spark).filter("url = 'https://twin.example/rf'").first()
+    v2 = store.read(spark)
+    t = v2.filter("url = 'https://twin.example/rf'").first()
     assert t.keep is True and t.excl_type is None
+    # the pruned index equals the kept set, without the victim
+    pruned = srp_store.read(spark)
+    assert {r.id for r in pruned.select("id").collect()} == {
+        r.doc_id for r in v2.filter("keep").select("doc_id").collect()
+    }
+    assert pruned.filter(F.col("id") == victim.doc_id).count() == 0
 
 
 def test_minhash_and_embedding_near_dedup_compose(spark, tmp_path):
@@ -346,17 +355,11 @@ def test_stale_sidecar_over_wiped_store_heals(spark, tmp_path):
 
 
 def test_large_drop_set_branch_matches_default(spark, tmp_path, monkeypatch):
-    """Above snapshots._LOCAL_EDGES, new-vs-new clusters resolve in Spark
-    (resolve_duplicate_clusters), verdicts flip through a one-column id
-    frame, and the sidecar commits anti-join that frame. Forcing the bound
-    to 0 must commit the same verdict, index and band rows as the default
-    run. At the default bound the index and band commits read the batch's
-    drop set as an IN filter: their write plans hold no join. The forced
-    branch broadcasts its id frame, which bounds its extra Spark jobs."""
-    from conftest import jobs_in
-
+    """A batch with committed twins and in-batch pairs for both sidecars
+    flips the planted twins and exactly one member of each in-batch pair.
+    The index and band commits read the batch's drop set as an IN filter:
+    their four write plans hold no join."""
     from puddin_spark import snapshots
-    from puddin_spark.operators import dedup
     from puddin_spark.synth import _prose
 
     pages = synth_pages_local(spark, 40).cache()
@@ -379,36 +382,30 @@ def test_large_drop_set_branch_matches_default(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(snapshots.SnapshotStore, "commit", commit)
 
-    def run(name):
-        store = SnapshotStore(tmp_path / name)
-        run_resumable_pipeline(
-            spark, pages, store, num_partitions=2,
-            near_dedup=True, embedding_near_dedup=True,
-        )
-        srcs = store.read(spark).filter("keep").orderBy("doc_id").limit(2).collect()
-        mh, emb = _prose(9001), _prose(9002)
-        batch2 = [
-            page("https://twin.example/mh", srcs[0].clean_text + " extra tail words here"),
-            _emb_twin(spark, srcs[1].clean_text, "https://twin.example/eb", pages),
-            page("https://new.example/mh-a", mh),
-            page("https://new.example/mh-b", mh + " extra tail words here"),
-            page("https://new.example/eb-a", emb),
-            _emb_twin(spark, emb, "https://new.example/eb-b", pages),
-        ]
-        del plans[:]
-        n_jobs = jobs_in(spark, lambda: run_resumable_pipeline(
-            spark, reduce(lambda a, b: a.unionByName(b), batch2), store,
-            num_partitions=2,
-            near_dedup=True, embedding_near_dedup=True,
-        ))
-        tables = [store.read(spark)] + [
-            SnapshotStore(store.base / n).read(spark)
-            for n in ("minhash_index", "minhash_bands", "srp_index", "srp_bands")
-        ]
-        return tables, list(plans), n_jobs
-
-    default, default_plans, default_jobs = run("default")
-    planted = default[0].filter("url like 'https://twin.%' or url like 'https://new.%'")
+    store = SnapshotStore(tmp_path / "default")
+    run_resumable_pipeline(
+        spark, pages, store, num_partitions=2,
+        near_dedup=True, embedding_near_dedup=True,
+    )
+    srcs = store.read(spark).filter("keep").orderBy("doc_id").limit(2).collect()
+    mh, emb = _prose(9001), _prose(9002)
+    batch2 = [
+        page("https://twin.example/mh", srcs[0].clean_text + " extra tail words here"),
+        _emb_twin(spark, srcs[1].clean_text, "https://twin.example/eb", pages),
+        page("https://new.example/mh-a", mh),
+        page("https://new.example/mh-b", mh + " extra tail words here"),
+        page("https://new.example/eb-a", emb),
+        _emb_twin(spark, emb, "https://new.example/eb-b", pages),
+    ]
+    del plans[:]
+    run_resumable_pipeline(
+        spark, reduce(lambda a, b: a.unionByName(b), batch2), store,
+        num_partitions=2,
+        near_dedup=True, embedding_near_dedup=True,
+    )
+    planted = store.read(spark).filter(
+        "url like 'https://twin.%' or url like 'https://new.%'"
+    )
     flips = {r.url: r.excl_type for r in planted.filter("not keep").collect()}
     # the committed twins flip; each in-batch pair loses one member
     assert flips.pop("https://twin.example/mh") == "near_dup"
@@ -417,25 +414,5 @@ def test_large_drop_set_branch_matches_default(spark, tmp_path, monkeypatch):
         ("https://new.example/eb", "emb_near_dup"),
         ("https://new.example/mh", "near_dup"),
     ]
-    assert len(default_plans) == 4
-    assert not any("Join" in p for p in default_plans), default_plans
-
-    resolved = []
-    real_resolve = dedup.resolve_duplicate_clusters
-
-    def resolve(*a, **kw):
-        resolved.append(1)
-        return real_resolve(*a, **kw)
-
-    monkeypatch.setattr(snapshots, "_LOCAL_EDGES", 0)
-    monkeypatch.setattr(dedup, "resolve_duplicate_clusters", resolve)
-    forced, forced_plans, forced_jobs = run("forced")
-    assert len(resolved) >= 2  # both sidecars, batch 2
-    assert all("Join" in p for p in forced_plans)
-    # the id frame is broadcast, so no plan that joins it shuffles it: on
-    # this batch the branch costs 48 jobs over the default (label
-    # propagation included), and 64 when every join shuffled both sides
-    assert forced_jobs - default_jobs <= 56, (default_jobs, forced_jobs)
-    for a, b in zip(default, forced):
-        assert a.columns == b.columns
-        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    assert len(plans) == 4
+    assert not any("Join" in p for p in plans), plans
