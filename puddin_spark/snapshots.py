@@ -1114,40 +1114,42 @@ def _reconciled_index(spark, spec: _Sidecar, idx_store, kept_committed, kept_sta
     """The committed index, reconciled against the committed kept set, and
     its row count; (None, 0) when empty. The (count, xor-of-ids) gate
     compares fingerprints from the commit records (no job) and repairs
-    BOTH directions as one BASE commit, so the fix runs once:
+    both directions, each only if the fingerprints still differ:
     - stale entries (docs flipped keep=false by record_failures / rollback,
-      which leave the indexes as they are) are pruned — left in place they
-      would drop future newcomers as near-dups of excluded docs (both
-      copies lost). This gate is the only prune, and it runs before any
-      newcomer is paired;
+      which leave the indexes as they are) are pruned by an id-only
+      semi-join, as a BASE commit — left in place they would drop future
+      newcomers as near-dups of excluded docs (both copies lost). This
+      gate is the only prune, and it runs before any newcomer is paired;
     - missing entries (a crash between the verdict and index commits) are
-      re-indexed from committed clean_text.
-    An index whose records carry no fingerprint takes the repair once; its
-    base commit records one. With no committed verdicts at all
-    (kept_committed None) a surviving index outlived a wiped store: it is
-    pruned to empty, so a first batch is never deduped against documents
-    that are not in the corpus."""
+      re-indexed from committed clean_text and appended, so the text is
+      read only when the pruned index still lacks kept docs.
+    A crash between the two commits leaves a fingerprint mismatch, and the
+    next ingest finishes the repair. An index whose records carry no
+    fingerprint takes the repair once; its base commit records one. With
+    no committed verdicts at all (kept_committed None) a surviving index
+    outlived a wiped store: it is pruned to empty, so a first batch is
+    never deduped against documents that are not in the corpus."""
     committed_idx = idx_store.read(spark)
     if kept_committed is None:
         if committed_idx is not None:
             idx_store.commit(committed_idx.limit(0), base=True, fingerprint="id")
         return None, 0
     if idx_store.fingerprint("id") != kept_stats:
-        lag = kept_committed.select("doc_id", "clean_text")
-        reconciled = None
         if committed_idx is not None:
             kept_ids = kept_committed.select(F.col("doc_id").alias("id"))
-            reconciled = committed_idx.join(kept_ids, "id", "left_semi")
-            lag = lag.join(
-                reconciled.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
+            idx_store.commit(
+                committed_idx.join(kept_ids, "id", "left_semi"), base=True, fingerprint="id"
             )
-        lag_idx = spec.index(lag)
-        idx_store.commit(
-            lag_idx if reconciled is None else reconciled.unionByName(lag_idx),
-            base=True, fingerprint="id",
-        )
+            committed_idx = idx_store.read(spark)
+        if idx_store.fingerprint("id") != kept_stats:
+            lag = kept_committed.select("doc_id", "clean_text")
+            if committed_idx is not None:
+                lag = lag.join(
+                    committed_idx.select(F.col("id").alias("doc_id")), "doc_id", "left_anti"
+                )
+            idx_store.commit(spec.index(lag), base=committed_idx is None, fingerprint="id")
+            committed_idx = idx_store.read(spark)
         # the index now equals the kept set by construction
-        committed_idx = idx_store.read(spark)
     n_idx = kept_stats[0]
     return (committed_idx if n_idx else None), n_idx
 

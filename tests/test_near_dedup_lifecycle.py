@@ -41,8 +41,10 @@ def _twin_of(spark, clean_text: str, url: str, pages):
 
 
 def test_record_failures_prunes_index_and_twin_of_excluded_doc_is_kept(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
+    """The name is historical: record_failures itself no longer prunes;
+    the next ingest's reconciliation gate does, by ids alone."""
     store = SnapshotStore(tmp_path / "v")
     pages = synth_pages_local(spark, 60).cache()
     run_resumable_pipeline(spark, pages, store, num_partitions=2, near_dedup=True)
@@ -62,7 +64,20 @@ def test_record_failures_prunes_index_and_twin_of_excluded_doc_is_kept(
     # prunes the stale index entry before pairing (else it would drop the
     # twin — both copies lost)
     twin = _twin_of(spark, victim.clean_text, "https://twin.example/kept", pages)
+    idx_plans = []
+    real_commit = SnapshotStore.commit
+
+    def spy(self, data, *a, **kw):
+        if self.base == idx_store.base:
+            idx_plans.append(data._jdf.queryExecution().executedPlan().toString())
+        return real_commit(self, data, *a, **kw)
+
+    monkeypatch.setattr(SnapshotStore, "commit", spy)
     run_resumable_pipeline(spark, twin, store, num_partitions=2, near_dedup=True)
+    monkeypatch.undo()
+    # the prune reads ids only: no index commit re-indexes committed text
+    assert len(idx_plans) == 2
+    assert not any("clean_text" in p for p in idx_plans)
     v2 = store.read(spark)
     t = v2.filter("url = 'https://twin.example/kept'").first()
     assert t.keep is True and t.excl_type is None

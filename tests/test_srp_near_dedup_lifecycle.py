@@ -155,6 +155,8 @@ def test_srp_bands_partitioned_and_pruned(spark, tmp_path):
 
 
 def test_record_failures_prunes_srp_sidecar(spark, tmp_path):
+    """The name is historical: record_failures itself no longer prunes;
+    the next ingest's reconciliation gate does."""
     store = SnapshotStore(tmp_path / "v")
     pages = synth_pages_local(spark, 60).cache()
     run_resumable_pipeline(
@@ -358,7 +360,9 @@ def test_large_drop_set_branch_matches_default(spark, tmp_path, monkeypatch):
     """A batch with committed twins and in-batch pairs for both sidecars
     flips the planted twins and exactly one member of each in-batch pair.
     The index and band commits read the batch's drop set as an IN filter:
-    their four write plans hold no join."""
+    their four write plans hold no join. The name is historical: the
+    large-drop-set branch it once compared with is deleted, and every drop
+    set takes this IN-list form."""
     from puddin_spark import snapshots
     from puddin_spark.synth import _prose
 
