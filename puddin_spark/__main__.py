@@ -254,19 +254,19 @@ def cmd_stats(args) -> int:
 
 def cmd_overview(args) -> int:
     """Store/run overview (the reference's file_overview.py surface):
-    snapshot log, per-snapshot doc counts, on-disk sizes — no Spark job
-    for the log itself, one count per snapshot for the data."""
+    snapshot log, per-snapshot doc counts, on-disk sizes, and the current
+    doc and kept counts. Answered from the commit records (row counts and
+    the kept-id fingerprint each commit carries) and the file sizes: no
+    Spark session. A count that a record does not carry prints null."""
     import os
 
-    from puddin_spark.session import get_spark
-    from puddin_spark.snapshots import SnapshotStore
+    from puddin_spark.snapshots import _KEPT_IDS, SnapshotStore
 
     store = SnapshotStore(f"{args.dest}/verdicts")
     recs = store.commits()
     if not recs:
         print(json.dumps({"snapshots": [], "error": "no committed snapshots"}))
         return 2
-    spark = get_spark(master=args.master, app_name="puddin_spark.overview")
     out = []
     for rec in recs:
         d = store.base / rec["data_dir"]
@@ -278,22 +278,21 @@ def cmd_overview(args) -> int:
             {
                 "snapshot_id": rec["snapshot_id"],
                 "base": bool(rec.get("base")),
-                "n_docs": spark.read.parquet(str(d)).count(),
+                "n_docs": rec.get("rows"),
                 "bytes": size,
             }
         )
-    current = store.read(spark)
+    kept = store.fingerprint(_KEPT_IDS)
     print(
         json.dumps(
             {
                 "snapshots": out,
                 "current_snapshot_id": store.current_snapshot_id(),
-                "current_docs": current.count(),
-                "current_keep": current.filter("keep").count(),
+                "current_docs": store.row_count(),
+                "current_keep": kept[0] if kept else None,
             }
         )
     )
-    spark.stop()
     return 0
 
 

@@ -720,8 +720,11 @@ def band_occupancy(
     had no visibility into committed bucket growth. One slim groupBy over
     band rows already in hand; commit the result as the band-table
     snapshot's LINEAGE so occupancy history rides the store and the bench
-    can surface the per-round trend. Returns (band, bucket, n_new,
-    n_committed, n_total) ordered hottest-first."""
+    can surface the per-round trend. Committed rows count only on keys the
+    batch touches (a left-semi join): a committed key can only grow when a
+    batch touches it, so the history still records every hot key at the
+    batch that made it hot. Returns (band, bucket, n_new, n_committed,
+    n_total) ordered hottest-first."""
     b = bands.select(
         F.col(band_col).alias("band"),
         F.col(bucket_col).alias("bucket"),
@@ -730,7 +733,7 @@ def band_occupancy(
     )
     if committed_bands is not None:
         b = b.unionByName(
-            committed_bands.select(
+            committed_bands.join(bands, [band_col, bucket_col], "left_semi").select(
                 F.col(band_col).alias("band"),
                 F.col(bucket_col).alias("bucket"),
                 F.lit(0).alias("_new"),

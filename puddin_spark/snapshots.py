@@ -726,19 +726,19 @@ def run_resumable_pipeline(
     and prefixes), new-vs-new pairs and clusters resolve on the driver
     (union-find over the pair set), and each sidecar runs one Spark pass
     against its committed side (_committed_pass) that returns the drop set
-    and the committed band-key counts the occupancy lineage needs: a batch
-    of 200 docs runs 29 Spark jobs, the same count every batch. The verdict count also observes the
-    batch's kept count, which bounds that collect: with sidecars on, a
-    batch above _LOCAL_ROWS kept docs commits as k = ceil(kept /
-    _LOCAL_ROWS) sub-batches, split by pmod(xxhash64(doc_id), k) AFTER
-    exact keep-first was decided over the whole batch. Each sub-batch, in
-    order, runs the sidecars against a fresh read of the store (so the
-    reconciliation gates see the earlier sub-batches) and commits its own
-    verdicts, lineage and sidecar rows: a crash between sub-batches is the
-    per-commit resume contract. A near-dup family that straddles two
-    sub-batches resolves as vs-committed, exactly as ingesting the
-    sub-batches one after another would: one member is still kept, but
-    which one may differ from an unsplit batch.
+    and the committed counts of the batch's band keys, which the occupancy
+    lineage needs: a batch of 200 docs runs 27 Spark jobs, the same count
+    every batch. The verdict count also observes the batch's kept count,
+    which bounds that collect: with sidecars on, a batch above _LOCAL_ROWS
+    kept docs commits as k = ceil(kept / _LOCAL_ROWS) sub-batches, split by
+    pmod(xxhash64(doc_id), k) AFTER exact keep-first was decided over the
+    whole batch. Each sub-batch, in order, runs the sidecars against a fresh
+    read of the store (so the reconciliation gates see the earlier
+    sub-batches) and commits its own verdicts, lineage and sidecar rows: a
+    crash between sub-batches is the per-commit resume contract. A near-dup
+    family that straddles two sub-batches resolves as vs-committed, exactly
+    as ingesting the sub-batches one after another would: one member is
+    still kept, but which one may differ from an unsplit batch.
 
     fix_mojibake=True repairs double-encoded UTF-8 in the incoming text
     (operators/encoding.py replace chain — pure codegen) BEFORE anything
@@ -1005,7 +1005,7 @@ class _Sidecar(NamedTuple):
     signature index of the committed kept docs in the `<kind>_index` store
     beside the verdicts, and its exploded band table — a pure derived cache,
     directory-partitioned on `pfx_col` — in `<kind>_bands`, whose lineage
-    is each batch's hottest (band, bucket) keys
+    is the hottest of the (band, bucket) keys each batch touches
     (similarity.band_occupancy over `occupancy_cols`). A batch's rows are
     paired on the driver (_sidecars_local: `keys`, `pfx`, `payload`,
     `local_pairs`, `local_hits`), from the index and band expressions."""
@@ -1264,23 +1264,19 @@ def _sidecars_local(spark, sides, verdicts):
 def _committed_pass(spec, committed_idx, committed_bands, rows, keys_col):
     """The vs-committed half for a batch whose kept docs are on the driver,
     in ONE Spark pass: (ids of `rows` with a committed near-twin,
-    {(band, key): committed members}) for every band key of `rows` and for
-    the committed keys that could rank in band_occupancy's top-K.
+    {(band, key): committed members}) for the band keys of `rows` that
+    committed docs share.
 
-    The committed band rows are pruned to the batch's prefixes. Those on
-    the batch's keys (an IN list) join their index payloads, the filtered
-    side broadcast, and are scanned where they land, in pandas: per key, a
+    The committed band rows are pruned to the batch's prefixes and to its
+    keys (an IN list), join their index payloads, the filtered side
+    broadcast, and are scanned where they land, in pandas: per key, a
     partition's committed payloads are verified against the batch docs
     sharing it (spec.local_hits: the first hit decides, as in
-    committed_srp_flip_ids) and counted; the driver sums the counts. The
-    rest aggregate to one count per key, map-side first, and each
-    partition of the counts reports its top OCCUPANCY_TOP_K by (count desc,
-    band, key): a superset of the committed-only keys band_occupancy can
-    rank. Pair rows are never materialized, and the batch's payloads reach
-    the scan in the kernel's closure."""
+    committed_srp_flip_ids) and counted; the driver sums the counts.
+    Committed rows on keys the batch does not touch are never read past
+    the filter. Pair rows are never materialized, and the batch's payloads
+    reach the scan in the kernel's closure."""
     import pandas as pd
-
-    from puddin_spark.operators.similarity import OCCUPANCY_TOP_K
 
     band_col, bucket_col = spec.occupancy_cols
     members, prefixes = {}, set()
@@ -1310,25 +1306,13 @@ def _committed_pass(spec, committed_idx, committed_bands, rows, keys_col):
             if out:
                 yield pd.DataFrame(out, columns=cols)
 
-    def top(batches):
-        batches = [b for b in batches if len(b)]
-        if batches:
-            pdf = pd.concat(batches, ignore_index=True).sort_values(
-                ["n", band_col, bucket_col], ascending=[False, True, True]
-            )
-            yield pdf.head(OCCUPANCY_TOP_K).assign(new_id=None)[cols]
-
     found = committed_bands.filter(_sql_in(spec.pfx_col, sorted(prefixes))).select(
         "id", band_col, bucket_col, F.concat_ws(":", band_col, bucket_col).alias("_k")
     )
-    on_batch = _sql_in("_k", sorted(members))
-    shared = committed_idx.select("id", payload).join(F.broadcast(found.filter(on_batch)), "id")
-    others = found.filter(~on_batch).groupBy(band_col, bucket_col).agg(F.count("*").alias("n"))
-    out = (
-        shared.mapInPandas(scan, out_schema)
-        .unionByName(others.mapInPandas(top, out_schema))
-        .collect()
+    shared = committed_idx.select("id", payload).join(
+        F.broadcast(found.filter(_sql_in("_k", sorted(members)))), "id"
     )
+    out = shared.mapInPandas(scan, out_schema).collect()
     n_committed = {}
     for r in out:
         if r.new_id is None:
@@ -1337,23 +1321,21 @@ def _committed_pass(spec, committed_idx, committed_bands, rows, keys_col):
 
 
 def _occupancy(spark, spec, bands, committed_bands, keys, n_committed):
-    """band_occupancy of a driver-side batch as a local relation: every
-    band key the batch touches and every committed key _committed_pass
-    reported, with new and committed member counts, the top
-    OCCUPANCY_TOP_K by (n_total desc, band, bucket). Same schema as
-    band_occupancy over the same frames (_occupancy_schema)."""
+    """band_occupancy of a driver-side batch as a local relation: the band
+    keys the batch touches, with new and committed member counts
+    (_committed_pass counts the committed members of exactly these keys),
+    the top OCCUPANCY_TOP_K by (n_total desc, band, bucket). Same rows and
+    schema as band_occupancy over the same frames (_occupancy_schema)."""
     from collections import Counter
 
     from puddin_spark.operators.similarity import OCCUPANCY_TOP_K
 
     n_new = Counter((band, key) for row in keys for band, key in enumerate(row))
-    top = sorted(
-        (
-            (band, key, n_new.get((band, key), 0), c, n_new.get((band, key), 0) + c)
-            for (band, key), c in {**dict.fromkeys(n_new, 0), **n_committed}.items()
-        ),
-        key=lambda r: (-r[4], r[0], r[1]),
-    )[:OCCUPANCY_TOP_K]
+    rows = []
+    for (band, key), n in n_new.items():
+        c = n_committed.get((band, key), 0)
+        rows.append((band, key, n, c, n + c))
+    top = sorted(rows, key=lambda r: (-r[4], r[0], r[1]))[:OCCUPANCY_TOP_K]
     return _local_frame(spark, top, _occupancy_schema(spec, bands, committed_bands))
 
 

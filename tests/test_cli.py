@@ -96,6 +96,39 @@ def test_cli_validate_known_fail_and_overview(tmp_path):
     assert ov["current_snapshot_id"] == 0 and ov["snapshots"][0]["n_docs"] == 12
 
 
+def test_cli_overview_reads_commit_records(tmp_path, spark, monkeypatch, capsys):
+    """overview on a two-commit store starts no Spark session: with
+    get_spark made to raise, it prints each snapshot's doc count and the
+    current doc and kept counts, equal to what reading the store counts."""
+    from puddin_spark import session
+    from puddin_spark.__main__ import main
+    from puddin_spark.snapshots import SnapshotStore, run_resumable_pipeline
+    from puddin_spark.synth import SPARK_SCHEMA_DDL, gen_rows
+
+    dest = tmp_path / "out"
+    store = SnapshotStore(dest / "verdicts")
+    for lo, hi in ((0, 30), (30, 60)):
+        pages = spark.createDataFrame(gen_rows(lo, hi, include_fixtures=False), SPARK_SCHEMA_DDL)
+        run_resumable_pipeline(spark, pages, store, num_partitions=2)
+    recs = store.commits()
+    assert len(recs) == 2
+    n_docs = [spark.read.parquet(str(store.base / r["data_dir"])).count() for r in recs]
+    current = store.read(spark)
+    want = (current.count(), current.filter("keep").count())
+    assert want[0] == sum(n_docs) and 0 < want[1] < want[0]
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("overview started a Spark session")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    assert main(["overview", "-d", str(dest)]) == 0
+    ov = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert [s["snapshot_id"] for s in ov["snapshots"]] == [0, 1]
+    assert [s["n_docs"] for s in ov["snapshots"]] == n_docs
+    assert ov["current_snapshot_id"] == 1
+    assert (ov["current_docs"], ov["current_keep"]) == want
+
+
 def test_cli_run_html_fallback_and_blocklist(tmp_path, spark):
     """The two web-table flags through the real CLI: WET-missing rows are
     recovered from html, blocklisted domains are recorded (not removed),

@@ -12,6 +12,8 @@
   driver and keeps exactly one member.
 - The driver path's occupancy schema, built without planning
   band_occupancy, equals band_occupancy's on a first and a later batch.
+- A batch's occupancy lineage holds only the band keys the batch touches,
+  and equals band_occupancy over its new and the committed band rows.
 """
 from __future__ import annotations
 
@@ -148,7 +150,7 @@ def _run(spark, pages, store):
 
 def test_sidecar_batch_jobs_bounded_and_flat(spark, tmp_path):
     """A sidecar batch against a committed store (both sidecars, planted
-    minhash and embedding twins of committed docs) runs 29 Spark jobs, and
+    minhash and embedding twins of committed docs) runs 27 Spark jobs, and
     the next batch runs as many. Every band commit writes one file per
     populated prefix directory: the driver-side band rows are written
     without a shuffle, and no more files than the shuffle gave."""
@@ -166,7 +168,7 @@ def test_sidecar_batch_jobs_bounded_and_flat(spark, tmp_path):
             f"https://twin.example/{b}/mh": "near_dup",
             f"https://twin.example/{b}/eb": "emb_near_dup",
         }
-    assert counts[0] == 29, counts
+    assert counts[0] == 27, counts
     assert counts[0] == counts[1], counts
     for name in ("minhash_bands", "srp_bands"):
         for rec in snapshots.SnapshotStore(store.base / name).commits():
@@ -373,3 +375,42 @@ def test_occupancy_schema_is_band_occupancy_schema(spark, tmp_path):
             nullable.append((want["band"].nullable, want["bucket"].nullable))
         # the two cases differ: band is non-null only without committed bands
         assert nullable[0][0] is False and nullable[1] == (True, True), (spec.kind, nullable)
+
+
+def test_occupancy_covers_only_touched_keys(spark, tmp_path):
+    """After a 40-doc seed batch, a batch of one fresh doc commits, for
+    each sidecar, an occupancy lineage of exactly that doc's band keys,
+    each with n_new >= 1 (the seed's committed-only keys do not rank), and
+    those rows equal band_occupancy over the new and the committed band
+    rows."""
+    from puddin_spark.operators.similarity import band_occupancy
+    from puddin_spark.synth import _prose, gen_rows
+
+    cols = "url string, warc_ts timestamp, html binary, text string, lang string"
+    store = snapshots.SnapshotStore(tmp_path / "occ")
+    seed = gen_rows(0, 40, include_fixtures=False)
+    assert _run(spark, spark.createDataFrame(seed, cols), store)[0] == 0
+    fresh = pd.DataFrame({
+        "url": ["https://fresh.example/0"],
+        "warc_ts": seed["warc_ts"].iloc[:1].tolist(),
+        "html": None,
+        "text": [_prose(9300)],
+        "lang": "en",
+    })
+    assert _run(spark, spark.createDataFrame(fresh, cols), store)[0] == 1
+    assert store.read(spark).filter("keep").filter(
+        F.col("url") == "https://fresh.example/0"
+    ).count() == 1
+    for spec in (snapshots._MINHASH, snapshots._SRP):
+        bands_store = spec.stores(store.base)[1]
+        recs = bands_store.commits()
+        band_col, bucket_col = spec.occupancy_cols
+        new_bands = spark.read.parquet(str(bands_store.base / recs[-1]["data_dir"]))
+        keys = {(r[0], r[1]) for r in new_bands.select(band_col, bucket_col).collect()}
+        assert len(keys) == new_bands.count() > 0, spec.kind
+        lineage = spark.read.parquet(str(bands_store.base / recs[-1]["lineage_dir"])).collect()
+        assert {(r.band, r.bucket) for r in lineage} == keys, spec.kind
+        assert all(r.n_new >= 1 for r in lineage), spec.kind
+        committed = bands_store.read(spark, as_of=recs[-2]["snapshot_id"])
+        want = band_occupancy(new_bands, committed, band_col=band_col, bucket_col=bucket_col)
+        assert sorted(map(tuple, lineage)) == sorted(map(tuple, want.collect())), spec.kind
